@@ -1,8 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
-/** Per-query wall-clock benchmark. Prints ONE JSON line:
-  * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
+import org.apache.spark.sql.graftbridge.Bridge
+
+/** Per-query wall-clock benchmark. Its last stdout line is the headline
+  * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...};
+  * before it come the per-query [min,max] spread line and the job-count
+  * line {"metric":"jobs","queries":{name:n}}. Queries are picked by
+  * [[Harness.selected]] (`SPARK_GRAFT_ONLY`).
   *
   * Methodology (sound timing, not probe timing):
   *  - every query is executed to completion through a `noop` write sink —
@@ -27,92 +32,77 @@ import org.apache.spark.sql.SparkSession
   *    shuffle machinery so JVM startup isn't billed to the first query.
   */
 object Bench {
+  /** Timed-suite exclusions (BENCH_LOCAL.md's trim order, executed in
+    * r17 after the ~128 s floor was confirmed by a repeat run): queries
+    * whose PHYSICAL PLAN SHAPE is fully timed by other suite members.
+    * Verify still hash-checks every one of them against its DuckDB
+    * oracle each round — correctness is never trimmed. */
+  private val skip = Set(
+    // t14 + t15 time the two Gopher rule families separately, and
+    // q6's ingest stage times them fused on the same corpus
+    "t16_gopher_drop",
+    // q5_tokenize_pack is a strict superset: the same
+    // histogram-train + broadcast-segment plan inside the
+    // composition (README r15 notes q5 ⊃ m12)
+    "m12_bpe_tokens",
+    // d13 times the span-detect machinery; the coverage-array
+    // excision rebuild is timed in d24/d26 (shared code path)
+    "d16_drop_dup_spans",
+    // r18's pre-declared next trim, executed r19: the
+    // signature-pair join shape is timed by d3 (LSH pairs) + d4
+    // (verified jaccard) on the same corpus
+    "m9_minhash_estimate")
+
+  /** The timed queries, and the queries whose stores are prebuilt
+    * untimed. `SPARK_GRAFT_BENCH_ALL=1` restores the full timed suite
+    * for apples-to-apples history comparisons: no skip set and no
+    * prebuilds, reproducing the pre-r17 protocol (q6 timed build +
+    * ingest). Value-parsed, not presence-tested: BENCH_ALL=0 from a
+    * wrapper script must mean the trimmed suite. */
+  private[graft] def plan(env: String => Option[String])
+  : (Seq[String], Seq[String]) = {
+    val all = env("SPARK_GRAFT_BENCH_ALL")
+      .exists(v => v == "1" || v.equalsIgnoreCase("true"))
+    val timed = Harness.selected(if (all) Set.empty else skip,
+      env("SPARK_GRAFT_ONLY"))
+    (timed, if (all) Nil else timed)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
-    // optional comma-separated query-name filter for iterating on hot
-    // queries (substring-prefix match, e.g. ONLY=q6,t15); the driver
-    // never sets it, so the per-round bench always runs the full suite
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    // BENCH_LOCAL.md's trim order, executed in r17 after the ~128 s
-    // floor was confirmed by a repeat run: queries whose PHYSICAL PLAN
-    // SHAPE is fully timed by other suite members are excluded from
-    // the TIMED suite only — Verify still hash-checks every one of
-    // them against its DuckDB oracle each round (correctness is never
-    // trimmed), and SPARK_GRAFT_BENCH_ALL=1 restores the full timed
-    // suite for apples-to-apples history comparisons.
-    // value-parsed, not presence-tested: BENCH_ALL=0 from a wrapper
-    // script must mean the trimmed suite, and BENCH_ALL also disables
-    // the q6 store prebuild below so "apples-to-apples history" really
-    // reproduces the pre-r17 protocol (q6 timed build + ingest)
-    val benchAll = sys.env.get("SPARK_GRAFT_BENCH_ALL")
-      .exists(v => v == "1" || v.equalsIgnoreCase("true"))
-    val benchSkip: Set[String] =
-      if (benchAll) Set.empty
-      else Set(
-        // t14 + t15 time the two Gopher rule families separately, and
-        // q6's ingest stage times them fused on the same corpus
-        "t16_gopher_drop",
-        // q5_tokenize_pack is a strict superset: the same
-        // histogram-train + broadcast-segment plan inside the
-        // composition (README r15 notes q5 ⊃ m12)
-        "m12_bpe_tokens",
-        // d13 times the span-detect machinery; the coverage-array
-        // excision rebuild is timed in d24/d26 (shared code path)
-        "d16_drop_dup_spans",
-        // r18's pre-declared next trim, executed r19: the
-        // signature-pair join shape is timed by d3 (LSH pairs) + d4
-        // (verified jaccard) on the same corpus
-        "m9_minhash_estimate")
-    def selected = only match {
-      case Some(ps) => SparkEntry.queries.filter { case (n, _) =>
-        ps.exists(n.startsWith) } // explicit ONLY overrides the skip
-      case None => SparkEntry.queries.filter { case (n, _) =>
-        !benchSkip.contains(n) }
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // event-time semantics must match Verify even when launched
-      // outside sbt's forked JVM (which injects this as a -D flag)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (selected, prebuilt) = plan(sys.env.get)
+    val queries = SparkEntry.queries
+    val spark = Harness.session(cpus)
     Seq("lineitem", "documents", "embeddings", "orders").foreach { t =>
       spark.read.parquet(s"$sfDir/$t.parquet").count()
     }
-    // Untimed fixture: q6's persisted stores are a ONE-TIME build that
-    // production amortizes across every shard ingest, so the bench
-    // builds them here (outside any timed run) and flags the QueryDef
-    // to skip the rebuild — the timed q6 measures the steady-state
-    // ingest path. Verify never sets the flag, so correctness still
-    // covers the build + ingest composition.
-    // same contract for n12: its build + absorb prefix is n11's timed
-    // body verbatim, so the timed n12 measures the occupancy aggregate
-    // (the monitoring-cadence verb) alone
-    val prebuilds: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-      "q6_shard_ingest" -> Queries.buildQ6Stores _,
-      "n12_ivf_cell_stats" -> Queries.buildN12Index _)
-    prebuilds.foreach { case (q, build) =>
-      if (!benchAll && selected.contains(q)) {
-        build(spark, sfDir)
-        spark.conf.set("spark.graft.benchPrebuiltStores", "true")
-      }
-    }
+    Harness.prebuild(spark, sfDir, prebuilt)
+    // job count per query: the jobs STARTED inside its last timed run.
+    // At sf0.1 each AQE job costs ~100 ms of scheduling, so for the
+    // compositions the count is the deterministic signal the seconds
+    // obscure. Windows are wall-clock ms, the clock of
+    // SparkListenerJobStart.time; jobs of Overlap.both branches count.
+    val jobStarts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    spark.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobStarts.add(e.time)
+      })
+    val lastRun = scala.collection.mutable.Map[String, (Long, Long)]()
     // a failing query must be VISIBLE, not a phantom speedup: it is
     // reported as -1 in "queries", named in "errors", and excluded from
     // the total (timing the elapsed-to-throw would let a regression that
     // breaks a query read as an improvement)
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-    : Either[String, Double] = {
+    def once(name: String): Either[String, Double] = {
       val t0 = System.nanoTime()
+      val wall0 = System.currentTimeMillis()
       try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        queries(name)(spark, sfDir).write.format("noop").mode("overwrite")
+          .save()
         Right((System.nanoTime() - t0) / 1e9)
       } catch {
         case e: Throwable =>
@@ -120,7 +110,7 @@ object Bench {
           // any cntrl in an exception message would break the JSON line
           Left(Option(e.getMessage).getOrElse(e.getClass.getName)
             .replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(160))
-      }
+      } finally lastRun(name) = (wall0, System.currentTimeMillis())
     }
     // lower-middle median: the true middle for odd n, the FASTER of the
     // central pair for even n — every run is warm and same-mode within a
@@ -130,19 +120,25 @@ object Bench {
     // one full suite pass: per query, `runs` timed executions -> the
     // per-pass median (plus every raw run, for the spread line)
     def suitePass(): Map[String, Either[String, (Double, Seq[Double])]] =
-      selected.map { case (name, fn) =>
-        val runsOut = (1 to runs).map(_ => once(fn))
+      selected.map { name =>
+        val runsOut = (1 to runs).map(_ => once(name))
         val ok = runsOut.collect { case Right(t) => t }.sorted
         val firstErr = runsOut.collectFirst { case Left(m) => m }
         name -> (if (ok.nonEmpty) Right((median(ok), ok))
                  else Left(firstErr.getOrElse("failed")))
-      }
+      }.toMap
     val passOuts = (1 to passes).map(_ => suitePass())
+    Bridge.drainListeners(spark.sparkContext)
+    val starts = jobStarts.asScala.toSeq
+    val jobs = selected.map { name =>
+      val (from, to) = lastRun(name)
+      "\"" + name + "\":" + starts.count(t => t >= from && t <= to)
+    }.mkString("{", ",", "}")
     // merge passes: reported time = BEST pass median (the fast mode);
     // spread = [min,max] over every raw run of every pass; a query is an
     // error only if it failed in ALL passes
     val results: Map[String, Either[String, Seq[Double]]] =
-      selected.keys.map { name =>
+      selected.map { name =>
         val per = passOuts.map(_(name))
         val meds = per.collect { case Right((m, _)) => m }
         val allRuns = per.collect { case Right((_, rs)) => rs }.flatten.sorted
@@ -195,8 +191,9 @@ object Bench {
     // (BENCH_r05.json's `tail` field is exactly 2000 chars, cut from the
     // front — which is how round 5's total was lost from a single 4 KB
     // line). So the headline line goes LAST, kept under ~1.5 KB by the
-    // 3-decimal times, and the droppable spread line goes first where
-    // front-truncation can only ever eat dispersion data.
+    // 3-decimal times, and the droppable jobs and spread lines go first
+    // where front-truncation can only ever eat job counts and dispersion
+    // data.
     val stat = if (runs >= 3) "best-pass-median" else "min-of-runs"
     // sf rides on this (droppable, front-truncatable) line so a local
     // bench_report run can compute the r1 matched-query ratio even
@@ -205,6 +202,7 @@ object Bench {
     // like the error messages above — a quote or control char in the
     // operator-supplied path must not break the JSON line
     val sfJson = sfDir.replaceAll("[\"\\\\\\p{Cntrl}]", " ")
+    println(s"""{"metric":"jobs","queries":$jobs}""")
     println(s"""{"metric":"spread","unit":"sec","runs":$runs,"passes":$passes,"stat":"$stat","sf":"$sfJson","spread":$spread}""")
     // line-budget defenses, outermost last: omit the empty errors object
     // and the sf path (the driver's envelope records sf itself) when

@@ -2,31 +2,16 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
-/** Dumps `explain("formatted")` for EVERY registered query to PLANS.md — the
-  * committed evidence that plans are shaped for scale (pushdown, pruning,
-  * broadcasts, partial aggregation, TakeOrderedAndProject, codegen).
+/** Dumps `explain("formatted")` for every registered query, in registry
+  * order, to PLANS.md — the committed evidence that plans are shaped for
+  * scale (pushdown, pruning, broadcasts, partial aggregation,
+  * TakeOrderedAndProject, codegen).
   * Run: `sbt "runMain graft.Plans /root/testdata/sf0.1 PLANS.md"`. */
 object Plans {
-  /** Registry-driven since r14: every QueryDef in `Queries.all` gets a
-    * plan dump, in registry order — a hand-maintained headline list kept
-    * drifting behind the registry (six r13 queries had no entry). The
-    * old list is gone; new queries are covered the moment they register. */
-  private def headline: Seq[String] = Queries.all.map(_.name)
-
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(8)
     val sb = new StringBuilder
     sb.append(s"# PLANS — formatted physical plans of all ${Queries.all.size} registered queries\n\n")
     sb.append(s"Generated by `graft.Plans` over `$sfDir`. What to look " +
@@ -49,19 +34,15 @@ object Plans {
       "the materialized boundary (exactly what executes at run time; " +
       "the earlier stages' plans are audited via their standalone " +
       "queries). Expect this main to run minutes, not seconds.\n")
-    // per-query dump mode (r22): SPARK_GRAFT_PLANS_ONLY=q1,q2 filters,
-    // and an `out` ENDING IN "/" is a directory receiving one
-    // <name><SPARK_GRAFT_PLANS_SUFFIX>.txt per query — the
-    // plans/rNN/<query>_{before,after}.txt optimization-evidence files
-    val only = sys.env.get("SPARK_GRAFT_PLANS_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    // per-query dump mode (r22): an `out` ENDING IN "/" is a directory
+    // receiving one <name><SPARK_GRAFT_PLANS_SUFFIX>.txt per query — the
+    // plans/rNN/<query>_{before,after}.txt optimization-evidence files;
+    // SPARK_GRAFT_ONLY picks the queries (Harness.selected)
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLANS_SUFFIX", "")
-    val selected = only match {
-      case Some(ps) => headline.filter(n => ps.exists(n.startsWith))
-      case None => headline
-    }
-    selected.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
+    val queries = SparkEntry.queries
+    val selected = Harness.selected().toSet
+    Queries.all.map(_.name).filter(selected).foreach { name =>
+      val df = queries(name)(spark, sfDir)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       if (out.endsWith("/")) {

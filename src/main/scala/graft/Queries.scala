@@ -4482,7 +4482,7 @@ object Queries {
         // views, never a re-split. dropDupSpans re-emits the
         // POST-EXCISION array (keepToksCol), so stages after the
         // rebuild stay on the threaded contract too.
-        // stage labels (guide §1.5) so the UI/Profile attribute each
+        // stage labels (guide §1.5) so the UI attributes each
         // checkpoint's jobs to its pipeline stage
         val sc = s.sparkContext
         sc.setJobDescription("q4: c4 + exact-dedup checkpoint")

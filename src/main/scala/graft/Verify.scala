@@ -1,45 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * `SPARK_GRAFT_ONLY` narrows the dump to some queries
+  * ([[Harness.selected]]); oracle_sql.json always lists every query. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // older events.parquet generations carry TIMESTAMP(NANOS); read as
-      // long, normalized in Queries.events (floor to µs — matches DuckDB).
-      // Newer generations are µs NTZ; the conf is then inert.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // pin EXACT quantiles: the oracle gate must never let the
-      // size-estimate auto-switch (Quantiles.AutoGkThresholdConf)
-      // silently trade the accuracy contract the DuckDB compare hashes
-      .config("spark.graft.quantiles.autoGkThreshold", "0")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // pin EXACT quantiles: the oracle gate must never let the
+    // size-estimate auto-switch (Quantiles.AutoGkThresholdConf)
+    // silently trade the accuracy contract the DuckDB compare hashes
+    val spark = Harness.session(cpus,
+      "spark.graft.quantiles.autoGkThreshold" -> "0")
     new java.io.File(outDir).mkdirs()
-    // Dev-loop convenience (driver never sets it): run only the named
-    // queries, e.g. SPARK_GRAFT_ONLY=d9_sentence_dedup,d13_dup_spans.
-    // Unknown names fail LOUD here — a typo would otherwise "succeed"
-    // having written nothing and surface later as check.py file errors.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: " +
-          unknown.toSeq.sorted.mkString(", "))
-      require(names.nonEmpty, "SPARK_GRAFT_ONLY is set but empty")
-    }
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    val queries = SparkEntry.queries
+    Harness.selected().foreach { name =>
+      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

@@ -357,10 +357,21 @@ object Ann {
     // centroid tables are tiny by contract (nCentroids rows) — fold
     // them into the plan as literals (the m16/scoreAgainst literal-map
     // discipline), cid-ascending so the tiebreak below is positional
+    assignArgmax(corpus, idCol, vecCol, collectCentroids(centroids),
+      centroids.schema("cid").dataType, centroids.schema("__ce").dataType)
+  }
+
+  /** The centroid table collected cid-ascending, as `(cid, __ce, __cn)`
+    * rows for [[assignArgmax]]. A row with a null vector or norm cannot
+    * be scored, so it is rejected here, naming its cid. */
+  private def collectCentroids(centroids: DataFrame)
+  : Array[org.apache.spark.sql.Row] = {
     val rows = centroids.select(col("cid"), col("__ce"), col("__cn"))
       .orderBy(col("cid")).collect()
-    assignArgmax(corpus, idCol, vecCol, rows,
-      centroids.schema("cid").dataType, centroids.schema("__ce").dataType)
+    rows.foreach(r => require(!r.isNullAt(1) && !r.isNullAt(2),
+      s"IVF centroid cid=${r.get(0)} has a null vector (__ce) or norm " +
+        "(__cn)"))
+    rows
   }
 
   /** The literal-unrolled argmax over an already-collected,
@@ -452,7 +463,7 @@ object Ann {
       // the literal-unrolled assignment (r22 — previously the parquet
       // write and the assignment each executed the centroid subtree
       // over the corpus)
-      val rows = centDf.orderBy(col("cid")).collect()
+      val rows = collectCentroids(centDf)
       val spark = corpus.sparkSession
       spark.createDataFrame(
           java.util.Arrays.asList(rows: _*), centDf.schema)
@@ -556,8 +567,7 @@ object Ann {
     // literal-unrolled assignment (r22 — previously the dim check and
     // the assignment materialized the same tiny table separately)
     val cdf = spark.read.parquet(s"$path/centroids")
-    val rows = cdf.select(col("cid"), col("__ce"), col("__cn"))
-      .orderBy(col("cid")).collect()
+    val rows = collectCentroids(cdf)
     val dims = rows.map(_.getAs[scala.collection.Seq[_]](1).size).distinct
     require(dims.length == 1, s"$path/centroids is not a writeIvfIndex " +
       s"centroid table (vector dims ${dims.mkString(",")})")

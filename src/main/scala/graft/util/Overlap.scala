@@ -41,9 +41,13 @@ object Overlap {
   def both[A, B](spark: SparkSession)(fa: => A)(fb: => B): (A, B) = {
     val sc = spark.sparkContext
     val props = inherited.map(k => k -> sc.getLocalProperty(k))
+    // pool threads outlive this call: restore what the thread held
+    // before, or a later unrelated task inherits the caller's job group
     def pinned[T](body: => T): T = {
+      val before = inherited.map(k => k -> sc.getLocalProperty(k))
       props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-      body
+      try body
+      finally before.foreach { case (k, v) => sc.setLocalProperty(k, v) }
     }
     implicit val ec: ExecutionContext = ExecutionContext.global
     val f1 = Future(pinned(fa))

@@ -75,4 +75,10 @@ object Bridge {
   : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Blocks until every event already posted to the listener bus has
+    * been delivered, so a listener's counts are complete when read.
+    * `listenerBus` is `private[spark]` — same shim rationale. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

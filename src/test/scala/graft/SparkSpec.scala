@@ -7,28 +7,7 @@ import org.scalatest.matchers.should.Matchers
 /** Shared local session for all specs (one JVM-wide session keeps the
   * suite fast; tests only read/derive, never mutate global state). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    // getOrCreate does NOT apply builder configs to an already-existing
-    // default session (SPARK-31532) — and a suite that builds its own
-    // session first (GraftExtensionsSpec) can be that default. Re-assert
-    // the session-level SQL confs unconditionally so every spec sees the
-    // same semantics (most critically nanosAsLong: without it
-    // events.parquet's TIMESTAMP(NANOS) ts arrives as TIMESTAMP_NTZ
-    // instead of a nanos LONG) regardless of suite execution order.
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s.conf.set("spark.sql.session.timeZone", "UTC")
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session(4)
 }
 
 abstract class SparkSpec extends AnyFunSuite with Matchers {

@@ -1,6 +1,5 @@
 package graft.analytics
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the A1 vocab hot-key aggregation with and without salting at
@@ -15,14 +14,7 @@ import org.apache.spark.sql.functions._
 object SaltBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(32)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     docs.count() // warm page cache + codegen
     def toks = docs.select(explode(

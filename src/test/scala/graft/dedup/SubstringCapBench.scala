@@ -1,6 +1,5 @@
 package graft.dedup
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures dropDupSubstrings' maxOcc viral-seed cap on a
@@ -17,13 +16,7 @@ import org.apache.spark.sql.functions._
   * corpus doubles; capped time stays ~flat. */
 object SubstringCapBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(32)
     import spark.implicits._
     def corpus(n: Int) = (1 to n).map { i =>
       val uniq1 = (1 to 10).map(j => s"u${i}_$j").mkString(" ")

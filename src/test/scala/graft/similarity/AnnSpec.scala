@@ -158,6 +158,45 @@ class AnnSpec extends SparkSpec {
       cents.filter(col("cid") < 0)).count() shouldBe 0L
   }
 
+  test("IVF assignment rejects a centroid with a null vector or norm, " +
+    "naming its cid, on both the assign and the absorb path") {
+    val corpus = Seq((1L, Array(1f, 0f))).toDF("vec_id", "embedding")
+    val ok = (10L, Option(Array(1f, 0f)), Option(1.0))
+    val nullBoth = (11L, Option.empty[Array[Float]], Option.empty[Double])
+    val nullNorm = (12L, Option(Array(0f, 1f)), Option.empty[Double])
+    for ((bad, cid) <- Seq(nullBoth -> 11L, nullNorm -> 12L)) {
+      val cents = Seq(ok, bad).toDF("cid", "__ce", "__cn")
+      val e = intercept[IllegalArgumentException] {
+        Ann.ivfAssignTo(corpus, "vec_id", "embedding", cents)
+      }
+      e.getMessage should include(s"cid=$cid")
+    }
+    // absorb collects the persisted centroid table itself: a null row
+    // there was a driver NPE in the dimension guard
+    val path = "/tmp/graft_test_sinks/ann_null_centroid"
+    Seq(ok, nullBoth).toDF("cid", "__ce", "__cn")
+      .write.mode("overwrite").parquet(s"$path/centroids")
+    val e = intercept[IllegalArgumentException] {
+      Ann.absorbIvfIndex(spark, path, corpus, "vec_id", "embedding")
+    }
+    e.getMessage should include("cid=11")
+  }
+
+  test("IVF assignment: a -0.0 cosine ties +0.0, so the smaller cid " +
+    "wins") {
+    // a caller-supplied negative norm turns an orthogonal centroid's
+    // +0.0 dot into a -0.0 cosine; the array_max struct order must
+    // treat it as equal to +0.0 (the window order's behavior) so the
+    // positional tiebreak, not the sign bit, picks the cell
+    val corpus = Seq((1L, Array(1f, 0f, 0f))).toDF("vec_id", "embedding")
+    val cents = Seq(
+      (10L, Array(0f, 1f, 0f), -1.0),    // cosine -0.0
+      (11L, Array(0f, 0f, 1f), 1.0)      // cosine +0.0
+    ).toDF("cid", "__ce", "__cn")
+    Ann.ivfAssignTo(corpus, "vec_id", "embedding", cents)
+      .select("cid").as[Long].collect() shouldBe Array(10L)
+  }
+
   test("IVF: probes restrict search, self always found, subset of brute") {
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val q = emb.filter(col("vec_id") === 0)

@@ -1,6 +1,5 @@
 package graft.similarity
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the incremental-IVF claim behind SCALE.md's "Incremental
@@ -20,13 +19,7 @@ import org.apache.spark.sql.functions._
   * drift across a median-of-3 is ≤0.7% of store size. */
 object IvfAbsorbBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(32)
     // deterministic 32-dim vectors from the id — distributed, no UDF
     def vecs(lo: Long, hi: Long) = spark.range(lo, hi)
       .select(col("id").as("vec_id"),

@@ -80,4 +80,34 @@ class OverlapSpec extends SparkSpec {
       b shouldBe "overlap-spec-group"
     } finally sc.clearJobGroup()
   }
+
+  test("after both returns, later tasks on the pool inherit no job " +
+    "group (the branch threads' local properties are restored)") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val sc = spark.sparkContext
+    val workers = Runtime.getRuntime.availableProcessors
+    // one task per worker at once (each waits for all the others), so
+    // the threads that ran both()'s branches are among those sampled
+    def onEveryWorker[T](f: => T): Seq[T] = {
+      val all = new CountDownLatch(workers)
+      val fs = (1 to workers).map { _ =>
+        Future {
+          all.countDown()
+          all.await(10, TimeUnit.SECONDS)
+          f
+        }
+      }
+      fs.map(Await.result(_, 30.seconds))
+    }
+    // create the workers before any group is set: a thread created
+    // while the caller holds a group inherits it at creation
+    onEveryWorker(())
+    sc.setJobGroup("overlap-leak-group", "overlap leak", false)
+    try Overlap.both(spark)(())(()) finally sc.clearJobGroup()
+    onEveryWorker(sc.getLocalProperty("spark.jobGroup.id"))
+      .flatMap(Option(_)) shouldBe empty
+  }
 }
