@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.sources.Readers
 import graft.filters.RangeFilters
 import graft.filters.RangeFilters.RangeFilter
-import graft.enrich.{CaptionStats, Readability}
+import graft.enrich.{CaptionStats, MetadataBackend}
 import graft.vocab.{Bpe, Vocab}
 import graft.analytics.{Dsir, Mixture, Summary}
 import graft.functions.TextFunctions
@@ -820,18 +820,17 @@ object Queries {
       (s, dir) => {
         val cap = concat(upper(substring(col("text"), 1, 1)),
           substring(col("text"), 2, 1000000))
-        // NE array materialized ONCE (multi-use non-cheap alias survives
-        // CollapseProject) — inlining neTexts into all three outputs would
-        // re-run the tokenize+filter HOF tree per column (no CSE in lambdas)
+        // the caption-stats struct materialized ONCE (multi-use non-cheap
+        // alias survives CollapseProject), so the kernel runs once per row
         // r21 sort-first (see e1): the orderBy sampling pass would run
         // the NE projection twice; map-only projections preserve order
         t(s, dir, "documents").orderBy("doc_id")
-          .withColumn("__ne", CaptionStats.neTexts(cap))
+          .withColumn("__cs",
+            graft.functions.CaptionStatsKernel(cap, MetadataBackend.Spacy))
           .select(col("doc_id"),
-            array_join(col("__ne"), "|").as("ne_texts"),
-            array_join(CaptionStats.neTypesFrom(col("__ne")), "|")
-              .as("ne_types"),
-            size(col("__ne")).as("num_ne"))
+            array_join(col("__cs.ne_texts"), "|").as("ne_texts"),
+            array_join(col("__cs.ne_types"), "|").as("ne_types"),
+            size(col("__cs.ne_texts")).as("num_ne"))
       },
       Some {
         val cap = "upper(substr(text, 1, 1)) || substr(text, 2, 1000000)"

@@ -1,12 +1,16 @@
 package graft.enrich
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.{CaptionStatsKernel, PosTag, Sentences}
+
 /** Caption/text enrichment — the reference's core per-row NLP UDF
   * (`generate_caption_stats`, reference `utils.py:183-566`, ~380 LoC of
-  * spaCy/NLTK/polyglot) re-expressed as **pure Catalyst column expressions**.
+  * spaCy/NLTK/polyglot) re-expressed as Catalyst column expressions.
   *
   * Design decision (SURVEY.md §2.8, §7.4): the reference treats its three
   * NLP backends as interchangeable-but-different, which licenses defining the
@@ -14,72 +18,42 @@ import org.apache.spark.sql.types._
   *
   *  - token     = maximal non-whitespace run (`\s+` split, empties dropped)
   *  - sentence  = maximal run between `[.!?]+` boundaries, trimmed, non-empty
-  *  - named entity proxy = capitalized alphabetic token
+  *  - named entity proxy = capitalized alphabetic token; ALLCAPS → ORG,
+  *    else MISC (a stand-in for the reference's NER labels,
+  *    `utils.py:251-257`)
   *  - POS proxy = deterministic rule cascade over the reference's tag set
   *                {NUM, PROPN, CONJ, ADP, SYM, VERB, ADJ, NOUN}
   *
-  * Every stat is a native expression (whole-stage codegen, no serialization
-  * boundary), so at 100 TB the enrichment runs fused into the scan stage with
-  * zero shuffle — unlike the reference's process-pool `nlp.pipe` fan-out
-  * (`utils.py:234-235`) this needs no data movement at all.
+  * The per-token work — tokenizing, sentence splitting, the NE and POS
+  * tests, syllables — runs in one native pass per caption
+  * ([[graft.functions.CaptionStatsKernel]], codegen'd into the scan stage
+  * with no shuffle); the ratios and readability scores are plain column
+  * arithmetic over its counts. Tokens, sentences and POS tags are the same
+  * rules exposed one at a time ([[graft.functions.Tokens]],
+  * [[graft.functions.Sentences]], [[graft.functions.PosTag]]).
   */
 object CaptionStats {
 
   /** Tokens of `c`: split on whitespace, drop empties. */
-  def tokens(c: Column): Column =
-    filter(split(c, "\\s+"), x => x =!= lit(""))
+  def tokens(c: Column): Column = MetadataBackend.Spacy.tokens(c)
 
   /** Sentences of `c`: split on `[.!?]+`, trim, drop empties. */
-  def sentences(c: Column): Column =
-    filter(transform(split(c, "[.!?]+"), s => trim(s)), s => s =!= lit(""))
-
-  /** Per-sentence token counts. */
-  def sentenceLengths(c: Column): Column =
-    transform(sentences(c), s => size(tokens(s)))
-
-  /** Named-entity proxy: capitalized alphabetic tokens (kept in order). */
-  def neTexts(c: Column): Column =
-    filter(tokens(c), t => t.rlike("^[A-Z][a-zA-Z]*$"))
-
-  /** NE-type proxy: ALLCAPS → ORG else MISC (deterministic stand-in for the
-    * reference's NER labels, `utils.py:251-257`). */
-  def neTypes(c: Column): Column = neTypesFrom(neTexts(c))
-
-  /** Type mapping over an already-materialized NE array — callers that use
-    * several NE-derived columns should alias [[neTexts]] once (withColumn)
-    * and derive from it, or the tokenize+filter tree re-evaluates per use
-    * (HOF lambdas get no CSE). */
-  def neTypesFrom(ne: Column): Column =
-    transform(ne, t =>
-      when(t.rlike("^[A-Z]+$"), lit("ORG")).otherwise(lit("MISC")))
+  def sentences(c: Column): Column = Sentences(c)
 
   /** Deterministic POS-proxy cascade for one token. Mirrors the tag set the
     * reference counts over (`utils.py:266-297`). Order matters and is part of
-    * the engine's documented semantics. */
-  def posTag(t: Column): Column = {
-    val lo = lower(t)
-    when(t.rlike("^[0-9]+([.,][0-9]+)?$"), lit("NUM"))
-      .when(t.rlike("^[A-Z][a-zA-Z]*$"), lit("PROPN"))
-      .when(lo.isin("and", "or", "but", "nor", "so", "yet"), lit("CONJ"))
-      .when(lo.isin("in", "on", "at", "of", "to", "from", "by", "with",
-        "for", "as", "into", "over", "under"), lit("ADP"))
-      .when(t.rlike("^[^A-Za-z0-9]+$"), lit("SYM"))
-      .when(lo.isin("is", "are", "was", "were", "be", "been", "am", "has",
-        "have", "had", "do", "does", "did", "will", "would", "can", "could",
-        "shall", "should", "may", "might", "must") ||
-        lo.like("%ing") || lo.like("%ed"), lit("VERB"))
-      .when(lo.like("%ous") || lo.like("%ful") || lo.like("%ive") ||
-        lo.like("%able") || lo.like("%ible") ||
-        lo.isin("small", "large", "fast", "slow", "big", "new", "old",
-          "good", "bad", "high", "low"), lit("ADJ"))
-      .otherwise(lit("NOUN"))
-  }
+    * the engine's documented semantics:
+    * NUM `^[0-9]+([.,][0-9]+)?$` → PROPN `^[A-Z][a-zA-Z]*$` → CONJ and ADP
+    * lexicons → SYM `^[^A-Za-z0-9]+$` → VERB lexicon or `-ing`/`-ed` → ADJ
+    * `-ous/-ful/-ive/-able/-ible` or lexicon → NOUN (lexicon and suffix
+    * tests on `lower(t)`). */
+  def posTag(t: Column): Column = PosTag(t)
 
-  /** POS tags for every token of `c`. */
-  def posTags(c: Column): Column = transform(tokens(c), posTag(_))
-
-  private def countTag(tags: Column, tag: String): Column =
-    size(filter(tags, t => t === lit(tag)))
+  /** A kernel count as `size` of the array it counts would give: for a
+    * null caption that is `size(null)`, which depends on
+    * `spark.sql.legacy.sizeOfNull`. */
+  private[enrich] def sized(count: Column): Column =
+    coalesce(count, size(lit(null).cast(ArrayType(StringType))))
 
   /** Guarded int/int ratio as double; 0.0 when the denominator is 0.
     * Int-over-int double division is exact and engine-independent, so these
@@ -103,59 +77,39 @@ object CaptionStats {
              posTagStats: Boolean = true,
              readabilityScores: Boolean = true,
              backend: MetadataBackend = MetadataBackend.Spacy): DataFrame = {
-    val c = col(textCol)
-    // Materialize the token/sentence/tag arrays once as hidden columns:
-    // every downstream stat references the arrays instead of re-running
-    // split/filter per column. CollapseProject keeps multi-use non-trivial
-    // aliases materialized, so the tokenizer runs once per row, not ~25×.
-    val toks = col("__toks"); val sents = col("__sents")
-    val slens = col("__slens")
-
-    var out = df
-      .withColumn("__toks", backend.tokens(c))
-      .withColumn("__sents", sentences(c))
-      .withColumn("__slens", transform(sents, s => size(backend.tokens(s))))
-      .withColumn("num_tok", size(toks))
-      .withColumn("num_sent", size(sents))
-      .withColumn("min_sent_len",
-        coalesce(array_min(slens), lit(0)).cast(IntegerType))
-      .withColumn("max_sent_len",
-        coalesce(array_max(slens), lit(0)).cast(IntegerType))
-      .withColumn("ne_texts",
-        filter(toks, t => t.rlike("^[A-Z][a-zA-Z]*$")))
-      .withColumn("ne_types", transform(col("ne_texts"), t =>
-        when(t.rlike("^[A-Z]+$"), lit("ORG")).otherwise(lit("MISC"))))
-      .withColumn("num_ne", size(col("ne_texts")))
-
-    if (posTagStats) {
-      val tags = col("__tags")
-      out = out
-        .withColumn("__tags", transform(toks, posTag(_)))
-        .withColumn("num_nouns", countTag(tags, "NOUN"))
-        .withColumn("num_propn", countTag(tags, "PROPN"))
-        .withColumn("num_conj", countTag(tags, "CONJ"))
-        .withColumn("num_verb", countTag(tags, "VERB"))
-        .withColumn("num_sym", countTag(tags, "SYM"))
-        .withColumn("num_num", countTag(tags, "NUM"))
-        .withColumn("num_adp", countTag(tags, "ADP"))
-        .withColumn("num_adj", countTag(tags, "ADJ"))
-        .withColumn("ratio_ne_tok", ratio(col("num_ne"), col("num_tok")))
-        .withColumn("ratio_noun_tok", ratio(col("num_nouns"), col("num_tok")))
-        .withColumn("ratio_propn_tok", ratio(col("num_propn"), col("num_tok")))
-        .withColumn("ratio_all_noun_tok",
-          ratio(col("num_nouns") + col("num_propn"), col("num_tok")))
-    }
-    if (readabilityScores) {
-      out = out
-        .withColumn("__syl", Readability.totalSyllablesOf(toks))
-        .withColumn("fk_re_score", Readability.fleschReadingEaseOf(
-          col("__syl"), col("num_tok"), col("num_sent")))
-        .withColumn("fk_gl_score", Readability.fleschKincaidGradeOf(
-          col("__syl"), col("num_tok"), col("num_sent")))
-        .withColumn("dc_score", Readability.daleChallOf(
-          Readability.difficultWordsOf(toks), col("num_tok"),
-          col("num_sent")))
-    }
-    out.drop("__toks", "__sents", "__slens", "__tags", "__syl")
+    // the kernel struct is one hidden column: every stat below reads its
+    // fields, and CollapseProject keeps a multi-use non-trivial alias
+    // materialized, so the kernel runs once per row
+    val k = col("__cs")
+    def n(field: String): Column = sized(k(field))
+    val counts = Seq(
+      "num_tok" -> n("num_tok"),
+      "num_sent" -> n("num_sent"),
+      "min_sent_len" -> coalesce(k("min_sent_len"), lit(0)),
+      "max_sent_len" -> coalesce(k("max_sent_len"), lit(0)),
+      "ne_texts" -> k("ne_texts"),
+      "ne_types" -> k("ne_types"),
+      "num_ne" -> n("num_ne"))
+    val pos =
+      if (!posTagStats) Nil
+      else graft.functions.CaptionStatsImpl.TagColumns.map(t => t -> n(t)) ++
+        Seq(
+          "ratio_ne_tok" -> ratio(n("num_ne"), n("num_tok")),
+          "ratio_noun_tok" -> ratio(n("num_nouns"), n("num_tok")),
+          "ratio_propn_tok" -> ratio(n("num_propn"), n("num_tok")),
+          "ratio_all_noun_tok" ->
+            ratio(n("num_nouns") + n("num_propn"), n("num_tok")))
+    val readability =
+      if (!readabilityScores) Nil
+      else Seq(
+        "fk_re_score" -> Readability.fleschReadingEaseOf(
+          k("syllables"), n("num_tok"), n("num_sent")),
+        "fk_gl_score" -> Readability.fleschKincaidGradeOf(
+          k("syllables"), n("num_tok"), n("num_sent")),
+        "dc_score" -> Readability.daleChallOf(
+          n("difficult_words"), n("num_tok"), n("num_sent")))
+    df.withColumn("__cs", CaptionStatsKernel(col(textCol), backend))
+      .withColumns(ListMap(counts ++ pos ++ readability: _*))
+      .drop("__cs")
   }
 }

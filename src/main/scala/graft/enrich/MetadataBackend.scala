@@ -1,7 +1,8 @@
 package graft.enrich
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+
+import graft.functions.CaptionStatsImpl
 
 /** The reference's NLP-backend selector surfaced as a first-class engine
   * concept: `MetadataGeneratorBackend` (`utils.py:39-43`) is a per-run
@@ -26,33 +27,22 @@ import org.apache.spark.sql.functions._
   *  - [[MetadataBackend.Polyglot]] unicode words only: maximal
   *    letter/digit runs, punctuation dropped ("a, b!" → 2 toks)
   *
-  * All three are pure codegen'd column expressions — the backend choice
-  * changes the regex, never the plan shape, so switching backends costs
-  * nothing at any scale. */
-sealed abstract class MetadataBackend(val name: String) {
+  * All three tokenize inside the one native [[graft.functions.Tokens]] /
+  * [[graft.functions.CaptionStatsKernel]] pass (rules in
+  * [[graft.functions.CaptionStatsImpl]]) — the backend choice changes the
+  * tokenizer, never the plan shape. */
+sealed abstract class MetadataBackend(val name: String, val id: Int)
+    extends Serializable {
   /** Tokens of `c` under this backend's tokenizer. */
-  def tokens(c: Column): Column
+  def tokens(c: Column): Column = graft.functions.Tokens(c, this)
 }
 
 object MetadataBackend {
 
-  case object Spacy extends MetadataBackend("spacy") {
-    // delegates to THE engine token definition (CaptionStats.tokens,
-    // mirrored by the DuckDB oracle's toksSql) rather than restating it —
-    // the three places that tokenize must never drift apart
-    def tokens(c: Column): Column = CaptionStats.tokens(c)
-  }
-
-  case object Nltk extends MetadataBackend("nltk") {
-    def tokens(c: Column): Column =
-      regexp_extract_all(c,
-        lit("[A-Za-z0-9_']+|[^A-Za-z0-9_'\\s]"), lit(0))
-  }
-
-  case object Polyglot extends MetadataBackend("polyglot") {
-    def tokens(c: Column): Column =
-      regexp_extract_all(c, lit("[\\p{L}\\p{N}]+"), lit(0))
-  }
+  case object Spacy extends MetadataBackend("spacy", CaptionStatsImpl.Spacy)
+  case object Nltk extends MetadataBackend("nltk", CaptionStatsImpl.Nltk)
+  case object Polyglot
+    extends MetadataBackend("polyglot", CaptionStatsImpl.Polyglot)
 
   val All: Seq[MetadataBackend] = Seq(Spacy, Nltk, Polyglot)
 

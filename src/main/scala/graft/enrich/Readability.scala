@@ -6,8 +6,9 @@ import org.apache.spark.sql.types.DoubleType
 
 /** Readability scores (reference `utils.py:258-263` via spacy-readability;
   * formulas reproduced in `notebooks/f30k_vs_coco_vs_wicsmmir_v2.ipynb:
-  * 17669-17679`) as native Catalyst expressions — pure arithmetic over
-  * token/sentence/syllable counts, fully codegen'd.
+  * 17669-17679`) as Catalyst column arithmetic over token, sentence,
+  * syllable and difficult-word counts. The counts come from the native
+  * [[graft.functions.CaptionStatsKernel]] pass.
   *
   * Syllable heuristic (documented engine semantics): number of maximal vowel
   * runs `[aeiouy]+` in the lowercased word, minimum 1. "Difficult word"
@@ -16,18 +17,10 @@ import org.apache.spark.sql.types.DoubleType
 object Readability {
 
   /** Syllable count of one word — native codegen'd expression (single byte
-    * scan; see [[graft.functions.SyllableCount]]). Semantics identical to
-    * `greatest(size(regexp_extract_all(lower(w), "[aeiouy]+")), 1)`,
-    * property-checked in ReadabilitySpec. */
+    * scan; see [[graft.functions.SyllableCount]]). Semantics those of
+    * `greatest(size(regexp_extract_all(lower(w), "[aeiouy]+")), 1)`
+    * except on U+0130, property-checked in ReadabilitySpec. */
   def syllables(w: Column): Column = graft.functions.SyllableCount(w)
-
-  /** Total syllables over a token-array column. */
-  def totalSyllablesOf(toks: Column): Column =
-    aggregate(toks, lit(0), (acc, w) => acc + syllables(w))
-
-  /** Total syllables over all tokens of a text column. */
-  def totalSyllables(c: Column): Column =
-    totalSyllablesOf(CaptionStats.tokens(c))
 
   private def wOf(numTok: Column): Column =
     greatest(numTok, lit(1)).cast(DoubleType)
@@ -48,10 +41,6 @@ object Readability {
       lit(11.8) * (syl.cast(DoubleType) / wOf(numTok)) -
       lit(15.59)
 
-  /** Count of difficult words (≥3 syllables) in a token-array column. */
-  def difficultWordsOf(toks: Column): Column =
-    size(filter(toks, w => syllables(w) >= 3))
-
   /** Dale–Chall from pre-computed counts: 0.1579·pctDifficult +
     * 0.0496·(W/S), +3.6365 if pctDifficult > 5. */
   def daleChallOf(difficult: Column, numTok: Column,
@@ -61,23 +50,29 @@ object Readability {
       when(pct > 5, lit(3.6365)).otherwise(lit(0.0))
   }
 
+  /** Spacy-tokenized counts of a text column. */
+  private def stats(c: Column): Column =
+    graft.functions.CaptionStatsKernel(c, MetadataBackend.Spacy)
+
   /** Flesch Reading Ease = 206.835 − 1.015·(W/S) − 84.6·(Syl/W). */
-  def fleschReadingEase(c: Column): Column =
-    fleschReadingEaseOf(totalSyllables(c),
-      size(CaptionStats.tokens(c)), size(CaptionStats.sentences(c)))
+  def fleschReadingEase(c: Column): Column = {
+    val k = stats(c)
+    fleschReadingEaseOf(k("syllables"), CaptionStats.sized(k("num_tok")),
+      CaptionStats.sized(k("num_sent")))
+  }
 
   /** Flesch–Kincaid Grade Level = 0.39·(W/S) + 11.8·(Syl/W) − 15.59. */
-  def fleschKincaidGrade(c: Column): Column =
-    fleschKincaidGradeOf(totalSyllables(c),
-      size(CaptionStats.tokens(c)), size(CaptionStats.sentences(c)))
-
-  /** Count of difficult words (≥3 syllables). */
-  def difficultWords(c: Column): Column =
-    difficultWordsOf(CaptionStats.tokens(c))
+  def fleschKincaidGrade(c: Column): Column = {
+    val k = stats(c)
+    fleschKincaidGradeOf(k("syllables"), CaptionStats.sized(k("num_tok")),
+      CaptionStats.sized(k("num_sent")))
+  }
 
   /** Dale–Chall = 0.1579·pctDifficult + 0.0496·(W/S), +3.6365 if
     * pctDifficult > 5. */
-  def daleChall(c: Column): Column =
-    daleChallOf(difficultWords(c), size(CaptionStats.tokens(c)),
-      size(CaptionStats.sentences(c)))
+  def daleChall(c: Column): Column = {
+    val k = stats(c)
+    daleChallOf(CaptionStats.sized(k("difficult_words")),
+      CaptionStats.sized(k("num_tok")), CaptionStats.sized(k("num_sent")))
+  }
 }

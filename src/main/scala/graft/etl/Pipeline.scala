@@ -108,12 +108,16 @@ class Pipeline(spark: SparkSession, cfg: PipelineConfig) {
   }
 
   /** Stage 3 — load (`wikicaps_etl_pipeline.py:242-249`): final K1 parquet
-    * + K2 projected CSV `[image_path, caption]`, quoted. */
+    * + K2 projected CSV `[image_path, caption]`, quoted, both in
+    * `wikicaps_id` order (O2). The transform stage runs spread across
+    * cores, so its checkpoint is several files in no particular order;
+    * the sort re-reads the checkpoint, it does not re-run the chain. */
   def load(): Unit = {
     val src =
-      if (exists(out("metadata_transformed")))
+      (if (exists(out("metadata_transformed")))
         spark.read.parquet(out("metadata_transformed"))
-      else spark.read.parquet(out("metadata_filtered"))
+      else spark.read.parquet(out("metadata_filtered")))
+        .orderBy("wikicaps_id") // O2
     src.write.mode("overwrite").parquet(out("metadata_final")) // K1
     val csvCols =
       if (src.columns.contains("image_path")) Seq("image_path", "caption")

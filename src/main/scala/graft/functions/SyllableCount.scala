@@ -18,8 +18,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * allocates a lowercased copy plus a match list per word. This expression
   * is a single byte scan, codegen'd into the enclosing whole-stage loop:
   * ASCII vowels are case-folded with `| 0x20`, and multi-byte UTF-8 units
-  * (≥ 0x80) can never alias an ASCII vowel byte, so scanning bytes is
-  * exact for any Unicode input.
+  * (≥ 0x80) can never alias an ASCII vowel byte. It differs from the
+  * `lower` formulation where lower-casing creates an ASCII vowel: U+0130
+  * (`İ`) lowers to `i` + U+0307, so "İA" scans as 1 syllable and the
+  * regexp gives 2.
   */
 case class SyllableCount(child: Expression) extends UnaryExpression {
 
@@ -33,48 +35,13 @@ case class SyllableCount(child: Expression) extends UnaryExpression {
   override def dataType: DataType = IntegerType
   override def prettyName: String = "syllable_count"
 
-  @inline private def isVowel(b: Byte): Boolean = {
-    val c = (b | 0x20).toChar
-    c == 'a' || c == 'e' || c == 'i' || c == 'o' || c == 'u' || c == 'y'
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].getBytes
-    var runs = 0
-    var inRun = false
-    var i = 0
-    while (i < bytes.length) {
-      val v = bytes(i) >= 0 && isVowel(bytes(i))
-      if (v && !inRun) runs += 1
-      inRun = v
-      i += 1
-    }
-    if (runs == 0) 1 else runs
-  }
+  override def nullSafeEval(input: Any): Any =
+    SyllableCountImpl.count(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val bytes = ctx.freshName("bytes")
-      val runs = ctx.freshName("runs")
-      val inRun = ctx.freshName("inRun")
-      val i = ctx.freshName("i")
-      val ch = ctx.freshName("ch")
-      val isV = ctx.freshName("isV")
-      s"""
-        byte[] $bytes = $c.getBytes();
-        int $runs = 0;
-        boolean $inRun = false;
-        for (int $i = 0; $i < $bytes.length; $i++) {
-          int $ch = ($bytes[$i] | 0x20);
-          boolean $isV = $bytes[$i] >= 0 && ($ch == 'a' || $ch == 'e' ||
-            $ch == 'i' || $ch == 'o' || $ch == 'u' || $ch == 'y');
-          if ($isV && !$inRun) $runs++;
-          $inRun = $isV;
-        }
-        ${ev.value} = $runs == 0 ? 1 : $runs;
-      """
-    })
+    defineCodeGen(ctx, ev,
+      c => s"graft.functions.SyllableCountImpl.count($c)")
 
   override protected def withNewChildInternal(
       newChild: Expression): SyllableCount = copy(child = newChild)
@@ -96,4 +63,24 @@ object SyllableCount {
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "syllable_count", build, "built-in")
+}
+
+/** The byte scan, as a Java static shared by [[SyllableCount]] and
+  * [[CaptionStatsImpl]]. */
+object SyllableCountImpl {
+  def count(w: UTF8String): Int = {
+    val bytes = w.getBytes
+    var runs = 0
+    var inRun = false
+    var i = 0
+    while (i < bytes.length) {
+      val c = bytes(i) | 0x20
+      val v = bytes(i) >= 0 && (c == 'a' || c == 'e' || c == 'i' ||
+        c == 'o' || c == 'u' || c == 'y')
+      if (v && !inRun) runs += 1
+      inRun = v
+      i += 1
+    }
+    if (runs == 0) 1 else runs
+  }
 }

@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   * [[WebpCodec.decode]]).
   *
   * Scale design: each transform is a scalar UDF over the binary column —
-  * map-only, no shuffle, image-parallel across partitions; the chain folds
-  * into a single task pass (mirrors the reference's per-image
+  * map-only, image-parallel across partitions; the chain folds into a
+  * single task pass (mirrors the reference's per-image
   * try/except chain, `utils.py:134-145`).
   */
 object ImageOps {
@@ -264,7 +264,14 @@ object ImageOps {
     * path + success flag. Writing alongside (instead of the reference's
     * in-place save, `compression_transformation.py:14-16`) is what makes
     * task retries and pipeline re-runs idempotent (R4): a retry re-reads
-    * the untouched ORIGINAL, never re-compresses its own output. */
+    * the untouched ORIGINAL, never re-compresses its own output.
+    *
+    * The input is spread to the session's parallelism first
+    * ([[graft.util.Partitioning.spread]]): a one-file checkpoint would
+    * otherwise run the whole chain as one task. The UDF is marked
+    * nondeterministic because it writes files; that also keeps the
+    * optimizer from copying it into a pushed-down `transform_ok` filter
+    * below the exchange, which would run the chain before the shuffle. */
   def transformFiles(df: DataFrame, pathCol: String,
                      chain: Seq[graft.config.TransformCfg]): DataFrame = {
     val chainLocal = chain
@@ -298,8 +305,9 @@ object ImageOps {
           }
         }
       } catch { case _: Exception => null }
-    })
-    df.withColumn("transformed_path", f(col(pathCol)))
+    }).asNondeterministic()
+    graft.util.Partitioning.spread(df)
+      .withColumn("transformed_path", f(col(pathCol)))
       .withColumn("transform_ok", col("transformed_path").isNotNull)
   }
 }

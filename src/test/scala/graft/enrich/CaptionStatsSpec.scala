@@ -36,9 +36,9 @@ class CaptionStatsSpec extends SparkSpec {
   }
 
   test("NE proxy: capitalized tokens, ALLCAPS typed ORG") {
-    val df = Seq("Alice met NASA near Paris today").toDF("caption")
-      .select(CaptionStats.neTexts(col("caption")).as("t"),
-        CaptionStats.neTypes(col("caption")).as("y"))
+    val df = CaptionStats.enrich(
+      Seq("Alice met NASA near Paris today").toDF("caption"), "caption")
+      .select(col("ne_texts").as("t"), col("ne_types").as("y"))
     val r = df.head()
     r.getSeq[String](0) shouldBe Seq("Alice", "NASA", "Paris")
     r.getSeq[String](1) shouldBe Seq("MISC", "ORG", "MISC")

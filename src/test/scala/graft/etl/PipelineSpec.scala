@@ -101,6 +101,18 @@ class PipelineSpec extends SparkSpec {
       .csv(s"${cfg.outputDir}/captions_csv")
     csv.columns shouldBe Array("image_path", "caption")
     csv.count() shouldBe 5
+    // O2: both sinks in wikicaps_id order, read part file by part file
+    // (a directory read orders its splits by size, not by name)
+    def partsInOrder(d: String, fmt: String): Seq[org.apache.spark.sql.Row] =
+      new java.io.File(d).listFiles().map(_.getName)
+        .filter(_.startsWith("part-")).sorted.toSeq
+        .flatMap(f => spark.read.format(fmt).option("header", "true")
+          .load(s"$d/$f").collect())
+    partsInOrder(s"${cfg.outputDir}/metadata_final", "parquet")
+      .map(_.getAs[Long]("wikicaps_id")) shouldBe Seq(1L, 2L, 4L, 5L, 6L)
+    partsInOrder(s"${cfg.outputDir}/captions_csv", "csv")
+      .map(_.getAs[String]("caption")) shouldBe Seq(1, 2, 4, 5, 6)
+      .map(i => s"A caption with enough tokens number $i here.")
   }
 
   test("downloader: missing file → null path → F3 drop; re-run skips") {

@@ -212,4 +212,76 @@ class ImageOpsSpec extends SparkSpec {
     java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(dir + "/noext")) shouldBe Fixtures.png(50, 50)
   }
+
+  test("transformFiles spreads a one-file input across cores and runs " +
+    "its file-writing UDF once per row, above the exchange") {
+    import java.nio.file.{FileSystems, Files, Path, StandardWatchEventKinds}
+    import org.apache.spark.scheduler.{SparkListener,
+      SparkListenerStageCompleted}
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.catalyst.plans.logical.Repartition
+    import scala.jdk.CollectionConverters._
+
+    val dir = Files.createTempDirectory("spread")
+    val imgs = Files.createDirectory(dir.resolve("imgs"))
+    val paths = (1 to 6).map { i =>
+      val f = imgs.resolve(s"img_$i.png")
+      Files.write(f, Fixtures.png(40 + i, 30))
+      f.toString
+    }
+    paths.toDF("image_path").coalesce(1).write.parquet(s"$dir/meta")
+    val done = ImageOps.transformFiles(spark.read.parquet(s"$dir/meta"),
+      "image_path", Seq(TransformCfg("resize",
+        Map("max_width" -> "16", "max_height" -> "16"))))
+      .filter(col("transform_ok")) // as Pipeline.transform's F4
+
+    // one UDF call in the optimized plan, and the repartition below it:
+    // a deterministic UDF would be copied into the pushed-down filter
+    val plan = done.queryExecution.optimizedPlan
+    val calls = plan.flatMap(_.expressions.flatMap(
+      _.collect { case u: ScalaUDF => u }))
+    calls should have size 1
+    val host = plan.find(_.expressions.exists(
+      _.exists(_.isInstanceOf[ScalaUDF]))).get
+    host.find(_.isInstanceOf[Repartition]) shouldBe defined
+
+    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stageTasks.add(e.stageInfo.numTasks)
+    }
+    val watcher = FileSystems.getDefault.newWatchService()
+    imgs.register(watcher, StandardWatchEventKinds.ENTRY_CREATE)
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graftbridge.Bridge.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      done.write.parquet(s"$dir/out")
+      org.apache.spark.sql.graftbridge.Bridge.drainListeners(sc)
+    } finally sc.removeSparkListener(listener)
+    spark.read.parquet(s"$dir/out").count() shouldBe 6
+    // the last stage is the transform + write, one task per core
+    stageTasks.asScala.last shouldBe sc.defaultParallelism
+    sc.defaultParallelism shouldBe 4
+
+    // every output written once: one temp file and one atomic move each
+    val created = scala.collection.mutable.ArrayBuffer.empty[String]
+    val deadline = System.nanoTime() + 5000000000L
+    while (created.size < 12 && System.nanoTime() < deadline) {
+      val key = watcher.poll(100, java.util.concurrent.TimeUnit.MILLISECONDS)
+      if (key != null) {
+        key.pollEvents().asScala.foreach(e =>
+          created += e.context().asInstanceOf[Path].toString)
+        key.reset()
+      }
+    }
+    Thread.sleep(300) // any duplicate write would land by now
+    Option(watcher.poll()).foreach(_.pollEvents().asScala.foreach(e =>
+      created += e.context().asInstanceOf[Path].toString))
+    watcher.close()
+    val byName = created.groupBy(identity).map { case (k, v) => k -> v.size }
+    byName.keySet shouldBe (1 to 6).flatMap(i =>
+      Seq(s"img_$i.t.png", s"img_$i.t.png.inprogress")).toSet
+    byName.values.toSet shouldBe Set(1)
+  }
 }
