@@ -7,7 +7,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...};
   * before it come the per-query [min,max] spread line and the job-count
   * line {"metric":"jobs","queries":{name:n}}. Queries are picked by
-  * [[Harness.selected]] (`SPARK_GRAFT_ONLY`).
+  * [[Harness.selected]] (`SPARK_GRAFT_ONLY`) and each run goes through
+  * [[Harness.runQuery]], so it starts with no cache left by an earlier
+  * query and its own are released outside the timed interval.
   *
   * Methodology (sound timing, not probe timing):
   *  - every query is executed to completion through a `noop` write sink —
@@ -74,7 +76,6 @@ object Bench {
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
     val (selected, prebuilt) = plan(sys.env.get)
-    val queries = SparkEntry.queries
     val spark = Harness.session(cpus)
     Seq("lineitem", "documents", "embeddings", "orders").foreach { t =>
       spark.read.parquet(s"$sfDir/$t.parquet").count()
@@ -100,11 +101,10 @@ object Bench {
     def once(name: String): Either[String, Double] = {
       val t0 = System.nanoTime()
       val wall0 = System.currentTimeMillis()
-      try {
-        queries(name)(spark, sfDir).write.format("noop").mode("overwrite")
-          .save()
-        Right((System.nanoTime() - t0) / 1e9)
-      } catch {
+      try Right(Harness.runQuery(spark, sfDir, name) { df =>
+        df.write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }) catch {
         case e: Throwable =>
           // strip quote/backslash and ALL control chars (not just \n\r\t):
           // any cntrl in an exception message would break the JSON line

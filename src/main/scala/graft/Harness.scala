@@ -1,10 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.util.CacheScope
 
 /** The driver harness shared by [[Bench]], [[Verify]], [[Plans]], the
   * specs' session and the test-scope micro-benches: one session
-  * builder, one query selector and Bench's untimed store prebuilds.
+  * builder, one query selector, one query runner and Bench's untimed
+  * store prebuilds.
   * [[Main]] keeps its own builder — it is the deployment entry
   * (`SPARK_MASTER`, session extensions, UI on). */
 object Harness {
@@ -36,9 +39,7 @@ object Harness {
   }
 
   /** The registered query names a run covers, in [[SparkEntry.queries]]
-    * iteration order — the order Bench has always timed in, which its
-    * numbers depend on while a query can leave a cache that a later
-    * identical plan reuses (q8 before q4 saves q4 three jobs).
+    * iteration order — the order Bench has always timed in.
     * `only` (the `SPARK_GRAFT_ONLY` env var: comma-separated name
     * prefixes) picks exactly the queries its prefixes match and
     * overrides `skip`; a prefix that matches no query fails the run,
@@ -59,6 +60,14 @@ object Harness {
         names.filter(n => prefixes.exists(n.startsWith))
     }
   }
+
+  /** Builds the registered query `name` over `sfDir` and consumes it
+    * (its action, or a plan dump) inside one [[CacheScope.query]]: what
+    * the build and `consume` leave cached is released after `consume`
+    * returns or throws, so a timer read inside `consume` excludes it. */
+  def runQuery[T](spark: SparkSession, sfDir: String, name: String)
+                 (consume: DataFrame => T): T =
+    CacheScope.query(spark)(consume(SparkEntry.queries(name)(spark, sfDir)))
 
   /** Builds, untimed, the persisted stores of those `names` whose
     * timed body is the steady-state path over a one-time build, and

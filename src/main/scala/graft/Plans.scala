@@ -39,12 +39,12 @@ object Plans {
     // plans/rNN/<query>_{before,after}.txt optimization-evidence files;
     // SPARK_GRAFT_ONLY picks the queries (Harness.selected)
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLANS_SUFFIX", "")
-    val queries = SparkEntry.queries
     val selected = Harness.selected().toSet
     Queries.all.map(_.name).filter(selected).foreach { name =>
-      val df = queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      // the runner releases the stage caches the eager builders make
+      val plan = Harness.runQuery(spark, sfDir, name)(
+        _.queryExecution.explainString(org.apache.spark.sql.execution
+          .ExplainMode.fromString("formatted")))
       if (out.endsWith("/")) {
         Files.createDirectories(Paths.get(out))
         Files.writeString(Paths.get(s"$out$name$suffix.txt"), plan)

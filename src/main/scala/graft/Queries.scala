@@ -4469,10 +4469,10 @@ object Queries {
         // every stage references its input ≥2× (joins), so a fully
         // lazy seven-stage chain re-evaluates the expensive front
         // (c4 → exact dedup → LSH) multiplicatively — measured ~4× on
-        // this query at sf0.1. Checkpoint blocks are ContextCleaner-
-        // collected once the result frame is dropped; the production
-        // analogue at 100 TB is Pipeline's per-stage parquet
-        // checkpoints (R3), which also give restart resume.
+        // this query at sf0.1. Checkpoint blocks live until the query
+        // boundary (CacheScope.query); the production analogue at
+        // 100 TB is Pipeline's per-stage parquet checkpoints (R3),
+        // which also give restart resume.
         //
         // TOKENIZE ONCE: the regex split runs here, right after exact
         // dedup, and the array rides the checkpoint chain; every later

@@ -14,10 +14,9 @@ object Verify {
     val spark = Harness.session(cpus,
       "spark.graft.quantiles.autoGkThreshold" -> "0")
     new java.io.File(outDir).mkdirs()
-    val queries = SparkEntry.queries
     Harness.selected().foreach { name =>
-      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try Harness.runQuery(spark, sfDir, name)(_.coalesce(1).write
+        .mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

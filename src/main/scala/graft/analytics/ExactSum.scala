@@ -177,7 +177,4 @@ object ExactSum {
         (lit(1).cast("decimal(8,6)") - dv.cast("decimal(8,6)"))))
     assemble(fastScaled, anyFast, slow, 8)
   }
-
-  /** Exact mean: [[dsum]] / count — drop-in for the decimal-sum mean. */
-  def dmean(c: Column): Column = dsum(c) / count(c)
 }

@@ -3,7 +3,8 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.util.CacheScope
 
 /** Exact distributed quantiles (`quantile_cont` semantics: linear
   * interpolation at position p·(n−1), matching both pandas `median` and
@@ -408,12 +409,12 @@ object Quantiles {
     // equal values co-located, so global rank = partition offset + local
     // rank. Persisted because the histogram pass and the lookup pass must
     // see the SAME partitioning (spark_partition_id is recompute-sensitive).
-    val sorted = melted
-      .repartitionByRange(nParts, col("__name"), col("__v"))
-      .sortWithinPartitions("__name", "__v")
-      .select(col("__name"), col("__v"), spark_partition_id().as("__pid"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    CacheScope.run { scope =>
+      val sorted = scope.cache(melted
+        .repartitionByRange(nParts, col("__name"), col("__v"))
+        .sortWithinPartitions("__name", "__v")
+        .select(col("__name"), col("__v"),
+          spark_partition_id().as("__pid")))
       val hist = sorted.groupBy("__pid", "__name").count().collect()
         .map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
       val counts: Map[String, Long] =
@@ -434,47 +435,49 @@ object Quantiles {
         lo = math.floor((n - 1) * p).toLong
         idx <- Seq(lo, math.min(lo + 1, n - 1))
       } yield (c, idx)).toSet
-      if (needed.isEmpty) return Map.empty
-      // global index -> (pid, 1-based local rank within (pid, name))
-      val lookups: Set[(Int, String, Long)] = needed.map { case (nm, gi) =>
-        val (pid, off, _) = offsets(nm)
-          .find { case (_, o, cnt) => gi >= o && gi < o + cnt }.get
-        (pid, nm, gi - off + 1)
+      if (needed.isEmpty) Map.empty
+      else {
+        // global index -> (pid, 1-based local rank within (pid, name))
+        val lookups: Set[(Int, String, Long)] = needed.map { case (nm, gi) =>
+          val (pid, off, _) = offsets(nm)
+            .find { case (_, o, cnt) => gi >= o && gi < o + cnt }.get
+          (pid, nm, gi - off + 1)
+        }
+        val pids = lookups.map(_._1).toSeq
+        val w = Window.partitionBy("__pid", "__name").orderBy("__v")
+        val wanted = lookups.map { case (pid, nm, rn) =>
+          col("__pid") === pid && col("__name") === nm && col("__rn") === rn
+        }.reduce(_ || _)
+        val valueAt: Map[(String, Long), Double] = sorted
+          .filter(col("__pid").isin(pids: _*))
+          .withColumn("__rn", row_number().over(w))
+          .filter(wanted)
+          .select("__pid", "__name", "__rn", "__v")
+          .collect()
+          .map { r =>
+            val pid = r.getInt(0); val nm = r.getString(1)
+            val off = offsets(nm).find(_._1 == pid).get._2
+            (nm, off + r.getInt(2) - 1) -> r.getDouble(3) // row_number is Int
+          }.toMap
+        (for {
+          c <- cols if counts.getOrElse(c, 0L) > 0
+          p <- ps
+        } yield {
+          val n = counts(c)
+          val pos = (n - 1) * p
+          val lo = math.floor(pos).toLong
+          val frac = pos - lo
+          val vlo = valueAt((c, lo))
+          val q =
+            if (frac == 0.0) vlo
+            else {
+              val vhi = valueAt((c, math.min(lo + 1, n - 1)))
+              (1.0 - frac) * vlo + frac * vhi // Percentile.getPercentile form
+            }
+          (c, p) -> q
+        }).toMap
       }
-      val pids = lookups.map(_._1).toSeq
-      val w = Window.partitionBy("__pid", "__name").orderBy("__v")
-      val wanted = lookups.map { case (pid, nm, rn) =>
-        col("__pid") === pid && col("__name") === nm && col("__rn") === rn
-      }.reduce(_ || _)
-      val valueAt: Map[(String, Long), Double] = sorted
-        .filter(col("__pid").isin(pids: _*))
-        .withColumn("__rn", row_number().over(w))
-        .filter(wanted)
-        .select("__pid", "__name", "__rn", "__v")
-        .collect()
-        .map { r =>
-          val pid = r.getInt(0); val nm = r.getString(1)
-          val off = offsets(nm).find(_._1 == pid).get._2
-          (nm, off + r.getInt(2) - 1) -> r.getDouble(3) // row_number is Int
-        }.toMap
-      (for {
-        c <- cols if counts.getOrElse(c, 0L) > 0
-        p <- ps
-      } yield {
-        val n = counts(c)
-        val pos = (n - 1) * p
-        val lo = math.floor(pos).toLong
-        val frac = pos - lo
-        val vlo = valueAt((c, lo))
-        val q =
-          if (frac == 0.0) vlo
-          else {
-            val vhi = valueAt((c, math.min(lo + 1, n - 1)))
-            (1.0 - frac) * vlo + frac * vhi // Percentile.getPercentile form
-          }
-        (c, p) -> q
-      }).toMap
-    } finally sorted.unpersist(blocking = false)
+    }
   }
 
   /** At-scale variant: Spark's `percentile_approx` — a Greenwald–Khanna

@@ -158,10 +158,6 @@ object Summary {
   def seededSample(df: DataFrame, keyCol: String, n: Int): DataFrame =
     df.orderBy(md5(col(keyCol).cast("string")), col(keyCol)).limit(n)
 
-  /** A8: null count of a column. */
-  def nullCount(df: DataFrame, c: String): Column =
-    count(when(col(c).isNull, 1)).as(s"${c}_nulls")
-
   /** O8: deterministic weighted sample — systematic
     * probability-proportional-to-size selection over the engine's md5
     * permutation. Rows are laid on a line in md5(key) order, each

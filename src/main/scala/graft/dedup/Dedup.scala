@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.enrich.CaptionStats
 import graft.text.TextAnalysis
-import graft.util.{Metrics, StoreLease}
+import graft.util.{CacheScope, Metrics, StoreLease}
 
 /** Deduplication operators for LLM-scale corpora (north-star extension,
   * BASELINE.json). All keys are md5-derived so results are deterministic and
@@ -353,45 +353,39 @@ object Dedup {
     * signature path and both sides of the verify join (without the persist,
     * Spark recomputes the tokenize+shingle chain three times in the one
     * materializing job). The verified-pair result (small: O(candidates)) is
-    * materialized eagerly so the big shingle cache can be unpersisted
-    * before returning — no cache outlives the call except the pair set
-    * itself, which the ContextCleaner frees when the result is dropped.
-    * Verification work is O(candidates), never O(n²), and the Jaccard
-    * formula is the exact-int-division form that hash-matches a SQL
-    * oracle. */
+    * an eager [[CacheScope.handOff]], so the big shingle cache is released
+    * before returning. Verification work is O(candidates), never O(n²),
+    * and the Jaccard formula is the exact-int-division form that
+    * hash-matches a SQL oracle. */
   def nearDupPairs(df: DataFrame, idCol: String, textCol: String,
                    threshold: Double, k: Int = 12, bands: Int = 4,
                    shingleN: Int = 3, maxBucket: Int = 10000,
-                   tokensCol: Option[String] = None): DataFrame = {
-    val sh = shingleTable(df, idCol, textCol, shingleN,
-      tokensCol = tokensCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                   tokensCol: Option[String] = None): DataFrame =
+  CacheScope.run { scope =>
+    val sh = scope.cache(shingleTable(df, idCol, textCol, shingleN,
+      tokensCol = tokensCol))
     // r21: the signature frame persists too (k short strings per doc —
     // smaller than the shingle cache) so the cap report below reads
     // CACHED signatures instead of re-running MinHashRot over the
     // whole corpus as a second pass; released before return like sh
-    val sig = signaturesFrom(sh, idCol, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sig = scope.cache(signaturesFrom(sh, idCol, k))
     val cand = pairsFromSignatures(sig, idCol,
       bands, rowsPer(k, bands), maxBucket)
     val a = sh.select(col(idCol).as("id_a"), col("__s").as("__sa"))
     val b = sh.select(col(idCol).as("id_b"), col("__s").as("__sb"))
     val inter = size(array_intersect(col("__sa"), col("__sb")))
     val uni = size(col("__sa")) + size(col("__sb")) - inter
-    val verified = cand.join(a, "id_a").join(b, "id_b")
+    val verified = CacheScope.handOff(cand.join(a, "id_a").join(b, "id_b")
       .withColumn("jaccard",
         when(uni === 0, 0.0).otherwise(inter.cast("double") / uni))
       .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select("id_a", "id_b", "jaccard"))
     verified.count() // materialize while the shingle cache is alive
     // recall-loss report over the CACHED signatures: banding + one
     // map-combined count, no minhash recompute
     Metrics.logDrops("nearDupPairs bucket cap", Metrics.capReport(
       bandBucketSizes(sig, idCol, bands,
         rowsPer(k, bands)), "__bn", maxBucket))
-    sig.unpersist(blocking = false)
-    sh.unpersist(blocking = false)
     verified
   }
 
@@ -407,10 +401,10 @@ object Dedup {
     * signature cache is alive, then the cache is released. */
   def minhashEstimates(df: DataFrame, idCol: String, textCol: String,
                        k: Int = 12, bands: Int = 4, shingleN: Int = 3,
-                       maxBucket: Int = 10000): DataFrame = {
-    val sig = signaturesFrom(shingleTable(df, idCol, textCol, shingleN),
-      idCol, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                       maxBucket: Int = 10000): DataFrame =
+  CacheScope.run { scope =>
+    val sig = scope.cache(signaturesFrom(
+      shingleTable(df, idCol, textCol, shingleN), idCol, k))
     val cand = pairsFromSignatures(sig, idCol, bands, rowsPer(k, bands), maxBucket)
     def side(name: String, p: String) = (0 until k).foldLeft(
       sig.withColumnRenamed(idCol, name))(
@@ -418,15 +412,13 @@ object Dedup {
     val agree = (0 until k).map(i =>
       when(col(s"__a$i") === col(s"__b$i"), 1).otherwise(0))
       .reduce(_ + _)
-    val out = cand.join(side("id_a", "__a"), "id_a")
+    val out = CacheScope.handOff(cand.join(side("id_a", "__a"), "id_a")
       .join(side("id_b", "__b"), "id_b")
       .select(col("id_a"), col("id_b"),
-        (agree.cast("double") / lit(k).cast("double")).as("est_jaccard"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        (agree.cast("double") / lit(k).cast("double")).as("est_jaccard")))
     out.count() // materialize while the signature cache is alive
     Metrics.logDrops("minhashEstimates bucket cap", Metrics.capReport(
       bandBucketSizes(sig, idCol, bands, rowsPer(k, bands)), "__bn", maxBucket))
-    sig.unpersist(blocking = false)
     out
   }
 
@@ -456,16 +448,16 @@ object Dedup {
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        threshold: Double, k: Int = 12, bands: Int = 12,
                        shingleN: Int = 3,
-                       maxBucket: Int = 10000): DataFrame = {
-    val sh = shingleTable(df, idCol, textCol, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                       maxBucket: Int = 10000): DataFrame =
+  CacheScope.run { scope =>
+    val sh = scope.cache(shingleTable(df, idCol, textCol, shingleN))
     val cand = pairsFromSignatures(signaturesFrom(sh, idCol, k), idCol,
       bands, rowsPer(k, bands), maxBucket)
     val a = sh.select(col(idCol).as("id_a"), col("__s").as("__sa"))
     val b = sh.select(col(idCol).as("id_b"), col("__s").as("__sb"))
     val inter = size(array_intersect(col("__sa"), col("__sb")))
     val minSize = least(size(col("__sa")), size(col("__sb")))
-    val verified = cand.join(a, "id_a").join(b, "id_b")
+    val verified = CacheScope.handOff(cand.join(a, "id_a").join(b, "id_b")
       .withColumn("containment",
         when(minSize === 0, 0.0)
           .otherwise(inter.cast("double") / minSize))
@@ -474,13 +466,11 @@ object Dedup {
           .when(size(col("__sb")) < size(col("__sa")), col("id_b"))
           .otherwise(greatest(col("id_a"), col("id_b"))))
       .filter(col("containment") >= threshold)
-      .select("id_a", "id_b", "containment", "contained_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select("id_a", "id_b", "containment", "contained_id"))
     verified.count() // materialize while the shingle cache is alive
     Metrics.logDrops("containmentPairs bucket cap", Metrics.capReport(
       bandBucketSizes(signaturesFrom(sh, idCol, k), idCol, bands,
         rowsPer(k, bands)), "__bn", maxBucket))
-    sh.unpersist(blocking = false)
     verified
   }
 
@@ -536,13 +526,16 @@ object Dedup {
   def componentLabels(pairsRaw: DataFrame, idA: String = "id_a",
                       idB: String = "id_b",
                       maxIters: Int = 100,
-                      localThreshold: Long = 1L << 22): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+                      localThreshold: Long = 1L << 22): DataFrame =
+  CacheScope.run { scope =>
+    // A pair set that is cached already (nearDupPairs' hand-off) is read
+    // in place; the scope caches (and later frees) only an uncached one.
+    val raw = scope.cache(pairsRaw)
     // Null-endpoint pairs carry no edge. Dropping them HERE keeps the
     // local union-find (which would NPE on null in compareTo) and the
     // distributed loop (where a null join key silently never propagates,
     // leaving a spurious (null, null) label row) in exact agreement.
-    val pairs = pairsRaw.filter(col(idA).isNotNull && col(idB).isNotNull)
+    val pairs = raw.filter(col(idA).isNotNull && col(idB).isNotNull)
     // Near-dup pair graphs are usually TINY relative to the corpus (the
     // verified duplicate pairs, not the documents). Below the threshold,
     // shuffle-round fixed costs dwarf the data — the same size-vs-topology
@@ -550,63 +543,52 @@ object Dedup {
     // (4M edges ≈ tens of MB on the driver; identical min-label result,
     // deterministic). Above it, fall through to the distributed
     // propagation loop, which scales to any edge count.
-    // Cache ownership: only persist (and only release) when the caller
-    // hasn't — nearDupPairs already returns an eagerly-persisted frame
-    // (reads of the filtered view then scan that cache; a second persist
-    // of the filter would just double the memory).
-    val ownCache = pairsRaw.storageLevel == StorageLevel.NONE
-    if (ownCache) pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    val nPairs = pairs.count()
-    if (nPairs <= localThreshold) {
-      val out = componentLabelsLocal(pairs, idA, idB)
-      if (ownCache) pairs.unpersist(blocking = false)
-      return out
+    if (pairs.count() <= localThreshold)
+      componentLabelsLocal(pairs, idA, idB)
+    else {
+      val sc = pairs.sparkSession.sparkContext
+      val edges = scope.cache(
+        pairs.select(col(idA).as("src"), col(idB).as("dst"))
+          .union(pairs.select(col(idB).as("src"), col(idA).as("dst"))))
+      var frontier = scope.cache(edges.select(col("src").as("id"))
+        .distinct().withColumn("label", col("id")))
+      var labels = frontier
+      var iter = 0
+      var converged = false
+      while (!converged && iter < maxIters) {
+        val prop = edges.join(labels.withColumnRenamed("id", "src"), "src")
+          .groupBy("dst").agg(min("label").as("in_label"))
+          .withColumnRenamed("dst", "id")
+        // keep old + new label side by side: the SAME cached frame
+        // answers the convergence probe and carries the next frontier —
+        // no second join against the previous labels per round
+        var joined = labels.join(prop, Seq("id"), "left")
+          .select(col("id"), col("label"), least(col("label"),
+            coalesce(col("in_label"), col("label"))).as("nlabel"))
+        if (sc.getCheckpointDir.isDefined && iter % 5 == 4)
+          joined = joined.checkpoint()
+        scope.cache(joined)
+        // FULL count, deliberately not limit(1): a CollectLimit probe can
+        // stop after the first partitions, leaving most of `joined`
+        // UNCACHED — then releasing the previous frontier below would
+        // force the next iteration to recompute those partitions through
+        // an ever-longer uncached lineage. The full scan materializes
+        // every partition into the cache; its cost is one pass over the
+        // frame the iteration just built anyway.
+        val changed = joined.filter(col("nlabel") < col("label")).count()
+        // the probe above materialized `joined` → `edges`: the pair
+        // cache has served its purpose (count + edge build)
+        if (iter == 0) scope.release(raw)
+        scope.release(frontier)
+        frontier = joined
+        labels = joined.select(col("id"), col("nlabel").as("label"))
+        converged = changed == 0
+        iter += 1
+      }
+      // the returned frame reads the final frontier's cache
+      scope.handOff(frontier)
+      labels
     }
-    val sc = pairs.sparkSession.sparkContext
-    val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
-      .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var cached = labels // the frame actually holding the persisted blocks
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
-      val prop = edges.join(labels.withColumnRenamed("id", "src"), "src")
-        .groupBy("dst").agg(min("label").as("in_label"))
-        .withColumnRenamed("dst", "id")
-      // keep old + new label side by side: the SAME cached frame answers
-      // the convergence probe and carries the next frontier — no second
-      // join against the previous labels per round
-      var joined = labels.join(prop, Seq("id"), "left")
-        .select(col("id"), col("label"), least(col("label"),
-          coalesce(col("in_label"), col("label"))).as("nlabel"))
-      if (sc.getCheckpointDir.isDefined && iter % 5 == 4)
-        joined = joined.checkpoint()
-      joined.persist(StorageLevel.MEMORY_AND_DISK)
-      // FULL count, deliberately not limit(1): a CollectLimit probe can
-      // stop after the first partitions, leaving most of `joined`
-      // UNCACHED — then unpersisting the previous frontier below would
-      // force the next iteration to recompute those partitions through
-      // an ever-longer unpersisted lineage. The full scan materializes
-      // every partition into the persist; its cost is one pass over the
-      // frame the iteration just built anyway.
-      val changed = joined.filter(col("nlabel") < col("label")).count()
-      // the probe above materialized `joined` → `edges`; a pair cache WE
-      // created has served its purpose (count + edge build) and can go
-      if (iter == 0 && ownCache) pairs.unpersist(blocking = false)
-      cached.unpersist(blocking = false)
-      cached = joined
-      labels = joined.select(col("id"), col("nlabel").as("label"))
-      converged = changed == 0
-      iter += 1
-    }
-    edges.unpersist(blocking = false)
-    // the returned frame reads the FINAL iteration's persisted blocks;
-    // they are released by the ContextCleaner when the caller drops the
-    // result (same ownership contract as nearDupPairs' verified set)
-    labels
   }
 
   /** Driver-side union-find for sub-threshold pair graphs: same
@@ -781,21 +763,22 @@ object Dedup {
   private def key64(tok: Column): Column = unhex(substring(md5(tok), 1, 16))
 
   /** Shared build side of the decontamination family: the benchmark's
-    * distinct shingle tokens (PERSISTED — caller unpersists when its
-    * plan is built), the driver-built Bloom predicate over them, and
+    * distinct shingle tokens (cached through `keep`, which picks their
+    * lifetime), the driver-built Bloom predicate over them, and
     * the BINARY(8) digest frame. ONE definition so [[decontaminate]]
     * and [[decontaminationReport]] can never drift on the keying
     * (xxhash64 bloom + md5-64 digest); [[shingleBloom]] shares the
     * same xxhash64 convention for the streaming twin. */
   private def decontaminationBenchSide(
       benchmark: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, bloomFpp: Double, nfc: Boolean)
-      : (DataFrame, Column => Column, DataFrame) = {
+      shingleN: Int, bloomFpp: Double, nfc: Boolean,
+      keep: DataFrame => DataFrame): DecontaminationBench = {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.graftbridge.Bridge
-    val benchToks = shingleTable(benchmark, idCol, textCol, shingleN, nfc)
-      .select(explode(col("__s")).as("token")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    graft.util.OptimizerTuning.tune(benchmark.sparkSession)
+    val benchToks = keep(
+      shingleTable(benchmark, idCol, textCol, shingleN, nfc)
+        .select(explode(col("__s")).as("token")).distinct())
     // two driver-side jobs over the (persisted) small side: exact count
     // to size the filter, then the bloom build itself
     val nBench = math.max(benchToks.count(), 1L)
@@ -809,7 +792,7 @@ object Dedup {
       new BloomFilterMightContain(Literal(bloomBytes),
         Bridge.expression(xxhash64(tok))))
     val bench = benchToks.select(key64(col("token")).as("__bd")).distinct()
-    (benchToks, mightContain, bench)
+    DecontaminationBench(mightContain, bench, shingleN, nfc)
   }
 
   /** Benchmark decontamination: drop from `corpus` every doc sharing at
@@ -840,14 +823,13 @@ object Dedup {
     * NFC-first by default on BOTH sides (see [[nfcKey]]): a benchmark
     * question whose crawl copy differs only in Unicode composition must
     * still collide. */
-  /** The PREPARED benchmark side of [[decontaminate]]: the cached
-    * shingle-token frame, the Bloom prefilter predicate, the digest
-    * join table, and the shingle parameters they were built with
+  /** The PREPARED benchmark side of [[decontaminate]]: the Bloom
+    * prefilter predicate, the digest join table (over the cached
+    * shingle tokens), and the shingle parameters they were built with
     * (carried along so an apply call can never silently mismatch the
     * prepare call's n-gram family). Obtain via
     * [[prepareDecontamination]]; consume via [[decontaminateWith]]. */
   final case class DecontaminationBench private[dedup] (
-      private[dedup] val benchToks: DataFrame,
       private[dedup] val mightContain: Column => Column,
       private[dedup] val bench: DataFrame,
       private[dedup] val shingleN: Int,
@@ -859,22 +841,19 @@ object Dedup {
     * guide §2.6) so a pipeline can overlap this build with an
     * INDEPENDENT earlier stage — in q4/q8 the benchmark Bloom now
     * builds concurrently with the selection/dedup front instead of
-    * serializing after it. */
+    * serializing after it. The token cache is a [[CacheScope.handOff]]:
+    * it lives until the query boundary, and a handle may be applied
+    * any number of times. */
   def prepareDecontamination(benchmark: DataFrame, idCol: String,
                              textCol: String, shingleN: Int = 5,
                              bloomFpp: Double = 0.01,
-                             nfc: Boolean = true): DecontaminationBench = {
-    graft.util.OptimizerTuning.tune(benchmark.sparkSession)
-    val (benchToks, mightContain, bench) = decontaminationBenchSide(
-      benchmark, idCol, textCol, shingleN, bloomFpp, nfc)
-    DecontaminationBench(benchToks, mightContain, bench, shingleN, nfc)
-  }
+                             nfc: Boolean = true): DecontaminationBench =
+    decontaminationBenchSide(benchmark, idCol, textCol, shingleN,
+      bloomFpp, nfc, CacheScope.handOff)
 
   /** Apply a [[prepareDecontamination]] handle to a corpus — the lazy
     * half of [[decontaminate]] (same plan, same semantics; the n-gram
-    * family rides in the handle). Releases the handle's build-side
-    * cache before returning, exactly as [[decontaminate]] does — call
-    * once per prepared handle. */
+    * family rides in the handle). */
   def decontaminateWith(corpus: DataFrame, prepared: DecontaminationBench,
                         idCol: String, textCol: String,
                         corpusTokensCol: Option[String] = None)
@@ -892,21 +871,20 @@ object Dedup {
       .select(col(idCol), key64(col("token")).as("__bd"))
     val contaminated = corpusSh.join(prepared.bench, Seq("__bd"), "left_semi")
       .select(col(idCol)).distinct()
-    val out = corpus.join(contaminated, Seq(idCol), "left_anti")
-    // release the build-side cache; the lazy plan recomputes the (small)
-    // benchmark side once more when the caller executes
-    prepared.benchToks.unpersist(blocking = false)
-    out
+    corpus.join(contaminated, Seq(idCol), "left_anti")
   }
 
   def decontaminate(corpus: DataFrame, benchmark: DataFrame, idCol: String,
                     textCol: String, shingleN: Int = 5,
                     bloomFpp: Double = 0.01, nfc: Boolean = true,
                     corpusTokensCol: Option[String] = None): DataFrame =
-    decontaminateWith(corpus,
-      prepareDecontamination(benchmark, idCol, textCol, shingleN,
-        bloomFpp, nfc),
+  CacheScope.run { scope =>
+    // one-shot: the token cache serves the Bloom build only, and the
+    // lazy plan recomputes the (small) benchmark side when it executes
+    decontaminateWith(corpus, decontaminationBenchSide(benchmark, idCol,
+      textCol, shingleN, bloomFpp, nfc, scope.cache),
       idCol, textCol, corpusTokensCol)
+  }
 
   /** Per-document contamination REPORT — the measurement half of
     * [[decontaminate]]: before dropping anything, a corpus owner wants
@@ -927,20 +905,22 @@ object Dedup {
   def decontaminationReport(corpus: DataFrame, benchmark: DataFrame,
                             idCol: String, textCol: String,
                             shingleN: Int = 5, bloomFpp: Double = 0.01,
-                            nfc: Boolean = true): DataFrame = {
-    graft.util.OptimizerTuning.tune(corpus.sparkSession)
-    val (benchToks, mightContain, bench) = decontaminationBenchSide(
-      benchmark, idCol, textCol, shingleN, bloomFpp, nfc)
+                            nfc: Boolean = true): DataFrame =
+  CacheScope.run { scope =>
+    // the token cache serves the Bloom build only: the lazy report
+    // recomputes the (small) benchmark side when the caller executes
+    val prep = decontaminationBenchSide(
+      benchmark, idCol, textCol, shingleN, bloomFpp, nfc, scope.cache)
     // per-doc shingle arrays are already distinct (hash-set Shingles),
     // so both counts are DISTINCT-shingle counts without a distinct
     val docSh = shingleTable(corpus, idCol, textCol, shingleN, nfc)
       .select(col(idCol), explode(col("__s")).as("token"))
     val tot = docSh.groupBy(idCol).agg(count(lit(1)).as("n_shingles"))
-    val hits = docSh.filter(mightContain(col("token")))
+    val hits = docSh.filter(prep.mightContain(col("token")))
       .select(col(idCol), key64(col("token")).as("__bd"))
-      .join(bench, Seq("__bd"), "left_semi")
+      .join(prep.bench, Seq("__bd"), "left_semi")
       .groupBy(idCol).agg(count(lit(1)).as("n_overlap"))
-    val out = corpus.select(col(idCol))
+    corpus.select(col(idCol))
       .join(tot, Seq(idCol), "left")
       .join(hits, Seq(idCol), "left")
       .select(col(idCol),
@@ -950,8 +930,6 @@ object Dedup {
         when(col("n_shingles") === 0, lit(0.0))
           .otherwise(col("n_overlap").cast("double") /
             col("n_shingles").cast("double")))
-    benchToks.unpersist(blocking = false)
-    out
   }
 
   /** Driver-built Bloom filter (serialized sketch bytes) over a benchmark
@@ -964,17 +942,18 @@ object Dedup {
   def shingleBloom(benchmark: DataFrame, textCol: String,
                    shingleN: Int = 5, fpp: Double = 0.01,
                    nfc: Boolean = true): Array[Byte] = {
-    val toks = graft.util.Partitioning.spread(benchmark)
-      .select(CaptionStats.tokens(lower(nfcKey(col(textCol), nfc)))
-        .as("__toks"))
-      .filter(size(col("__toks")) >= shingleN)
-      .select(explode(shinglesFromToks(col("__toks"), shingleN)).as("token"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = math.max(toks.count(), 1L)
-    val bloom = toks.select(xxhash64(col("token")).as("__h"))
-      .stat.bloomFilter("__h", n, fpp)
-    toks.unpersist(blocking = false)
+    val bloom = CacheScope.run { scope =>
+      val toks = scope.cache(graft.util.Partitioning.spread(benchmark)
+        .select(CaptionStats.tokens(lower(nfcKey(col(textCol), nfc)))
+          .as("__toks"))
+        .filter(size(col("__toks")) >= shingleN)
+        .select(explode(shinglesFromToks(col("__toks"), shingleN))
+          .as("token"))
+        .distinct())
+      val n = math.max(toks.count(), 1L)
+      toks.select(xxhash64(col("token")).as("__h"))
+        .stat.bloomFilter("__h", n, fpp)
+    }
     val bos = new java.io.ByteArrayOutputStream()
     bloom.writeTo(bos)
     bos.toByteArray
@@ -1977,17 +1956,15 @@ object Dedup {
     * is released. */
   def imageNearDupPairsFromBytes(df: DataFrame, idCol: String,
                                  dataCol: String, maxHamming: Int = 10,
-                                 maxBucket: Int = 10000): DataFrame = {
-    val hashes = df.select(col(idCol),
-      graft.images.PerceptualHash.dHashCol(col(dataCol)).as("__phash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = imageNearDupPairs(hashes, idCol, "__phash", maxHamming,
-      maxBucket)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                                 maxBucket: Int = 10000): DataFrame =
+  CacheScope.run { scope =>
+    val hashes = scope.cache(df.select(col(idCol),
+      graft.images.PerceptualHash.dHashCol(col(dataCol)).as("__phash")))
+    val out = CacheScope.handOff(imageNearDupPairs(hashes, idCol,
+      "__phash", maxHamming, maxBucket))
     out.count() // materialize while the hash cache is alive
     Metrics.logDrops("imageNearDupPairs bucket cap",
       imageBucketCapReport(hashes, idCol, "__phash", maxBucket))
-    hashes.unpersist(blocking = false)
     out
   }
 
@@ -2036,9 +2013,8 @@ object Dedup {
     val nb = if (nBuckets > 0) nBuckets else suggestedStoreBuckets(df)
     StoreLease.withLease(df.sparkSession,
       StoreLease.forTable(df.sparkSession, tablePrefix),
-      "writeSignatureStore") { _ =>
-      val sh = shingleTable(df, idCol, textCol, shingleN)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      "writeSignatureStore") { _ => CacheScope.run { scope =>
+      val sh = scope.cache(shingleTable(df, idCol, textCol, shingleN))
       sh.count() // materialize the shared cache ONCE, up front: both
       // writers below read it, and racing its first materialization
       // from two threads would duplicate the shingle compute
@@ -2049,7 +2025,7 @@ object Dedup {
       // settles BOTH writes before leaving the lease scope (r22: a
       // first-await failure must not release the lease with the
       // sibling's saveAsTable still running — single-writer hazard).
-      try graft.util.Overlap.both(df.sparkSession) {
+      graft.util.Overlap.both(df.sparkSession) {
         lshBands(signaturesFrom(sh, idCol, k), idCol, bands,
             rowsPer(k, bands))
           .select(bandJoinKey.as("bk"), col(idCol))
@@ -2060,8 +2036,8 @@ object Dedup {
         sh.write.mode("overwrite").option("path", s"$path/shingles")
           .bucketBy(nb, idCol).sortBy(idCol)
           .format("parquet").saveAsTable(s"${tablePrefix}_shingles")
-      } finally sh.unpersist(blocking = false)
-    }
+      }
+    }}
   }
 
   /** Bucket-count derivation for the signature stores: estimated store
@@ -2147,7 +2123,7 @@ object Dedup {
     def storedIds(table: String): DataFrame =
       spark.table(table).select(col(idCol)).distinct()
     StoreLease.withLease(spark, StoreLease.forTable(spark, tablePrefix),
-      "absorbIntoSignatureStore") { _ =>
+      "absorbIntoSignatureStore") { _ => CacheScope.run { scope =>
       // tokenize+shingle ONCE over the union of both tables' fresh docs
       // (= docs absent from at least one table; in the no-crash common
       // case that is simply the new batch), then restrict per table —
@@ -2158,9 +2134,8 @@ object Dedup {
               .intersect(storedIds(s"${tablePrefix}_shingles")),
             Seq(idCol), "left_anti")
         else docs
-      val sh = shingleTable(freshUnion, idCol, textCol, shingleN,
-          tokensCol = tokensCol)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sh = scope.cache(shingleTable(freshUnion, idCol, textCol, shingleN,
+        tokensCol = tokensCol))
       def freshFor(frame: DataFrame, table: String): DataFrame =
         if (idempotent)
           frame.join(storedIds(table), Seq(idCol), "left_anti")
@@ -2173,8 +2148,7 @@ object Dedup {
       freshFor(sh, s"${tablePrefix}_shingles")
         .write.mode("append").bucketBy(nBuckets, idCol).sortBy(idCol)
         .format("parquet").saveAsTable(s"${tablePrefix}_shingles")
-      sh.unpersist(blocking = false)
-    }
+    }}
   }
 
   /** Per-bucket doc counts over the store's band table — groupBy on the
@@ -2206,11 +2180,9 @@ object Dedup {
     * a store doc drop that store doc in the whole-corpus run, not the
     * shard doc, and are ignored here (the anti-join never sees them).
     *
-    * EAGER like [[nearDupPairs]]: the small loser set materializes
-    * while the shard's shingle cache is alive, then EVERY cache this
-    * call created is released before it returns — in the per-shard
-    * production loop this function serves, a persisted frame per call
-    * would accumulate in the CacheManager unboundedly. Loser sets up
+    * EAGER like [[nearDupPairs]], but EVERY cache this call makes is
+    * function-scoped (a per-shard production loop would otherwise
+    * accumulate one per call). Loser sets up
     * to `maxLocalLosers` ids (the production-typical case: the set is
     * the shard docs that DROP, not the shard) are collected into a
     * broadcast local relation, which also removes the anti-join's
@@ -2227,19 +2199,16 @@ object Dedup {
                         k: Int = 12, bands: Int = 4, shingleN: Int = 3,
                         maxBucket: Int = 10000,
                         maxLocalLosers: Long = 1L << 22,
-                        tokensCol: Option[String] = None): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+                        tokensCol: Option[String] = None): DataFrame =
+  CacheScope.run { scope =>
     val spark = shard.sparkSession
-    val shardSh = shingleTable(shard, idCol, textCol, shingleN,
-      tokensCol = tokensCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val shardB = lshBands(signaturesFrom(shardSh, idCol, k), idCol,
-      bands, rowsPer(k, bands))
-      .select(bandJoinKey.as("bk"), col(idCol))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val losers = shardLoserIds(shardSh, shardB, idCol, tablePrefix,
-      threshold, maxBucket)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val shardSh = scope.cache(shingleTable(shard, idCol, textCol, shingleN,
+      tokensCol = tokensCol))
+    val shardB = scope.cache(lshBands(signaturesFrom(shardSh, idCol, k),
+        idCol, bands, rowsPer(k, bands))
+      .select(bandJoinKey.as("bk"), col(idCol)))
+    val losers = scope.cache(shardLoserIds(shardSh, shardB, idCol,
+      tablePrefix, threshold, maxBucket))
     val nLosers = losers.count() // materialize while shard caches alive
     // recall-loss report while the shard band cache is alive: one small
     // aggregate over cached bands + the shuffle-free store bucket scan
@@ -2254,11 +2223,8 @@ object Dedup {
       } else if (spark.sparkContext.getCheckpointDir.isDefined) {
         losers.checkpoint() // lineage cut to reliable files; cache can go
       } else {
-        losers // unpersisted below: recomputes on execute (see scaladoc)
+        losers // released below: recomputes on execute (see scaladoc)
       }
-    losers.unpersist(blocking = false)
-    shardSh.unpersist(blocking = false)
-    shardB.unpersist(blocking = false)
     shard.join(loserSide, Seq(idCol), "left_anti")
   }
 

@@ -41,10 +41,6 @@ object TextFunctions {
   def addPunct(c: Column): Column =
     concat(regexp_replace(trim(c), "\\.+$", ""), lit(". "))
 
-  /** X9: image filename pattern `wikicaps_{id}.{fmt}` (`utils.py:83`). */
-  def imageFileName(id: Column, fmt: String): Column =
-    format_string(s"wikicaps_%d.$fmt", id)
-
   /** X11: HTML → prose, the boilerplate-strip step every web corpus runs
     * before the text filters (t12/t14 expect prose, not markup):
     * drop `<script>`/`<style>` blocks and comments whole, strip remaining

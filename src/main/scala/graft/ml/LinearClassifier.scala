@@ -3,6 +3,8 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.CacheScope
+
 /** Linear quality classifier over hashed text features — the
   * curated-vs-crawl document filter of the GPT-3 / CCNet pipelines
   * (Brown et al. 2020 §A; Wenzek et al. 2020), restated ORACLE-CHECKABLY:
@@ -49,30 +51,32 @@ object LinearClassifier {
     aggregate(zip_with(x, array(w.map(lit): _*), (a, b) => a * b),
       lit(0L), (acc, v) => acc + v)
 
+  /** `keep` columns plus the ±1 label `__y` and features `__x` of `df`,
+    * spread first: the md5-per-token feature pass is per-row expensive
+    * and a small-file scan otherwise runs it on ONE partition (r21). */
+  private def features(df: DataFrame, textCol: String, labelCol: String,
+                       keep: Column*): DataFrame =
+    graft.util.Partitioning.spread(df).select(keep ++ Seq(
+      col(labelCol).cast("long").as("__y"),
+      hashedFeatures(col(textCol)).as("__x")): _*)
+
+  /** `rounds` batch-perceptron epochs over a materialized feature frame. */
+  private def epochs(feat: DataFrame, rounds: Int): Seq[Long] =
+    (1 to rounds).foldLeft(Seq.fill(Dim)(0L)) { (w, _) =>
+      val upd = feat
+        .filter(col("__y") * dot(col("__x"), w) <= 0L)
+        .select(posexplode(col("__x")).as(Seq("__d", "__v")), col("__y"))
+        .groupBy("__d")
+        .agg(sum(col("__y") * col("__v")).as("__u"))
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      w.indices.map(d => w(d) + upd.getOrElse(d, 0L))
+    }
+
   /** Train `rounds` batch-perceptron epochs; `labelCol` must be ±1.
     * Returns the 17 learned weights. */
   def trainPerceptron(df: DataFrame, textCol: String, labelCol: String,
-                      rounds: Int): Seq[Long] = {
-    // spread: the md5-per-token feature pass is per-row expensive and a
-    // small-file scan otherwise runs it on ONE partition (r21)
-    val feat = graft.util.Partitioning.spread(df)
-      .select(col(labelCol).cast("long").as("__y"),
-        hashedFeatures(col(textCol)).as("__x"))
-      .persist()
-    try {
-      var w: Seq[Long] = Seq.fill(Dim)(0L)
-      for (_ <- 1 to rounds) {
-        val upd = feat
-          .filter(col("__y") * dot(col("__x"), w) <= 0L)
-          .select(posexplode(col("__x")).as(Seq("__d", "__v")),
-            col("__y"))
-          .groupBy("__d")
-          .agg(sum(col("__y") * col("__v")).as("__u"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-        w = w.indices.map(d => w(d) + upd.getOrElse(d, 0L))
-      }
-      w
-    } finally { feat.unpersist(); () }
+                      rounds: Int): Seq[Long] = CacheScope.run { s =>
+    epochs(s.cache(features(df, textCol, labelCol)), rounds)
   }
 
   /** Score a frame with learned weights: integer score = w·x and the
@@ -88,27 +92,13 @@ object LinearClassifier {
     * iterate over it, and the returned score frame reads the SAME
     * checkpoint — [[trainPerceptron]] + [[score]] as separate calls
     * would pay the md5 feature pass twice (once cached for training,
-    * once re-derived for scoring). Checkpoint blocks are
-    * ContextCleaner-collected when the result frame is dropped (the
-    * q4 stage-boundary pattern). */
+    * once re-derived for scoring). The checkpoint lives until the query
+    * boundary ([[CacheScope.query]]; the q4 stage-boundary pattern). */
   def classify(df: DataFrame, idCol: String, textCol: String,
                labelCol: String, rounds: Int): DataFrame = {
-    // spread before the checkpoint: see trainPerceptron (r21)
-    val feat = graft.util.Partitioning.spread(df)
-      .select(col(idCol),
-        col(labelCol).cast("long").as("__y"),
-        hashedFeatures(col(textCol)).as("__x"))
+    val feat = features(df, textCol, labelCol, col(idCol))
       .localCheckpoint()
-    var w: Seq[Long] = Seq.fill(Dim)(0L)
-    for (_ <- 1 to rounds) {
-      val upd = feat
-        .filter(col("__y") * dot(col("__x"), w) <= 0L)
-        .select(posexplode(col("__x")).as(Seq("__d", "__v")), col("__y"))
-        .groupBy("__d")
-        .agg(sum(col("__y") * col("__v")).as("__u"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      w = w.indices.map(d => w(d) + upd.getOrElse(d, 0L))
-    }
+    val w = epochs(feat, rounds)
     feat.select(col(idCol), dot(col("__x"), w).as("score"))
       .withColumn("pred", when(col("score") > 0L, 1L).otherwise(-1L))
   }

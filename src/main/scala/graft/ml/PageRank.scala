@@ -3,6 +3,8 @@ package graft.ml
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.CacheScope
+
 /** Fixed-iteration PageRank over an edge list — the canonical iterative
   * graph computation a curation pipeline reaches for when ranking
   * interlinked documents (citation/link graphs, near-dup clusters, seed
@@ -44,7 +46,7 @@ object PageRank {
     *              else `localCheckpoint` (executor-loss caveat applies;
     *              set a checkpoint dir on real clusters). Makes the call
     *              EAGER (checkpoints run jobs during the build) and
-    *              unpersists the two static caches before returning —
+    *              releases the two static caches before returning —
     *              the returned frame no longer references them. Each
     *              reliable checkpoint leaves a full (node, r) copy in
     *              the checkpoint dir; Spark only deletes them when
@@ -53,23 +55,23 @@ object PageRank {
     *              dir, when looping many pageranks. 0 (the
     *              default) keeps today's fully-lazy plan, whose depth
     *              grows linearly with `iters`: fine to ~10 iterations,
-    *              not to 50.
+    *              not to 50; the returned frame reads the static caches,
+    *              so they are hand-offs released at the query boundary.
     * @return (node, r) — r in integer micro-units
     */
   def pagerank(nodes: DataFrame, edges: DataFrame, iters: Int,
-               checkpointEvery: Int = 0): DataFrame = {
+               checkpointEvery: Int = 0): DataFrame = CacheScope.run { s =>
     // both static sides are re-read EVERY iteration (nodes twice: rank
-    // rebuild + the previous rank's lineage) — persist them or the node
+    // rebuild + the previous rank's lineage) — cache them or the node
     // distinct and the out-degree join re-execute iters× (the d6 shared-
     // shingle-table discipline; at the m11 fixture size the remaining
     // cost is AQE stage overhead of the 5-stage chain, but at graph
-    // scale the recomputation would dominate). With checkpointEvery = 0
-    // the cache lifecycle is the session's: callers doing many pageranks
-    // can unpersist explicitly.
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // scale the recomputation would dominate)
+    val keep: DataFrame => DataFrame =
+      if (checkpointEvery > 0) s.cache else CacheScope.handOff
     val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("__od"))
-    val e = edges.join(outdeg, "src").persist(lvl)
-    val n = nodes.persist(lvl)
+    val e = keep(edges.join(outdeg, "src"))
+    val n = keep(nodes)
     val sc = nodes.sparkSession.sparkContext
     def truncate(df: DataFrame): DataFrame =
       if (sc.getCheckpointDir.isDefined) df.checkpoint()
@@ -90,11 +92,6 @@ object PageRank {
         truncate(next)
       else next
     }
-    if (checkpointEvery > 0) {
-      val fin = truncate(out)
-      e.unpersist(blocking = false)
-      n.unpersist(blocking = false)
-      fin
-    } else out
+    if (checkpointEvery > 0) truncate(out) else out
   }
 }

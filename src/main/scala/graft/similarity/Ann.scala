@@ -3,7 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.util.StoreLease
+import graft.util.{CacheScope, StoreLease}
 
 /** Similarity search over embedding columns (north-star extension).
   *
@@ -573,36 +573,33 @@ object Ann {
       s"centroid table (vector dims ${dims.mkString(",")})")
     val dim = dims.head
     StoreLease.withLease(spark, StoreLease.forDir(path),
-      "absorbIvfIndex") { lease =>
+      "absorbIvfIndex") { lease => CacheScope.run { scope =>
       // before the append, even when idempotent=false; our own lease
       // lets recovery proceed (it is foreign leases that block a heal)
       healCells(spark, path, Some(lease))
       val guarded = guardVecDim(batch, vecCol, dim, s"index at $path")
-      val assigned = assignArgmax(guarded, idCol, vecCol, rows,
-        cdf.schema("cid").dataType, cdf.schema("__ce").dataType)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val fresh: Option[DataFrame] =
-          if (idempotent) {
-            // bounded by the centroid count — cells form the cid domain.
-            // This collect doubles as the emptiness probe (r22: the
-            // former separate batch.isEmpty job), so an empty batch is
-            // a no-op without its own driver job.
-            val touched = assigned.select("cid").distinct().collect()
-              .map(_.get(0))
-            if (touched.isEmpty) None // empty batch: a no-op
-            else {
-              val existing = openCells(spark, path, Some(lease))
-                .filter(col("cid").isin(touched: _*)).select(col(idCol))
-              Some(assigned.join(existing, Seq(idCol), "left_anti"))
-            }
-          } else if (assigned.isEmpty) None // no-op, not an error
-          else Some(assigned)
-        fresh.foreach(_.hint("rebalance", col("cid"))
-          .write.mode("append").partitionBy("cid")
-          .parquet(s"$path/cells"))
-      } finally assigned.unpersist(blocking = false)
-    }
+      val assigned = scope.cache(assignArgmax(guarded, idCol, vecCol,
+        rows, cdf.schema("cid").dataType, cdf.schema("__ce").dataType))
+      val fresh: Option[DataFrame] =
+        if (idempotent) {
+          // bounded by the centroid count — cells form the cid domain.
+          // This collect doubles as the emptiness probe (r22: the
+          // former separate batch.isEmpty job), so an empty batch is
+          // a no-op without its own driver job.
+          val touched = assigned.select("cid").distinct().collect()
+            .map(_.get(0))
+          if (touched.isEmpty) None // empty batch: a no-op
+          else {
+            val existing = openCells(spark, path, Some(lease))
+              .filter(col("cid").isin(touched: _*)).select(col(idCol))
+            Some(assigned.join(existing, Seq(idCol), "left_anti"))
+          }
+        } else if (assigned.isEmpty) None // no-op, not an error
+        else Some(assigned)
+      fresh.foreach(_.hint("rebalance", col("cid"))
+        .write.mode("append").partitionBy("cid")
+        .parquet(s"$path/cells"))
+    }}
   }
 
   /** Per-query IVF top-k for a BATCH of query vectors — the keyed,
@@ -749,18 +746,17 @@ object Ann {
       s"compactIvfIndex: cells at $path has columns " +
         s"[${cells.columns.mkString(", ")}] — idCol '$idCol' must be " +
         "one of them (and not the partition column 'cid')")
-    // each salt pass is its own write job — persist so the table is
+    // each salt pass is its own write job — cache so the table is
     // scanned once, not filesPerCell times (released before the swap)
-    if (filesPerCell > 1)
-      cells.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    CacheScope.run { scope =>
+      val src = if (filesPerCell > 1) scope.cache(cells) else cells
       (0 until filesPerCell).foreach { s =>
-        cells.filter(pmod(xxhash64(col(idCol)), lit(filesPerCell)) === s)
+        src.filter(pmod(xxhash64(col(idCol)), lit(filesPerCell)) === s)
           .repartition(col("cid"))
           .write.mode("append").partitionBy("cid")
           .parquet(tmp.toString)
       }
-    } finally if (filesPerCell > 1) cells.unpersist(blocking = false)
+    }
     fs.delete(bak, true) // a fully-swapped older backup, superseded
     require(fs.rename(live, bak),
       s"compaction swap: rename $live -> $bak failed")
@@ -794,19 +790,17 @@ object Ann {
   def semDedup(corpus: DataFrame, idCol: String, vecCol: String,
                nCentroids: Int, threshold: Double,
                maxCluster: Int = 10000): DataFrame = {
-    // persisted: four branches (cluster counts, both pair sides, the
+    // cached: four branches (cluster counts, both pair sides, the
     // final keep anti-join) consume the assignment with DIFFERENT
     // column prunings, so exchange subtrees cannot canonicalize equal
     // and the scan + per-(row × centroid) dot products + per-id window
     // would otherwise recompute per branch (the asofJoinBucketed
-    // caveat). MEMORY_AND_DISK spills at corpus scale; the cache lives
-    // for the session (the d6 shared-table discipline) — callers doing
-    // many semDedups over distinct corpora should unpersist via
-    // `spark.catalog.clearCache()` or materialize the result.
-    val assigned = ivfAssign(corpus, idCol, vecCol, nCentroids)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // caveat). The returned frame reads it, so it is a hand-off: it
+    // lives until the query boundary.
+    val assigned = CacheScope.handOff(
+      ivfAssign(corpus, idCol, vecCol, nCentroids))
     // recall-loss: run [[semDedupClusterCapReport]] after this — it
-    // reads the same session-lived assignment cache, so the report
+    // reads the same assignment cache while it lives, so the report
     // costs one aggregate over cached rows
     val okClusters = assigned.groupBy("cid")
       .agg(count(lit(1)).as("__csz"))
@@ -833,9 +827,9 @@ object Ann {
     * (dropped_groups, dropped_members) counting the clusters whose pair
     * search was skipped at the same parameters (see
     * [[graft.util.Metrics]]). Run it AFTER semDedup with identical
-    * arguments: the assignment plan is the same, so it reads the
-    * session-lived assignment cache — one aggregate over cached rows,
-    * no recompute of the per-(row × centroid) dot products. */
+    * arguments in the same query: the assignment plan is the same, so
+    * it reads semDedup's assignment cache — one aggregate over cached
+    * rows, no recompute of the per-(row × centroid) dot products. */
   def semDedupClusterCapReport(corpus: DataFrame, idCol: String,
                                vecCol: String, nCentroids: Int,
                                maxCluster: Int = 10000): DataFrame =

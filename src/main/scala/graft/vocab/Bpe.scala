@@ -2,7 +2,8 @@ package graft.vocab
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.util.CacheScope
 
 /** Byte-pair-encoding tokenizer TRAINING and segmentation (Sennrich et
   * al. 2016, "Neural Machine Translation of Rare Words with Subword
@@ -112,13 +113,12 @@ object Bpe {
     * bound — correct for any weights, just unbatched. */
   def learnMerges(words: DataFrame, wordCol: String, countCol: String,
                   nMerges: Int, batchPrefetch: Int = 512)
-  : Seq[(String, String, Long)] = {
+  : Seq[(String, String, Long)] = CacheScope.run { scope =>
     require(nMerges >= 0, "nMerges must be non-negative")
     require(batchPrefetch >= 1, "batchPrefetch must be >= 1")
-    var cur = words
+    var cur = scope.cache(words
       .select(spaced(col(wordCol)).as("s"),
-        col(countCol).cast("long").as("n"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        col(countCol).cast("long").as("n")))
     // batching is sound only for non-negative weights (see scaladoc);
     // a count-delta histogram falls back to one pair per round.
     // r21: this one aggregate ALSO materializes the cache (it reads
@@ -166,17 +166,15 @@ object Bpe {
           }
         }
         out ++= batch
-        val next = cur
+        val next = scope.cache(cur
           .select(batch.foldLeft(col("s")) { case (acc, (a, b, _)) =>
             replace(acc, lit(s" $a $b "), lit(s" $a$b "))
-          }.as("s"), col("n"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+          }.as("s"), col("n")))
         next.count() // materialize before releasing the parent
-        cur.unpersist(blocking = false)
+        scope.release(cur)
         cur = next
       }
     }
-    cur.unpersist(blocking = false)
     out.toSeq
   }
 

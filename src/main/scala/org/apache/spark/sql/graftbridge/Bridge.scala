@@ -18,14 +18,19 @@ object Bridge {
   def expression(c: Column): Expression =
     ColumnNodeToExpressionConverter(c.node)
 
-  /** Whether the session's CacheManager holds NO persisted plans —
-    * observability for cache-ownership contracts (e.g. the per-shard
-    * dedup loop must release every cache it creates; a leaked persist
-    * accumulates across shards). `sharedState.cacheManager` is
+  /** The number of plans the session's CacheManager holds —
+    * observability for cache-ownership contracts (a leaked cache
+    * accumulates across calls). `sharedState.cacheManager` is
     * `private[sql]` in Spark 4 — same shim rationale as above. */
-  def cacheIsEmpty(spark: org.apache.spark.sql.SparkSession): Boolean =
+  def cachedEntries(spark: org.apache.spark.sql.SparkSession): Int =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sharedState.cacheManager.isEmpty
+      .sharedState.cacheManager.numCachedEntries
+
+  /** Whether `rdd` backs a `Dataset.localCheckpoint` (never a cache
+    * entry's buffers). `checkpointData` is `private[spark]`. */
+  def isLocalCheckpoint(rdd: org.apache.spark.rdd.RDD[_]): Boolean =
+    rdd.checkpointData.exists(
+      _.isInstanceOf[org.apache.spark.rdd.LocalRDDCheckpointData[_]])
 
   /** The bucket count of a catalog table, if it is bucketed — appends
     * into a bucketed store must repeat the EXISTING layout exactly

@@ -218,7 +218,7 @@ class SignatureStoreSpec extends SparkSpec {
       val out = Dedup.dedupShardAgainst(shard, "doc_id", "text", pfx,
         threshold = 0.5)
       // the call is eager; by return time nothing may remain persisted
-      Bridge.cacheIsEmpty(spark) shouldBe true
+      Bridge.cachedEntries(spark) shouldBe 0
       // the collected loser set broadcasts: the anti-join is a
       // BroadcastHashJoin LeftAnti with NO shard-side Exchange
       val plan = out.queryExecution.executedPlan.toString
@@ -226,7 +226,7 @@ class SignatureStoreSpec extends SparkSpec {
       plan should include ("LeftAnti")
       // executing the result must not re-create any cache either
       out.count()
-      Bridge.cacheIsEmpty(spark) shouldBe true
+      Bridge.cachedEntries(spark) shouldBe 0
     }
   }
 

@@ -132,9 +132,9 @@ class BpeSpec extends SparkSpec {
     spark.catalog.clearCache()
     val d = Seq(("a", 3L), ("b", 2L)).toDF("w", "n")
     Bpe.learnMerges(d, "w", "n", 5) shouldBe Seq.empty
-    Bridge.cacheIsEmpty(spark) shouldBe true
+    Bridge.cachedEntries(spark) shouldBe 0
     Bpe.learnMerges(fixture, "w", "n", 8)
-    Bridge.cacheIsEmpty(spark) shouldBe true
+    Bridge.cachedEntries(spark) shouldBe 0
     // zero requested merges = identity segmentation into characters
     fixture.select(Bpe.segment(col("w"), Seq.empty).as("t"))
       .filter(col("w") === "low").head().getSeq[String](0) shouldBe
