@@ -28,9 +28,10 @@ import org.apache.spark.sql.functions._
   *    absolute 10⁻⁷ floor for tiny values). l (or, for the product
   *    forms, the exact long product of two such rows) is then split
   *    by bits, l = a·2⁴⁰ + b·2²⁰ + c (arithmetic shift + mask — exact
-  *    for either sign), and the parts accumulate in three plain LONG
-  *    sums: with |l| ≤ 8·10¹⁸, |a| ≤ 8·10⁶ and b,c ∈ [0, 2²⁰), so the
-  *    partial sums stay exact (no overflow) beyond 10¹² rows/group.
+  *    for either sign), and the parts accumulate in three
+  *    overflow-checked LONG sums: with |l| ≤ 8·10¹⁸, |a| ≤ 8·10⁶ and
+  *    b,c ∈ [0, 2²⁰), so the partial sums stay exact beyond 10¹²
+  *    rows/group, and a group past that fails instead of wrapping.
   *  - slow path (out of the caller's fast range, the ambiguous
   *    boundary zone, NaN, ±Inf, NULL): the row goes through the
   *    ORIGINAL decimal cast(s) and a decimal sum — exactly the old
@@ -68,14 +69,32 @@ object ExactSum {
     Scaled(l, v.isNotNull && abs(v) <= lit(absMax) && !amb)
   }
 
-  /** Split-sum of a scaled-long expression under a fast flag, plus the
-    * decimal recombination: Σ_fast l as exact decimal(38,0). The three
-    * partial sums are (head, null-iff-no-fast-rows) probes too. */
-  private def splitSums(l: Column, fast: Column): (Column, Column) = {
+  /** Long sums of `parts` — each null exactly on the rows where `l` is
+    * null — with Spark's `try_sum` overflow check: null when `l` has no
+    * non-null row; a group in which any sum leaves the long range at any
+    * point of its accumulation fails naming [[dsum]]'s group-size limit
+    * instead of returning a wrapped value, whatever
+    * `spark.sql.ansi.enabled` says. One `count(l)` serves every part. */
+  private[analytics] def checkedSums(l: Column, parts: Column*): Seq[Column] = {
+    val sums = parts.map(try_sum)
+    val overflowed = count(l) > 0 && sums.map(_.isNull).reduce(_ || _)
+    sums.map(when(overflowed, raise_error(lit(
+      "ExactSum.dsum: a long partial sum overflowed: the group exceeds " +
+        "the fast path's group-size limit (about 1.26e12 same-sign " +
+        "maximum-magnitude rows); sum it as a decimal or add a " +
+        "grouping level"))).otherwise(_))
+  }
+
+  /** Split-sum of a scaled-long expression that is null off the fast
+    * rows, plus the decimal recombination: Σ_fast l as exact
+    * decimal(38,0). The three partial sums are (head, null-iff-no-fast-
+    * rows) probes too. `l` sits outside any conditional here, so Spark
+    * evaluates it once per row for all four aggregates (subexpression
+    * elimination skips conditional branches). */
+  private def splitSums(l: Column): (Column, Column) = {
     val mask = lit((1L << 20) - 1)
-    val sa = sum(when(fast, shiftright(l, 40)))
-    val sb = sum(when(fast, shiftright(l, 20).bitwiseAND(mask)))
-    val scl = sum(when(fast, l.bitwiseAND(mask)))
+    val Seq(sa, sb, scl) = checkedSums(l, shiftright(l, 40),
+      shiftright(l, 20).bitwiseAND(mask), l.bitwiseAND(mask))
     // Σ_fast l = sa·2⁴⁰ + sb·2²⁰ + sc, all ≤ 10¹⁹ → decimal(24,0)
     // operands; (24,0)×(13,0) → (38,0) is exact at the cap
     val scaledTotal = sa.cast("decimal(24,0)") *
@@ -104,9 +123,9 @@ object ExactSum {
   /** Exact decimal-sum of a DOUBLE column, returned as double —
     * drop-in for `sum(c.cast("decimal(24,6)")).cast("double")`.
     * GROUP-SIZE LIMIT: see [[dsumScaled]] — exact to ~1.26·10¹²
-    * same-sign max-magnitude fast rows PER GROUP, wrapping silently
-    * past it (the replaced decimal(24,6) sum stayed exact to ~10¹⁵
-    * rows and then errored rather than wrapping). */
+    * same-sign max-magnitude fast rows PER GROUP, failing past it (the
+    * replaced decimal(24,6) sum stayed exact to ~10¹⁵ rows and then
+    * failed too). */
   def dsum(c: Column): Column = dsumScaled(c, 24, 6, Fast6AbsMax)
 
   /** Drop-in for `sum(c.cast("decimal($prec,$scale)")).cast("double")`.
@@ -114,15 +133,20 @@ object ExactSum {
     * (required here); rows beyond it take the exact decimal slow path
     * (including its ANSI overflow semantics past `prec` digits).
     *
-    * GROUP-SIZE LIMIT (r22, ADVICE): the three long partial sums are
-    * exact only while they fit a long — the top split carries
-    * |l >> 40| ≤ ~7.3·10⁶ per max-magnitude row, so ~1.26·10¹²
-    * same-sign worst-case fast rows per group wrap SILENTLY (typical
-    * magnitudes push the bound far higher, and mixed signs cancel).
-    * The decimal form this replaces stayed exact to ~1.25·10¹⁵ rows
-    * and then nulled/errored instead of wrapping. Above ~10¹² rows
-    * per group (the SCALE.md regime for ungrouped 100 TB sums), use
-    * the plain decimal sum or add an intermediate grouping level. */
+    * GROUP-SIZE LIMIT: the three long partial sums are exact only
+    * while they fit a long — the top split carries |l >> 40| ≤ ~7.3·10⁶
+    * per max-magnitude row, so ~1.26·10¹² same-sign worst-case fast rows
+    * per group overflow (typical magnitudes push the bound far higher,
+    * and mixed signs cancel, though [[checkedSums]] also fails on an
+    * intermediate overflow that later rows would have cancelled). Such a
+    * group FAILS with an error naming this limit; it never returns a
+    * wrapped value. The decimal form this replaces stayed exact to
+    * ~1.25·10¹⁵ rows and then failed as well. An exact decimal fallback
+    * for just the overflowing group is not built in: it would need a
+    * second, decimal aggregate in every group's buffer — the per-row
+    * BigDecimal cost this fast path exists to avoid. Above ~10¹² rows
+    * per group (the SCALE.md regime for ungrouped 100 TB sums), use the
+    * plain decimal sum or add an intermediate grouping level. */
   def dsumScaled(c: Column, prec: Int, scale: Int,
                  absMax: Double): Column = {
     require(absMax * math.pow(10, scale) <= 8.1e18,
@@ -130,7 +154,7 @@ object ExactSum {
         "fit a long with headroom")
     val v = c.cast("double")
     val sv = scaled(v, scale, absMax)
-    val (fastScaled, anyFast) = splitSums(sv.value, sv.fast)
+    val (fastScaled, anyFast) = splitSums(when(sv.fast, sv.value))
     val slow = sum(when(sv.fast, lit(null).cast("double")).otherwise(v)
       .cast(s"decimal($prec,$scale)"))
     assemble(fastScaled, anyFast, slow, scale)
@@ -148,8 +172,7 @@ object ExactSum {
     val xv = x.cast("double"); val yv = y.cast("double")
     val sX = scaled(xv, sx, xAbsMax); val sY = scaled(yv, sy, yAbsMax)
     val fast = sX.fast && sY.fast
-    val (fastScaled, anyFast) =
-      splitSums(when(fast, sX.value * sY.value), fast)
+    val (fastScaled, anyFast) = splitSums(when(fast, sX.value * sY.value))
     // the WHOLE decimal product sits under otherwise(): fast rows must
     // not pay either cast (casts cannot diverge on fast rows — their
     // ranges are far inside the decimal's digits)
@@ -169,8 +192,7 @@ object ExactSum {
     // (1 − round6(d)) scaled at 6 dp = 10⁶ − scaled6(d), exactly
     val oneMinus = lit(1000000L) - sD.value
     val fast = sP.fast && sD.fast
-    val (fastScaled, anyFast) =
-      splitSums(when(fast, sP.value * oneMinus), fast)
+    val (fastScaled, anyFast) = splitSums(when(fast, sP.value * oneMinus))
     // whole decimal product under otherwise() — see dsumProduct
     val slow = sum(when(fast, lit(null)).otherwise(
       pv.cast("decimal(12,2)") *

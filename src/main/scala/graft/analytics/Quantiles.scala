@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,17 +14,17 @@ import graft.util.CacheScope
   * ObjectHashAggregate whose buffer holds EVERY value of the column and is
   * merged onto a single final task — at 100 TB that is tens of GB in one
   * aggregation buffer (OOM), and it was the slowest query in the r2 bench.
-  * Here instead:
   *
-  *  - [[globalQuantiles]] (ungrouped, used by A2–A5 column stats):
-  *    range-partition + local sort of the value column, a tiny per-partition
-  *    histogram, then a targeted k-th-element lookup — the classic
-  *    distributed selection. No task ever holds more than one partition's
-  *    slice; memory is bounded by partition size, not column size.
-  *  - grouped quantiles (A10 boxplot): rank-vs-count window arithmetic
-  *    ([[withRanks]] + [[quantileCont]]) — one shuffle on the group key, the
-  *    per-group sort spills via the window operator instead of accumulating
-  *    in an agg buffer, and groups ≪ rows keeps tasks balanced.
+  * Here there is ONE exact selection, [[groupedQuantilesWithExtras]]: a
+  * bracket-and-select keyed by group, three map-side-combined codegen
+  * aggregates and no wide shuffle of the values. Global quantiles of
+  * several columns (A2–A5 column stats, [[globalQuantiles]]) are its
+  * special case keyed by column: [[melt]] first turns the columns into
+  * (`__k`, `__v`) rows. When the selection gives up it has two
+  * fallbacks, each with identical results at the old cost: global
+  * callers run [[globalQuantilesBySort]] (range partition + local sort),
+  * the A10 boxplot runs the Window rank form ([[withRanks]] +
+  * [[quantileCont]]).
   *
   * Interpolation reproduces Spark's `Percentile.getPercentile` bit-for-bit
   * ((1−frac)·lo + frac·hi with exact frac ∈ {0, .25, .5, .75}), so results
@@ -33,360 +33,228 @@ import graft.util.CacheScope
   */
 object Quantiles {
 
-  /** Conf: per-column bucket count of the exact-histogram bracket pass
-    * of [[globalQuantiles]] (pass B). More buckets ⇒ narrower candidate
-    * bands in pass C at the cost of a bigger (but still tiny —
-    * buckets × columns rows) histogram collect. */
-  val SelectBucketsConf = "spark.graft.quantiles.selectBuckets"
-
-  /** Driver cap on collected (value, count) band rows in
-    * [[globalQuantiles]] before it falls back to the range-partition
-    * selection. ~32 B/row ⇒ the default 4M rows ≈ 130 MB worst case. */
+  /** Driver cap on collected (value, count) band rows in pass C of
+    * [[groupedQuantilesWithExtras]] before it gives up and the caller's
+    * fallback runs. ~32 B/row ⇒ the default 4M rows ≈ 130 MB worst
+    * case. */
   val MaxBandRowsConf = "spark.graft.quantiles.maxBandRows"
 
-  /** Exact quantiles of several numeric columns at several fractions, fully
-    * distributed. Returns (colName, p) -> value; columns with zero non-null
-    * rows are absent from the map.
+  /** Pass-B histogram buckets per key: more buckets ⇒ narrower pass-C
+    * bands at the cost of a bigger (still tiny) histogram collect. */
+  private val Buckets = 8192
+
+  /** Keys the selection takes at most: its per-key `when` chains and
+    * the histogram collect grow with the key count. */
+  private val MaxKeys = 64
+
+  /** `cols` as (`__k` = the column's index in `cols`, `__v` = CAST(c AS
+    * DOUBLE)) rows, one per non-null value, with the `keep` columns
+    * carried along. The key is the index, not the name: every pass
+    * hashes and compares it per value, and an int costs less there than
+    * a string (a2_a5's three passes at sf0.1 on local[4]: 1.41 s keyed
+    * by name, 0.93 s by index). The stack Generator sits over the scan
+    * (never over an Aggregate), so nothing re-executes. */
+  private def melt(df: DataFrame, cols: Seq[String],
+                   keep: String*): DataFrame =
+    df.selectExpr(keep :+ (s"stack(${cols.length}, " +
+      cols.zipWithIndex.map { case (c, i) => s"$i, CAST(`$c` AS DOUBLE)" }
+        .mkString(", ") + ") AS (__k, __v)"): _*)
+      .where(col("__v").isNotNull)
+
+  /** The 0-based ranks [[interpolate]] reads for `ps` over `n` values. */
+  private def neededRanks(n: Long, ps: Seq[Double]): Seq[Long] =
+    ps.flatMap { p =>
+      val lo = math.floor((n - 1) * p).toLong
+      Seq(lo, math.min(lo + 1, n - 1))
+    }.distinct.sorted
+
+  /** `quantile_cont` at `p` of `n` values, `at(i)` being the i-th
+    * smallest (0-based): Spark's `Percentile.getPercentile` form. */
+  private def interpolate(n: Long, p: Double)(at: Long => Double): Double = {
+    val pos = (n - 1) * p
+    val lo = math.floor(pos).toLong
+    val frac = pos - lo
+    if (frac == 0.0) at(lo)
+    else (1.0 - frac) * at(lo) + frac * at(math.min(lo + 1, n - 1))
+  }
+
+  /** Exact quantiles of several numeric columns at several fractions.
+    * Returns (colName, p) -> value; columns with zero non-null rows are
+    * absent from the map. */
+  def globalQuantiles(df: DataFrame, cols: Seq[String],
+                      ps: Seq[Double]): Map[(String, Double), Double] =
+    exact(df, cols, ps, Nil)._1
+
+  /** The exact backend: the grouped selection over the melted columns,
+    * keyed by `__k`, and [[globalQuantilesBySort]] when it gives up.
+    * Also returns the pass-A row of every column with a non-null value,
+    * which carries `extras` (aggregates over `__v`) by alias. */
+  private def exact(df: DataFrame, cols: Seq[String], ps: Seq[Double],
+                    extras: Seq[Column])
+  : (Map[(String, Double), Double], Map[String, Row]) = {
+    require(cols.nonEmpty && ps.nonEmpty, "need at least one column and p")
+    val (rowsA, selected) = groupedQuantilesWithExtras(melt(df, cols),
+      "__v", Seq("__k"), ps, extras, maxRows = cols.length)
+    val qs = selected match {
+      case Some(byKey) =>
+        for ((k, byP) <- byKey; (p, q) <- byP)
+          yield (cols(k.head.asInstanceOf[Int]), p) -> q
+      case None => globalQuantilesBySort(df, cols, ps)
+    }
+    (qs, rowsA.map(r => cols(r.getInt(0)) -> r).toMap)
+  }
+
+  /** A group-key value the driver-side lookups cannot match: NaN (Scala
+    * NaN != NaN, while Spark's grouping treats NaN = NaN), a binary
+    * array (reference equality), or a value `lit()` cannot encode
+    * (structs, maps) — the per-key predicates rebuild keys as literals,
+    * and an unencodable key must fall back, not throw 'Unsupported
+    * literal type' out of a stats call. */
+  private def unmatchable(kv: Any): Boolean = kv match {
+    case null => false
+    case d: java.lang.Double => d.isNaN
+    case f: java.lang.Float => f.isNaN
+    case _: Array[_] => true
+    case _: java.lang.Number | _: String | _: java.lang.Boolean => false
+    case other => scala.util.Try(lit(other)).isFailure
+  }
+
+  /** Exact PER-KEY quantiles by BRACKET-AND-SELECT: three
+    * map-side-combined, fully-codegen aggregate scans keyed by
+    * `groupCols` and NO wide shuffle of the values (vs a range-partition
+    * or Window sort, whose parallelism is the key count: a 3-group
+    * boxplot over a 600k-row column sorted on 3 tasks). Everything is
+    * EXACT counting — no sketch and no approximation anywhere:
     *
-    * BRACKET-AND-SELECT (r21): three map-side-combined, fully-codegen
-    * aggregate scans and NO wide shuffle — vs the previous
-    * range-partition selection's sample job + full shuffle of every
-    * value + persist + histogram + window lookup (still available as
-    * [[globalQuantilesBySort]], the fallback; measured 2.6 s → ~1.1 s
-    * on a2_a5 at sf0.1). Everything here is EXACT counting — there is
-    * no sketch and no approximation anywhere:
-    *
-    *  - pass A: per column — non-null count, NaN count, min, max
-    *    (one wide codegen aggregate; [[quantilesWithExtras]] lets
-    *    Summary.columnStats fuse its own min/max/mean into this scan);
-    *  - pass B: per column, EXACT counts over a fixed-width value
-    *    histogram between min and max ([[SelectBucketsConf]] buckets);
-    *    the cumulative counts locate, for every needed 0-based rank,
-    *    the ONE bucket containing it;
-    *  - pass C: distinct (value, count) pairs of just those buckets —
-    *    the bucket-index expression is literally the same as pass B's,
-    *    so the counts agree row-for-row; the exact k-th element is
-    *    then driver-side rank arithmetic (bucket's cumulative offset +
+    *  - pass A: per key — non-null count, NaN count, min, max, with the
+    *    caller's `extras` fused into the same scan;
+    *  - pass B: per key, EXACT counts over a fixed-width value histogram
+    *    of [[Buckets]] buckets between min and max; the cumulative counts
+    *    locate, for every needed 0-based rank, the ONE bucket holding it;
+    *  - pass C: distinct (value, count) pairs of just those buckets — the
+    *    bucket-index expression is literally the same as pass B's, so the
+    *    counts agree row-for-row; the exact k-th element is then
+    *    driver-side rank arithmetic (bucket's cumulative offset +
     *    cumulative in-bucket counts).
     *
-    * Fallback to the sort-based selection (identical results, the old
-    * cost) when: NaNs are present (their sort position is not a value
-    * comparison), a min/max is infinite or the bucket width
-    * under/overflows (degenerate value range), or the selected buckets'
-    * distinct values overflow [[MaxBandRowsConf]] (adversarial skew —
-    * a near-constant column with its mass inside one bucket). */
-  def globalQuantiles(df: DataFrame, cols: Seq[String],
-                      ps: Seq[Double]): Map[(String, Double), Double] = {
-    require(cols.nonEmpty && ps.nonEmpty, "need at least one column and p")
-    val a = passAAggs(cols)
-    val rA = df.agg(a.head, a.tail: _*).head()
-    selectFromPassA(df, cols, ps, rA)
-  }
-
-  /** Pass-A aggregate columns of [[globalQuantiles]] — exposed so
-    * [[quantilesWithExtras]] can fuse a caller's aggregates into the
-    * same scan. */
-  private def passAAggs(cols: Seq[String]): Seq[Column] =
-    cols.flatMap { c =>
-      val v = col(s"`$c`").cast("double")
-      Seq(count(v).as(s"${c}__n"),
-        count(when(isnan(v), 1)).as(s"${c}__nan"),
-        min(v).as(s"${c}__mn"), max(v).as(s"${c}__mx"))
-    }
-
-  /** Passes B/C of [[globalQuantiles]], driven by the pass-A row. */
-  private def selectFromPassA(df: DataFrame, cols: Seq[String],
-                              ps: Seq[Double], rA: org.apache.spark.sql.Row)
-  : Map[(String, Double), Double] = {
-    val conf = df.sparkSession.conf
-    val nBuckets = conf.get(SelectBucketsConf, "8192").toInt
-    val maxBand = conf.get(MaxBandRowsConf, (1 << 22).toString).toLong
-    val counts: Map[String, Long] =
-      cols.map(c => c -> rA.getAs[Long](s"${c}__n")).toMap
-    if (cols.exists(c => rA.getAs[Long](s"${c}__nan") > 0L))
-      return globalQuantilesBySort(df, cols, ps)
-    val live = cols.filter(c => counts(c) > 0)
-    if (live.isEmpty) return Map.empty
-    val mn = live.map(c => c -> rA.getAs[Double](s"${c}__mn")).toMap
-    val mx = live.map(c => c -> rA.getAs[Double](s"${c}__mx")).toMap
-    // 0-based global indices needed per column: floor/ceil of each p
-    val needed: Map[String, Seq[Long]] = live.map { c =>
-      val n = counts(c)
-      c -> ps.flatMap { p =>
-        val lo = math.floor((n - 1) * p).toLong
-        Seq(lo, math.min(lo + 1, n - 1))
-      }.distinct.sorted
-    }.toMap
-    val valueAt = scala.collection.mutable.Map.empty[(String, Long), Double]
-    // constant columns resolve from pass A alone
-    val multi = live.filter { c =>
-      if (mn(c) == mx(c)) {
-        needed(c).foreach(gi => valueAt((c, gi)) = mn(c)); false
-      } else true
-    }
-    if (multi.nonEmpty) {
-      if (multi.exists(c => mn(c).isInfinite || mx(c).isInfinite))
-        return globalQuantilesBySort(df, cols, ps)
-      val width: Map[String, Double] =
-        multi.map(c => c -> ((mx(c) - mn(c)) / nBuckets)).toMap
-      if (width.values.exists(w =>
-          w <= 0.0 || w.isInfinite || w.isNaN)) // under/overflowed range
-        return globalQuantilesBySort(df, cols, ps)
-      def perColD(m: Map[String, Double]): Column =
-        multi.tail.foldLeft(lit(m(multi.head))) { (acc, c) =>
-          when(col("__name") === c, lit(m(c))).otherwise(acc)
-        }
-      val stackExpr = s"stack(${multi.length}, " +
-        multi.map(c => s"'$c', CAST(`$c` AS DOUBLE)").mkString(", ") +
-        ") AS (__name, __v)"
-      // THE bucket-index expression — built once, used verbatim in both
-      // pass B and pass C so their row sets can never disagree
-      val bIdx = least(lit((nBuckets - 1).toLong), greatest(lit(0L),
-        floor((col("__v") - perColD(mn)) / perColD(width))))
-      def melted = df.selectExpr(stackExpr).where(col("__v").isNotNull)
-        .withColumn("__b", bIdx)
-      // pass B: exact per-bucket counts (≤ buckets × columns rows)
-      val hist: Map[String, Array[Long]] = {
-        val h = multi.map(c => c -> Array.fill(nBuckets)(0L)).toMap
-        melted.groupBy("__name", "__b").agg(count(lit(1)).as("__c"))
-          .collect().foreach { r =>
-            h(r.getString(0))(r.getLong(1).toInt) = r.getLong(2)
-          }
-        h
-      }
-      // crossing bucket + its cumulative offset for every needed rank:
-      // the FIRST b with cum(b) ≤ gi < cum(b+1) (a binary search over
-      // cum would land on an arbitrary member of an equal run — empty
-      // buckets make cum non-strictly increasing)
-      val crossing: Map[String, Map[Long, (Int, Long)]] = multi.map { c =>
-        val cum = hist(c).scanLeft(0L)(_ + _) // cum(i) = rows in buckets < i
-        c -> needed(c).map { gi =>
-          var b = 0
-          while (cum(b + 1) <= gi) b += 1
-          gi -> (b, cum(b)) // gi ∈ [cum(b), cum(b+1))
-        }.toMap
-      }.toMap
-      val wantedBuckets: Map[String, Set[Long]] =
-        crossing.map { case (c, m) => c -> m.values.map(_._1.toLong).toSet }
-      // pass C: distinct values + counts of just the crossing buckets
-      val inWanted = multi.tail.foldLeft(
-        col("__name") === multi.head &&
-          col("__b").isin(wantedBuckets(multi.head).toSeq: _*)) { (acc, c) =>
-        (col("__name") === c &&
-          col("__b").isin(wantedBuckets(c).toSeq: _*)) || acc
-      }
-      val rows = melted.where(inWanted)
-        .groupBy("__name", "__b", "__v").agg(count(lit(1)).as("__c"))
-        .limit(math.min(maxBand + 1, Int.MaxValue.toLong).toInt)
-        .collect()
-      if (rows.length > maxBand) // adversarial skew: band too wide
-        return globalQuantilesBySort(df, cols, ps)
-      val byCol = rows.groupBy(_.getString(0))
-      for (c <- multi) {
-        val byBucket = byCol.getOrElse(c, Array.empty).groupBy(_.getLong(1))
-        for ((gi, (b, off)) <- crossing(c)) {
-          var cum = off
-          val vs = byBucket.getOrElse(b.toLong, Array.empty)
-            .map(r => (r.getDouble(2), r.getLong(3))).sortBy(_._1)
-          val it = vs.iterator
-          var found = false
-          while (!found && it.hasNext) {
-            val (v, k) = it.next()
-            if (gi < cum + k) { valueAt((c, gi)) = v; found = true }
-            cum += k
-          }
-          if (!found) // cannot happen (exact counts); belt-and-braces
-            return globalQuantilesBySort(df, cols, ps)
-        }
-      }
-    }
-    (for {
-      c <- live
-      p <- ps
-    } yield {
-      val n = counts(c)
-      val pos = (n - 1) * p
-      val lo = math.floor(pos).toLong
-      val frac = pos - lo
-      val vlo = valueAt((c, lo))
-      val q =
-        if (frac == 0.0) vlo
-        else {
-          val vhi = valueAt((c, math.min(lo + 1, n - 1)))
-          (1.0 - frac) * vlo + frac * vhi // Percentile.getPercentile form
-        }
-      (c, p) -> q
-    }).toMap
-  }
-
-  /** Exact PER-GROUP quantiles via the same bracket-and-select as
-    * [[globalQuantiles]] (r21) — for a BOUNDED group count, this
-    * replaces the per-group Window sort (one reducer per group: a
-    * 3-group boxplot over a 600k-row column sorted on 3 tasks) with
-    * three map-side-combined codegen aggregates keyed by group.
-    * `extras` fuse into pass A exactly as in [[quantilesWithExtras]].
-    *
-    * Returns one (passA row, p → exact value) pair per group with ≥ 1
-    * non-null value (groups of only nulls are absent — the Window
-    * form's na.drop semantics), or None when the shape is unusable and
-    * the caller should run its Window/sort form instead: more than
-    * `maxGroups` groups (the when-chain literals and the histogram
-    * collect are sized by it), NaNs present, infinite/degenerate
-    * ranges, or a band over [[MaxBandRowsConf]]. */
+    * Returns pass A's rows (the group columns, then `extras` by alias,
+    * then `__qn/__qnan/__qmn/__qmx`; at most `maxRows` + 1 of them) and,
+    * unless the selection gave up, key -> (p -> exact value) for every
+    * key with ≥ 1 non-null value (all-null keys are absent — the Window
+    * form's na.drop semantics). It gives up, and the caller runs its
+    * fallback, on more than [[MaxKeys]] keys, NaN values (their sort
+    * position is not a value comparison), an infinite min/max or a
+    * bucket width that under/overflows, a band over [[MaxBandRowsConf]]
+    * (adversarial skew: a near-constant key with its mass inside one
+    * bucket), or an [[unmatchable]] key. */
   private[analytics] def groupedQuantilesWithExtras(
       df: DataFrame, valueCol: String, groupCols: Seq[String],
-      ps: Seq[Double], extras: Seq[Column], maxGroups: Int = 64)
-  : Option[Seq[(org.apache.spark.sql.Row, Map[Double, Double])]] = {
+      ps: Seq[Double], extras: Seq[Column], maxRows: Int = MaxKeys)
+  : (Seq[Row], Option[Map[Seq[Any], Map[Double, Double]]]) = {
     require(groupCols.nonEmpty && ps.nonEmpty, "need groups and ps")
-    val conf = df.sparkSession.conf
-    val nBuckets = conf.get(SelectBucketsConf, "8192").toInt
-    val maxBand = conf.get(MaxBandRowsConf, (1 << 22).toString).toLong
+    val maxBand = df.sparkSession.conf
+      .get(MaxBandRowsConf, (1 << 22).toString).toLong
     val v = col(s"`$valueCol`").cast("double")
+    val keyCols = groupCols.map(c => col(s"`$c`"))
     val aggsA = extras ++ Seq(count(v).as("__qn"),
       count(when(isnan(v), 1)).as("__qnan"),
       min(v).as("__qmn"), max(v).as("__qmx"))
-    val rowsA = df.groupBy(groupCols.map(c => col(s"`$c`")): _*)
-      .agg(aggsA.head, aggsA.tail: _*)
-      .limit(maxGroups + 1).collect()
-    if (rowsA.length > maxGroups) return None
-    if (rowsA.exists(_.getAs[Long]("__qnan") > 0L)) return None
-    // group-KEY values the driver-side Seq-equality lookups below
-    // cannot key correctly: NaN (Scala NaN != NaN, while Spark's
-    // grouping treats NaN = NaN) and binary arrays (reference
-    // equality) — plus (r22, ADVICE) any value `lit()` cannot encode
-    // (struct rows, maps): the isGroup predicates below rebuild keys
-    // as literals, and an unencodable key must bail to the sort form,
-    // not throw 'Unsupported literal type' out of a stats call.
-    val badKey = rowsA.exists(r => groupCols.indices.exists { i =>
-      r.get(i) match {
-        case null => false
-        case d: java.lang.Double => d.isNaN
-        case f: java.lang.Float => f.isNaN
-        case _: Array[_] => true
-        case _: java.lang.Number | _: String | _: java.lang.Boolean =>
+    val rowsA = df.groupBy(keyCols: _*).agg(aggsA.head, aggsA.tail: _*)
+      .limit(maxRows + 1).collect().toSeq
+    def key(r: Row): Seq[Any] = groupCols.indices.map(r.get)
+
+    def select(): Option[Map[Seq[Any], Map[Double, Double]]] = {
+      if (rowsA.length > MaxKeys ||
+          rowsA.exists(_.getAs[Long]("__qnan") > 0L) ||
+          rowsA.exists(r => key(r).exists(unmatchable)))
+        return None
+      val live = rowsA.filter(_.getAs[Long]("__qn") > 0L)
+      val n = live.map(r => key(r) -> r.getAs[Long]("__qn")).toMap
+      val mn = live.map(r => key(r) -> r.getAs[Double]("__qmn")).toMap
+      val mx = live.map(r => key(r) -> r.getAs[Double]("__qmx")).toMap
+      val valueAt =
+        scala.collection.mutable.Map.empty[(Seq[Any], Long), Double]
+      // constant keys resolve from pass A alone
+      val multi = live.map(key).filter { k =>
+        if (mn(k) == mx(k)) {
+          neededRanks(n(k), ps).foreach(gi => valueAt((k, gi)) = mn(k))
           false
-        case other => scala.util.Try(lit(other)).isFailure
+        } else true
       }
-    })
-    if (badKey) return None
-    // the Window form's na.drop: all-null groups are absent
-    val live = rowsA.filter(_.getAs[Long]("__qn") > 0L).toSeq
-    if (live.isEmpty) return Some(Seq.empty)
-    def key(r: org.apache.spark.sql.Row): Seq[Any] =
-      groupCols.indices.map(r.get)
-    val n: Map[Seq[Any], Long] =
-      live.map(r => key(r) -> r.getAs[Long]("__qn")).toMap
-    val mn: Map[Seq[Any], Double] =
-      live.map(r => key(r) -> r.getAs[Double]("__qmn")).toMap
-    val mx: Map[Seq[Any], Double] =
-      live.map(r => key(r) -> r.getAs[Double]("__qmx")).toMap
-    val needed: Map[Seq[Any], Seq[Long]] = live.map { r =>
-      val k = key(r); val nn = n(k)
-      k -> ps.flatMap { p =>
-        val lo = math.floor((nn - 1) * p).toLong
-        Seq(lo, math.min(lo + 1, nn - 1))
-      }.distinct.sorted
-    }.toMap
-    val valueAt =
-      scala.collection.mutable.Map.empty[(Seq[Any], Long), Double]
-    val multi = live.map(key).filter { k =>
-      if (mn(k) == mx(k)) {
-        needed(k).foreach(gi => valueAt((k, gi)) = mn(k)); false
-      } else true
-    }
-    if (multi.nonEmpty) {
-      if (multi.exists(k => mn(k).isInfinite || mx(k).isInfinite))
-        return None
-      val width: Map[Seq[Any], Double] =
-        multi.map(k => k -> ((mx(k) - mn(k)) / nBuckets)).toMap
-      if (width.values.exists(w => w <= 0.0 || w.isInfinite || w.isNaN))
-        return None
-      def isGroup(k: Seq[Any]): Column =
-        groupCols.zip(k).map { case (c, kv) =>
-          col(s"`$c`") <=> lit(kv) }.reduce(_ && _)
-      def perGroupD(m: Map[Seq[Any], Double]): Column =
-        multi.tail.foldLeft(lit(m(multi.head))) { (acc, k) =>
-          when(isGroup(k), lit(m(k))).otherwise(acc)
-        }
-      val inMulti = multi.map(isGroup).reduce(_ || _)
-      val bIdx = least(lit((nBuckets - 1).toLong), greatest(lit(0L),
-        floor((v - perGroupD(mn)) / perGroupD(width))))
-      def melted = df.where(v.isNotNull && inMulti)
-        .select(groupCols.map(c => col(s"`$c`")) :+ v.as("__v") :+
-          bIdx.as("__b"): _*)
-      // pass B: exact per-(group, bucket) counts
-      val hist: Map[Seq[Any], Array[Long]] = {
-        val h = multi.map(k => k -> Array.fill(nBuckets)(0L)).toMap
-        melted.groupBy((groupCols.map(c => col(s"`$c`")) :+
-            col("__b")): _*)
+      if (multi.nonEmpty) {
+        if (multi.exists(k => mn(k).isInfinite || mx(k).isInfinite))
+          return None
+        val width = multi.map(k => k -> ((mx(k) - mn(k)) / Buckets)).toMap
+        if (width.values.exists(w => w <= 0.0 || w.isInfinite || w.isNaN))
+          return None // under/overflowed range
+        def isKey(k: Seq[Any]): Column =
+          keyCols.zip(k).map { case (c, kv) => c <=> lit(kv) }.reduce(_ && _)
+        def perKey(m: Map[Seq[Any], Double]): Column =
+          multi.tail.foldLeft(lit(m(multi.head))) { (acc, k) =>
+            when(isKey(k), lit(m(k))).otherwise(acc)
+          }
+        // THE bucket-index expression — built once, used verbatim in both
+        // pass B and pass C so their row sets can never disagree
+        val bIdx = least(lit((Buckets - 1).toLong), greatest(lit(0L),
+          floor((v - perKey(mn)) / perKey(width))))
+        def melted = df.where(v.isNotNull && multi.map(isKey).reduce(_ || _))
+          .select(keyCols :+ v.as("__v") :+ bIdx.as("__b"): _*)
+        // pass B: exact per-(key, bucket) counts (≤ buckets × keys rows)
+        val hist = multi.map(k => k -> Array.fill(Buckets)(0L)).toMap
+        melted.groupBy(keyCols :+ col("__b"): _*)
           .agg(count(lit(1)).as("__c"))
           .collect().foreach { r =>
-            h(groupCols.indices.map(r.get))(
-              r.getAs[Long]("__b").toInt) = r.getAs[Long]("__c")
+            hist(key(r))(r.getAs[Long]("__b").toInt) = r.getAs[Long]("__c")
           }
-        h
-      }
-      val crossing: Map[Seq[Any], Map[Long, (Int, Long)]] = multi.map { k =>
-        val cum = hist(k).scanLeft(0L)(_ + _)
-        k -> needed(k).map { gi =>
-          var b = 0
-          while (cum(b + 1) <= gi) b += 1
-          gi -> (b, cum(b))
+        // crossing bucket + its cumulative offset for every needed rank:
+        // the FIRST b with cum(b) ≤ gi < cum(b+1) (a binary search over
+        // cum would land on an arbitrary member of an equal run — empty
+        // buckets make cum non-strictly increasing)
+        val crossing: Map[Seq[Any], Map[Long, (Int, Long)]] = multi.map { k =>
+          val cum = hist(k).scanLeft(0L)(_ + _) // cum(i) = rows in buckets < i
+          k -> neededRanks(n(k), ps).map { gi =>
+            var b = 0
+            while (cum(b + 1) <= gi) b += 1
+            gi -> (b, cum(b))
+          }.toMap
         }.toMap
-      }.toMap
-      val wantedBuckets: Map[Seq[Any], Set[Long]] =
-        crossing.map { case (k, m) => k -> m.values.map(_._1.toLong).toSet }
-      val inWanted = multi.map { k =>
-        isGroup(k) && col("__b").isin(wantedBuckets(k).toSeq: _*)
-      }.reduce(_ || _)
-      val rows = melted.where(inWanted)
-        .groupBy((groupCols.map(c => col(s"`$c`")) :+ col("__b") :+
-          col("__v")): _*)
-        .agg(count(lit(1)).as("__c"))
-        .limit(math.min(maxBand + 1, Int.MaxValue.toLong).toInt)
-        .collect()
-      if (rows.length > maxBand) return None
-      val byKey = rows.groupBy(r => groupCols.indices.map(r.get): Seq[Any])
-      for (k <- multi) {
-        val gi2 = groupCols.length
-        val byBucket = byKey.getOrElse(k, Array.empty)
-          .groupBy(_.getLong(gi2))
-        for ((gi, (b, off)) <- crossing(k)) {
-          var cum = off
-          val vs = byBucket.getOrElse(b.toLong, Array.empty)
-            .map(r => (r.getDouble(gi2 + 1), r.getLong(gi2 + 2)))
-            .sortBy(_._1)
-          val it = vs.iterator
-          var found = false
-          while (!found && it.hasNext) {
-            val (vv, c) = it.next()
-            if (gi < cum + c) { valueAt((k, gi)) = vv; found = true }
-            cum += c
+        // pass C: distinct values + counts of just the crossing buckets
+        val inWanted = multi.map { k =>
+          isKey(k) && col("__b").isin(crossing(k).values.map(_._1).toSeq: _*)
+        }.reduce(_ || _)
+        val rows = melted.where(inWanted)
+          .groupBy(keyCols :+ col("__b") :+ col("__v"): _*)
+          .agg(count(lit(1)).as("__c"))
+          .limit(math.min(maxBand + 1, Int.MaxValue.toLong).toInt)
+          .collect()
+        if (rows.length > maxBand) return None
+        val nk = groupCols.length
+        val byKey = rows.groupBy(key)
+        for (k <- multi) {
+          val byBucket = byKey.getOrElse(k, Array.empty).groupBy(_.getLong(nk))
+          for ((gi, (b, off)) <- crossing(k)) {
+            val vs = byBucket.getOrElse(b.toLong, Array.empty)
+              .map(r => (r.getDouble(nk + 1), r.getLong(nk + 2))).sortBy(_._1)
+            var cum = off
+            vs.find { case (_, c) => cum += c; gi < cum } match {
+              case Some((vv, _)) => valueAt((k, gi)) = vv
+              case None => return None // cannot happen; belt-and-braces
+            }
           }
-          if (!found) return None // cannot happen; belt-and-braces
         }
       }
+      Some(live.map { r =>
+        val k = key(r)
+        k -> ps.map(p => p -> interpolate(n(k), p)(gi => valueAt((k, gi))))
+          .toMap
+      }.toMap)
     }
-    Some(live.map { r =>
-      val k = key(r); val nn = n(k)
-      r -> ps.map { p =>
-        val pos = (nn - 1) * p
-        val lo = math.floor(pos).toLong
-        val frac = pos - lo
-        val vlo = valueAt((k, lo))
-        p -> (if (frac == 0.0) vlo
-              else {
-                val vhi = valueAt((k, math.min(lo + 1, nn - 1)))
-                (1.0 - frac) * vlo + frac * vhi
-              })
-      }.toMap
-    })
+    (rowsA, select())
   }
 
   /** The pre-r21 exact path — range partition + local sort + histogram +
-    * targeted k-th lookup. Memory is bounded by partition size at ANY
-    * band width, so [[globalQuantiles]] falls back here when its
-    * bracket band is unusable (NaNs, overflow, violated sketch bound).
+    * targeted k-th lookup, the fallback of the global callers. Memory is
+    * bounded by partition size at ANY band width.
     *
     * One wide shuffle (range partition of the melted single-value rows) +
     * one small aggregate (per-partition histogram, ≤ partitions×cols rows
@@ -396,94 +264,66 @@ object Quantiles {
       ps: Seq[Double]): Map[(String, Double), Double] = {
     require(cols.nonEmpty && ps.nonEmpty, "need at least one column and p")
     val spark = df.sparkSession
-    // melt to (__name, __v): one scan of just the requested columns; the
-    // stack Generator sits over the scan (never over an Aggregate), so no
-    // re-execution pathology
-    val stackExpr = s"stack(${cols.length}, " +
-      cols.map(c => s"'$c', CAST(`$c` AS DOUBLE)").mkString(", ") +
-      ") AS (__name, __v)"
-    val melted = df.selectExpr(stackExpr).where(col("__v").isNotNull)
     val nParts = math.max(spark.sparkContext.defaultParallelism,
       spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    // range partition on (name, value): global order across partitions,
+    // range partition on (key, value): global order across partitions,
     // equal values co-located, so global rank = partition offset + local
     // rank. Persisted because the histogram pass and the lookup pass must
     // see the SAME partitioning (spark_partition_id is recompute-sensitive).
     CacheScope.run { scope =>
-      val sorted = scope.cache(melted
-        .repartitionByRange(nParts, col("__name"), col("__v"))
-        .sortWithinPartitions("__name", "__v")
-        .select(col("__name"), col("__v"),
-          spark_partition_id().as("__pid")))
-      val hist = sorted.groupBy("__pid", "__name").count().collect()
-        .map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
-      val counts: Map[String, Long] =
-        hist.groupBy(_._2).map { case (nm, rs) => nm -> rs.map(_._3).sum }
-      // per name: (pid, firstGlobalIndex, rowsInPid), pids ascending
-      val offsets: Map[String, Seq[(Int, Long, Long)]] =
-        hist.groupBy(_._2).map { case (nm, rs) =>
+      val sorted = scope.cache(melt(df, cols)
+        .repartitionByRange(nParts, col("__k"), col("__v"))
+        .sortWithinPartitions("__k", "__v")
+        .select(col("__k"), col("__v"), spark_partition_id().as("__pid")))
+      val hist = sorted.groupBy("__pid", "__k").count().collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
+      val counts: Map[Int, Long] =
+        hist.groupBy(_._2).map { case (k, rs) => k -> rs.map(_._3).sum }
+      // per key: (pid, firstGlobalIndex, rowsInPid), pids ascending
+      val offsets: Map[Int, Seq[(Int, Long, Long)]] =
+        hist.groupBy(_._2).map { case (k, rs) =>
           var off = 0L
-          nm -> rs.sortBy(_._1).toSeq.map { case (pid, _, cnt) =>
+          k -> rs.sortBy(_._1).toSeq.map { case (pid, _, cnt) =>
             val o = off; off += cnt; (pid, o, cnt)
           }
         }
-      // 0-based global indices needed: floor and ceil of every position
-      val needed: Set[(String, Long)] = (for {
-        c <- cols if counts.getOrElse(c, 0L) > 0
-        n = counts(c)
-        p <- ps
-        lo = math.floor((n - 1) * p).toLong
-        idx <- Seq(lo, math.min(lo + 1, n - 1))
-      } yield (c, idx)).toSet
+      val live = cols.indices.filter(k => counts.getOrElse(k, 0L) > 0)
+      val needed: Set[(Int, Long)] =
+        live.flatMap(k => neededRanks(counts(k), ps).map(k -> _)).toSet
       if (needed.isEmpty) Map.empty
       else {
-        // global index -> (pid, 1-based local rank within (pid, name))
-        val lookups: Set[(Int, String, Long)] = needed.map { case (nm, gi) =>
-          val (pid, off, _) = offsets(nm)
+        // global index -> (pid, 1-based local rank within (pid, key))
+        val lookups: Set[(Int, Int, Long)] = needed.map { case (k, gi) =>
+          val (pid, off, _) = offsets(k)
             .find { case (_, o, cnt) => gi >= o && gi < o + cnt }.get
-          (pid, nm, gi - off + 1)
+          (pid, k, gi - off + 1)
         }
         val pids = lookups.map(_._1).toSeq
-        val w = Window.partitionBy("__pid", "__name").orderBy("__v")
-        val wanted = lookups.map { case (pid, nm, rn) =>
-          col("__pid") === pid && col("__name") === nm && col("__rn") === rn
+        val w = Window.partitionBy("__pid", "__k").orderBy("__v")
+        val wanted = lookups.map { case (pid, k, rn) =>
+          col("__pid") === pid && col("__k") === k && col("__rn") === rn
         }.reduce(_ || _)
-        val valueAt: Map[(String, Long), Double] = sorted
+        val valueAt: Map[(Int, Long), Double] = sorted
           .filter(col("__pid").isin(pids: _*))
           .withColumn("__rn", row_number().over(w))
           .filter(wanted)
-          .select("__pid", "__name", "__rn", "__v")
+          .select("__pid", "__k", "__rn", "__v")
           .collect()
           .map { r =>
-            val pid = r.getInt(0); val nm = r.getString(1)
-            val off = offsets(nm).find(_._1 == pid).get._2
-            (nm, off + r.getInt(2) - 1) -> r.getDouble(3) // row_number is Int
+            val pid = r.getInt(0); val k = r.getInt(1)
+            val off = offsets(k).find(_._1 == pid).get._2
+            (k, off + r.getInt(2) - 1) -> r.getDouble(3) // row_number is Int
           }.toMap
-        (for {
-          c <- cols if counts.getOrElse(c, 0L) > 0
-          p <- ps
-        } yield {
-          val n = counts(c)
-          val pos = (n - 1) * p
-          val lo = math.floor(pos).toLong
-          val frac = pos - lo
-          val vlo = valueAt((c, lo))
-          val q =
-            if (frac == 0.0) vlo
-            else {
-              val vhi = valueAt((c, math.min(lo + 1, n - 1)))
-              (1.0 - frac) * vlo + frac * vhi // Percentile.getPercentile form
-            }
-          (c, p) -> q
-        }).toMap
+        (for (k <- live; p <- ps) yield (cols(k), p) ->
+          interpolate(counts(k), p)(gi => valueAt((k, gi)))).toMap
       }
     }
   }
 
   /** At-scale variant: Spark's `percentile_approx` — a Greenwald–Khanna
     * sketch that is MERGEABLE (map-side partial agg, constant memory per
-    * task, one tiny final merge), vs the exact path's full range-partition
-    * sort. Rank error is bounded by n/`accuracy`, so with the 10k default
+    * task, one tiny final merge), vs the exact path's three passes over
+    * every value. Rank error is bounded by n/`accuracy`, so with the 10k default
     * the reported value sits within ±0.01% of the true rank. Same return
     * shape as [[globalQuantiles]]; columns with zero non-null rows are
     * absent. This is the swap SCALE.md documents for 100 TB — the exact
@@ -505,8 +345,8 @@ object Quantiles {
 
   /** Sketch backend: rank queries from the mergeable bottom-k quantile
     * sketch ([[Sketches.quantileSketch]]) — the third rung of the
-    * at-scale ladder. Exact ([[globalQuantiles]]) pays a full
-    * range-partition sort; [[globalQuantilesApprox]] is
+    * at-scale ladder. Exact ([[globalQuantiles]]) reads every value in
+    * three aggregate passes; [[globalQuantilesApprox]] is
     * Greenwald–Khanna inside one job; THIS form is for when quantile
     * state must OUTLIVE the job — per-shard sketches persist, absorb
     * per crawl ([[Sketches.quantileSketchMerge]]), and answer later
@@ -528,29 +368,15 @@ object Quantiles {
   : Map[(String, Double), Double] = {
     require(keyCols.nonEmpty && cols.nonEmpty && ps.nonEmpty,
       "need at least one key column, value column, and fraction")
-    val stackExpr = s"stack(${cols.length}, " +
-      cols.map(c => s"'$c', CAST(`$c` AS DOUBLE)").mkString(", ") +
-      ") AS (__name, __v)"
-    val melted = df
-      .withColumn("__key",
-        to_json(struct(keyCols.map(col): _*),
-          Map("ignoreNullFields" -> "false")))
-      .selectExpr("__key", stackExpr)
-      .where(col("__v").isNotNull)
-    val sk = Sketches.quantileSketch(melted, "__name", "__key", "__v", k)
+    val melted = melt(df.withColumn("__key",
+      to_json(struct(keyCols.map(col): _*),
+        Map("ignoreNullFields" -> "false"))), cols, "__key")
+    val sk = Sketches.quantileSketch(melted, "__k", "__key", "__v", k)
     Sketches.sketchQuantiles(sk, ps).collect()
-      .map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2))
+      .map(r => (cols(r.getInt(0)), r.getDouble(1)) -> r.getDouble(2))
       .toMap
   }
 
-  /** Flag-dispatched entry point used by [[graft.analytics.Summary]]:
-    * exact by default (bit-for-bit oracle parity);
-    * `spark.graft.quantiles.approx=true` (optionally
-    * `spark.graft.quantiles.accuracy=N`) runs Greenwald–Khanna
-    * in-job; `spark.graft.quantiles.approx=sketch` (with
-    * `spark.graft.quantiles.sketchKey=<row-unique col[,col...]>`,
-    * optionally `spark.graft.quantiles.sketchK=N`) runs the mergeable
-    * bottom-k sketch whose state can persist across jobs. */
   /** The ONE parser of `spark.graft.quantiles.approx`, shared by every
     * consumer of the key (this dispatcher and
     * [[graft.text.TextAnalysis.surprisalBuckets]]): "exact" | "gk" |
@@ -578,8 +404,8 @@ object Quantiles {
   /** Auto-switch ceiling for the EXACT path, in estimated melted
     * VALUES (rows × requested columns): above it the dispatcher
     * swaps to Greenwald–Khanna with a loud log instead of paying the
-    * exact path's full range-partition sort (and its all-values
-    * shuffle) on a corpus nobody wants it on. `0` (or negative)
+    * exact path's passes over every value (and, on its sort fallback,
+    * an all-values shuffle) on a corpus nobody wants it on. `0` (or negative)
     * disables the switch entirely — what [[graft.Verify]] pins, so
     * the oracle gate can NEVER silently change accuracy contracts no
     * matter what the size estimate says. Estimates come from
@@ -607,7 +433,7 @@ object Quantiles {
 
   /** Estimated melted value count of `cols` in `df`, from Catalyst's
     * planning-time stats on the pruned projection (no job runs).
-    * Column names are backtick-quoted like every backend's stackExpr,
+    * Column names are backtick-quoted like [[melt]]'s stack expression,
     * so a dotted column name dispatches the same way it computes.
     *
     * Returns None when any LEAF of the plan reports the UNKNOWN
@@ -641,27 +467,36 @@ object Quantiles {
       cols.length)
   }
 
+  /** Flag-dispatched entry point used by [[graft.analytics.Summary]]:
+    * exact by default (bit-for-bit oracle parity);
+    * `spark.graft.quantiles.approx=true` (optionally
+    * `spark.graft.quantiles.accuracy=N`) runs Greenwald–Khanna
+    * in-job; `spark.graft.quantiles.approx=sketch` (with
+    * `spark.graft.quantiles.sketchKey=<row-unique col[,col...]>`,
+    * optionally `spark.graft.quantiles.sketchK=N`) runs the mergeable
+    * bottom-k sketch whose state can persist across jobs. */
   def quantiles(df: DataFrame, cols: Seq[String],
                 ps: Seq[Double]): Map[(String, Double), Double] =
     quantilesWithExtras(df, cols, ps, Nil)._1
 
-  /** [[quantiles]] with caller-supplied aggregate columns FUSED into
-    * the exact path's pass-A scan (one aggregate job instead of two —
-    * what Summary.columnStats uses for its min/max/mean row). Backends
-    * that have no pass A (gk / sketch / gk-auto) compute the extras as
-    * their own aggregate — same cost as the caller doing it. Returns
-    * (quantiles map, extras row); the row also carries pass A's
-    * `__n/__nan/__mn/__mx` fields on the exact path (callers read by
-    * alias, so extra fields are inert), and is `Row.empty` when
-    * `extras` is empty off the exact path. */
+  /** [[quantiles]] plus caller-supplied `extras`: aggregates over the
+    * melted `__v` (each requested column as DOUBLE), computed per column
+    * and returned as column name -> row, fields by alias. Every backend
+    * returns this one shape, and a column with no non-null value has no
+    * row. The exact path fuses the extras into its pass-A scan (one
+    * aggregate job instead of two — what Summary.columnStats uses for its
+    * min/max/mean), and its rows also carry pass A's `__qn/__qnan/__qmn/
+    * __qmx`; the gk, sketch and gk-auto backends run one `groupBy(__k)`
+    * aggregate of their own. */
   def quantilesWithExtras(df: DataFrame, cols: Seq[String],
                           ps: Seq[Double], extras: Seq[Column])
-  : (Map[(String, Double), Double], org.apache.spark.sql.Row) = {
+  : (Map[(String, Double), Double], Map[String, Row]) = {
     require(cols.nonEmpty && ps.nonEmpty, "need at least one column and p")
     val conf = df.sparkSession.conf
-    def extrasRow(): org.apache.spark.sql.Row =
-      if (extras.isEmpty) org.apache.spark.sql.Row.empty
-      else df.agg(extras.head, extras.tail: _*).head()
+    def extrasByName(): Map[String, Row] =
+      if (extras.isEmpty) Map.empty
+      else melt(df, cols).groupBy("__k").agg(extras.head, extras.tail: _*)
+        .collect().map(r => cols(r.getInt(0)) -> r).toMap
     approxMode(conf) match {
       case "sketch" =>
         val keyConf = conf.get("spark.graft.quantiles.sketchKey", "")
@@ -676,12 +511,12 @@ object Quantiles {
           keyConf.split(",").toSeq.map(_.trim).filter(_.nonEmpty),
           cols, ps,
           conf.get("spark.graft.quantiles.sketchK", "8192").toInt),
-          extrasRow())
+          extrasByName())
       case "gk" =>
         dispatched("gk")
         (globalQuantilesApprox(df, cols, ps,
           conf.get("spark.graft.quantiles.accuracy", "10000").toInt),
-          extrasRow())
+          extrasByName())
       case _ =>
         // an EXPLICITLY-set approx=false is a caller pinning exactness
         // (a different knob than autoGkThreshold=0, but the same
@@ -704,12 +539,10 @@ object Quantiles {
             s"(Greenwald-Khanna, rank error ≤ n/$accuracy). Set " +
             s"$AutoGkThresholdConf=0 to force exact at any size.")
           dispatched("gk-auto")
-          (globalQuantilesApprox(df, cols, ps, accuracy), extrasRow())
+          (globalQuantilesApprox(df, cols, ps, accuracy), extrasByName())
         } else {
           dispatched("exact")
-          val aggs = extras ++ passAAggs(cols)
-          val rA = df.agg(aggs.head, aggs.tail: _*).head()
-          (selectFromPassA(df, cols, ps, rA), rA)
+          exact(df, cols, ps, extras)
         }
     }
   }

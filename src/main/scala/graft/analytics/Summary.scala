@@ -9,10 +9,11 @@ import org.apache.spark.sql.functions._
   *
   * The per-column min/max/mean/median 16-fold loop of
   * `f30k_vs_coco_vs_wicsmmir_v2.ipynb:16515-16549` collapses into ONE
-  * hash aggregate over all columns plus one distributed exact-median
-  * selection ([[Quantiles]]) — never Spark's exact `percentile`, whose
-  * aggregation buffer holds every value of the column on a single final
-  * task (an OOM at 100 TB and the slowest query of the r2 bench).
+  * distributed exact selection keyed by column ([[Quantiles]]), with
+  * min/max/mean fused into its first scan — never Spark's exact
+  * `percentile`, whose aggregation buffer holds every value of the column
+  * on a single final task (an OOM at 100 TB and the slowest query of the
+  * r2 bench).
   */
 object Summary {
 
@@ -25,44 +26,39 @@ object Summary {
     // (ExactSumSpec) without the per-row BigDecimal tax
     ExactSum.dsum(col(c)) / count(col(c))
 
+  /** Driver-side round(x, 4), same semantics as Spark's round
+    * (shortest-repr BigDecimal, HALF_UP): parity with the DuckDB
+    * oracle's round(quantile_cont(...), 4). */
+  private def r4(v: Double): Double =
+    BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+
   /** A2–A5: one row per input column with min/max/mean/median.
     * Emitted long-form (stat matrix), mirroring the notebook's compare table
     * shape (36 rows of dataset×backend×stat, ipynb:17229-17263).
     *
-    * min/max/mean: one single-pass distributed aggregate (map-side partial
-    * + final; no pre-agg repartition — the input's own partitioning already
-    * parallelizes a cheap aggregate, and an extra shuffle only costs).
-    * Medians: distributed exact k-th-element selection
-    * ([[Quantiles.globalQuantiles]]) — memory bounded by partition size —
-    * or the mergeable `percentile_approx` sketch when
-    * `spark.graft.quantiles.approx=true` (the documented 100 TB swap).
-    * The single wide agg row + the k medians are unpivoted on the driver.
-    * (A `stack` Generator over the Aggregate re-executes the aggregate once
-    * per emitted row — measured 4× the scan cost at sf0.1 — so the 1-row
-    * collect is the scalable shape: the data passes are distributed, only
-    * the k-stat summary crosses the driver.) */
+    * All four come from [[Quantiles.quantilesWithExtras]] over the
+    * columns melted to (column, `__v` = CAST(c AS DOUBLE)): the median
+    * from its exact selection keyed by column (memory bounded by
+    * partition size; the mergeable `percentile_approx` sketch when
+    * `spark.graft.quantiles.approx=true`, the documented 100 TB swap),
+    * and min/max/mean as per-key aggregates over `__v` fused into its
+    * first scan. The cast is monotone and ExactSum casts to double
+    * before anything else, so these equal `min(c)`, `max(c)` and the
+    * exact mean of `c` cast to double. The k stat rows are assembled on
+    * the driver. (A `stack` Generator over an Aggregate re-executes the
+    * aggregate once per emitted row — measured 4× the scan cost at
+    * sf0.1 — so the small collect is the scalable shape.) A column with
+    * no non-null value gets nulls, as SQL's min and `quantile_cont` do. */
   def columnStats(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val aggs = cols.flatMap { c =>
-      Seq(
-        min(col(c)).cast("double").as(s"${c}__min"),
-        max(col(c)).cast("double").as(s"${c}__max"),
-        exactMean(c).as(s"${c}__mean"))
-    }
-    // min/max/mean FUSE into the exact-quantile pass-A scan (one
-    // aggregate job instead of two; r21); non-exact backends compute
-    // the same aggs as their own job — the pre-r21 cost
-    val (medians, wide) =
-      Quantiles.quantilesWithExtras(df, cols, Seq(0.5), aggs)
-    // driver-side round(x, 4), same semantics as Spark's round (shortest-
-    // repr BigDecimal, HALF_UP) — keeps parity with the DuckDB oracle's
-    // round(quantile_cont(...), 4) exactly as the old percentile path did
-    def r4(v: Double): Double =
-      BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val v = col("__v")
+    val (medians, extras) = Quantiles.quantilesWithExtras(df, cols,
+      Seq(0.5), Seq(min(v).as("__min"), max(v).as("__max"),
+        exactMean("__v").as("__mean")))
     val rows = cols.sorted.map { c =>
-      org.apache.spark.sql.Row(c,
-        wide.getAs[Double](s"${c}__min"), wide.getAs[Double](s"${c}__max"),
-        wide.getAs[Double](s"${c}__mean"),
-        r4(medians((c, 0.5))))
+      val e = extras.get(c)
+      def stat(f: String): Any = e.map(r => r.get(r.fieldIndex(f))).orNull
+      org.apache.spark.sql.Row(c, stat("__min"), stat("__max"),
+        stat("__mean"), medians.get((c, 0.5)).map(r4).getOrElse(null))
     }
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("col_name",
@@ -78,36 +74,29 @@ object Summary {
   /** A10: boxplot stats (whis=[0,100] → min/max whiskers, ipynb:17301-17345)
     * per group: min, q25, median, q75, max, mean.
     *
-    * Quartiles via rank-vs-count window arithmetic ([[Quantiles]]): one
-    * shuffle on the group key (the groupBy reuses the window's exchange),
-    * per-group sort spills through the window operator — no agg buffer ever
-    * holds a group's values, unlike exact `percentile`. Null values are
-    * dropped up front (percentile/quantile_cont semantics; min/max/mean
-    * ignore them anyway). */
+    * Quartiles from the exact per-group selection of [[Quantiles]]
+    * (three map-side-combined aggregates keyed by group; min/max/mean
+    * fuse into its first scan) — no agg buffer ever holds a group's
+    * values, unlike exact `percentile`. Where the selection gives up
+    * (more than 64 groups, NaN, band overflow, an unmatchable key) the
+    * Window rank form [[boxplotStatsBySort]] runs instead, with
+    * identical results (spec-pinned). Null values are dropped
+    * (percentile/quantile_cont semantics); all-null groups are absent. */
   def boxplotStats(df: DataFrame, valueCol: String,
                    groupCols: Seq[String]): DataFrame = {
-    // r21: per-group bracket-and-select (Quantiles.groupedQuantiles…)
-    // — three map-side-combined aggregates instead of the per-group
-    // Window sort, whose parallelism is the GROUP COUNT (3 reducers
-    // sorting 600k rows each on a10). min/max/mean fuse into pass A.
-    // Result-identical (spec-pinned vs the Window form); falls back to
-    // the Window form on unusable shapes (many groups, NaN, band
-    // overflow).
     val extras = Seq(
       min(col(valueCol)).cast("double").as("__lo"),
       max(col(valueCol)).cast("double").as("__hi"),
       exactMean(valueCol).as("__mean"))
     Quantiles.groupedQuantilesWithExtras(df, valueCol, groupCols,
       Seq(0.25, 0.5, 0.75), extras) match {
-      case Some(rows) =>
-        def r4(v: Double): Double = BigDecimal(v)
-          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-        val out = rows.map { case (ra, qs) =>
-          org.apache.spark.sql.Row.fromSeq(
-            groupCols.indices.map(ra.get) ++ Seq(
-              ra.getAs[Double]("__lo"), r4(qs(0.25)), r4(qs(0.5)),
-              r4(qs(0.75)), ra.getAs[Double]("__hi"),
-              ra.getAs[Double]("__mean")))
+      case (rowsA, Some(byKey)) =>
+        val out = rowsA.flatMap { ra =>
+          val k = groupCols.indices.map(ra.get)
+          byKey.get(k).map(qs => org.apache.spark.sql.Row.fromSeq(k ++ Seq(
+            ra.getAs[Double]("__lo"), r4(qs(0.25)), r4(qs(0.5)),
+            r4(qs(0.75)), ra.getAs[Double]("__hi"),
+            ra.getAs[Double]("__mean"))))
         }
         val schema = org.apache.spark.sql.types.StructType(
           groupCols.map(c => df.schema(c)) ++
@@ -118,7 +107,7 @@ object Summary {
           new java.util.ArrayList[org.apache.spark.sql.Row](
             scala.jdk.CollectionConverters.SeqHasAsJava(out).asJava),
           schema).orderBy(groupCols.map(col): _*)
-      case None => boxplotStatsBySort(df, valueCol, groupCols)
+      case (_, None) => boxplotStatsBySort(df, valueCol, groupCols)
     }
   }
 

@@ -162,4 +162,61 @@ class ExactSumSpec extends SparkSpec {
       }
     }
   }
+
+  /** Every message on `t`'s cause chain, joined. */
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).mkString(" | ")
+
+  test("checkedSums at Long.MaxValue: exact up to the long range, and a " +
+    "group that leaves it fails naming ExactSum.dsum's group-size limit " +
+    "instead of wrapping, with ANSI mode on or off") {
+    def sumOf(vs: Seq[java.lang.Long], parts: Int): Option[Long] = {
+      val r = vs.map(Option(_).map(_.longValue)).toDF("l").repartition(parts)
+        .agg(ExactSum.checkedSums(col("l"), col("l")).head).head()
+      if (r.isNullAt(0)) None else Some(r.getLong(0))
+    }
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try {
+      for (mode <- Seq("true", "false"); parts <- Seq(1, 2)) {
+        spark.conf.set("spark.sql.ansi.enabled", mode)
+        withClue(s"ansi=$mode partitions=$parts: ") {
+          sumOf(Seq(Long.MaxValue), parts) shouldBe Some(Long.MaxValue)
+          sumOf(Seq(Long.MaxValue - 1, 1L), parts) shouldBe Some(Long.MaxValue)
+          sumOf(Seq(Long.MinValue, null), parts) shouldBe Some(Long.MinValue)
+          sumOf(Seq(null, null), parts) shouldBe None
+          for (over <- Seq(Seq[java.lang.Long](Long.MaxValue, 1L),
+              Seq[java.lang.Long](Long.MinValue, -1L))) {
+            val e = intercept[Exception](sumOf(over, parts))
+            messages(e) should include("ExactSum.dsum")
+            messages(e) should include("group-size limit")
+          }
+        }
+      }
+      // the wrap this guards against: a plain long sum outside ANSI mode
+      spark.conf.set("spark.sql.ansi.enabled", "false")
+      Seq(Long.MaxValue, 1L).toDF("l").agg(sum("l")).head().getLong(0) shouldBe
+        Long.MinValue
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
+  test("dsum, dsumProduct and dsumRevenue accumulate no unchecked long Sum") {
+    import org.apache.spark.sql.catalyst.expressions.EvalMode
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+    val df = Seq((1.5, 0.25)).toDF("x", "y")
+    for ((name, e) <- Seq(
+        "dsum" -> ExactSum.dsum(col("x")),
+        "dsumProduct" -> ExactSum.dsumProduct(col("x"), 12, 2, 1e7,
+          col("y"), 12, 2, 1e7),
+        "dsumRevenue" -> ExactSum.dsumRevenue(col("x"), col("y")))) {
+      val longSums = df.agg(e).queryExecution.optimizedPlan
+        .flatMap(_.expressions).flatMap(_.collect {
+          case s: Sum if s.dataType == org.apache.spark.sql.types.LongType => s
+        })
+      withClue(name) {
+        longSums.filter(_.evalContext.evalMode != EvalMode.TRY) shouldBe empty
+        longSums.distinct.size shouldBe 3
+      }
+    }
+  }
 }

@@ -80,6 +80,103 @@ class SummarySpec extends SparkSpec {
     eq(nanKey, "v", Seq("g"))
   }
 
+  /** columnStats as the engine computed it before the stats became
+    * grouped quantiles over the melted columns: one wide aggregate of
+    * min/max cast to double and the exact mean, plus sort-based medians
+    * rounded like Spark's round(x, 4); a column with no non-null value
+    * gets nulls. */
+  private def columnStatsReference(df: org.apache.spark.sql.DataFrame,
+                                   cols: Seq[String]): Seq[Seq[Any]] = {
+    val aggs = cols.flatMap { c =>
+      Seq(min(col(c)).cast("double"), max(col(c)).cast("double"),
+        ExactSum.dsum(col(c)) / count(col(c)))
+    }
+    val wide = df.agg(aggs.head, aggs.tail: _*).head()
+    val medians = Quantiles.globalQuantilesBySort(df, cols, Seq(0.5))
+    cols.zipWithIndex.sortBy(_._1).map { case (c, i) =>
+      val median = medians.get((c, 0.5)).map(m => BigDecimal(m)
+        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      Seq(c, wide.get(3 * i), wide.get(3 * i + 1), wide.get(3 * i + 2),
+        median.getOrElse(null))
+    }
+  }
+
+  private def stats(df: org.apache.spark.sql.DataFrame,
+                    cols: Seq[String]): Seq[Seq[Any]] =
+    Summary.columnStats(df, cols).collect().map(_.toSeq).toSeq
+
+  /** Cells compared bit for bit: doubles by their raw bits (so NaN and
+    * -0.0 count), everything else by equality. */
+  private def bits(rows: Seq[Seq[Any]]): Seq[Seq[Any]] = rows.map(_.map {
+    case d: Double => java.lang.Double.doubleToRawLongBits(d)
+    case other => other
+  })
+
+  private def statsFrame(withNan: Boolean): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(20261019L)
+    val rows = (0 until 400).map { i =>
+      org.apache.spark.sql.Row(
+        if (i % 7 == 0) null else (rnd.nextDouble() - 0.3) * 1e4,
+        if (i % 11 == 0) null
+        else java.math.BigDecimal.valueOf(rnd.nextInt(2000000) - 500000, 2),
+        if (i % 5 == 0) null
+        else (1L << 53) + rnd.nextInt(1000) * (if (i % 2 == 0) 1L else -1L),
+        if (i % 3 == 0) null else Integer.valueOf(rnd.nextInt(100) - 20),
+        java.lang.Double.valueOf(2.5),
+        if (withNan && i % 50 == 0) Double.NaN else i.toDouble / 8,
+        null)
+    }
+    val schema = StructType(Seq(StructField("d", DoubleType),
+      StructField("dec", DecimalType(12, 2)), StructField("l", LongType),
+      StructField("i", IntegerType), StructField("const", DoubleType),
+      StructField("nan", DoubleType), StructField("nul", DoubleType)))
+    spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](
+        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
+  }
+
+  test("columnStats on an all-null column and on an empty frame emits " +
+    "nulls, as SQL's min, quantile_cont and dsum/count do") {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("a", DoubleType),
+      StructField("b", DoubleType)))
+    val df = spark.createDataFrame(
+      java.util.Arrays.asList(org.apache.spark.sql.Row(null, 1.0),
+        org.apache.spark.sql.Row(null, 3.0)), schema)
+    stats(df, Seq("a", "b")) shouldBe
+      Seq(Seq("a", null, null, null, null), Seq("b", 1.0, 3.0, 2.0, 2.0))
+    stats(df.limit(0), Seq("a")) shouldBe Seq(Seq("a", null, null, null, null))
+  }
+
+  test("columnStats is bit-equal to the wide aggregate plus sort-based " +
+    "medians over double, decimal(12,2), long, int, constant, " +
+    "NaN-bearing and all-null columns") {
+    val plain = Seq("d", "dec", "l", "i", "const", "nan", "nul")
+    for (withNan <- Seq(false, true)) {
+      val df = statsFrame(withNan)
+      for (cols <- plain +: plain.map(Seq(_))) withClue(s"$cols nan=$withNan") {
+        bits(stats(df, cols)) shouldBe bits(columnStatsReference(df, cols))
+      }
+    }
+  }
+
+  test("more than 64 columns: the selection gives up with every column's " +
+    "extras, and the medians come from the sort fallback") {
+    val cols = (0 until 65).map(i => s"c$i")
+    val df = spark.range(0, 30).select(cols.zipWithIndex.map { case (c, i) =>
+      (col("id") * (i + 1) % 17).cast("double").as(c) }: _*)
+    val melted = df.selectExpr(s"stack(${cols.length}, " +
+      cols.map(c => s"'$c', $c").mkString(", ") + ") AS (__name, __v)")
+    val (rowsA, selected) = Quantiles.groupedQuantilesWithExtras(melted,
+      "__v", Seq("__name"), Seq(0.5), Nil, maxRows = cols.length)
+    selected shouldBe None
+    rowsA.map(_.getString(0)).sorted shouldBe cols.sorted
+    Quantiles.globalQuantiles(df, cols, Seq(0.5)) shouldBe
+      Quantiles.globalQuantilesBySort(df, cols, Seq(0.5))
+    bits(stats(df, cols)) shouldBe bits(columnStatsReference(df, cols))
+  }
+
   test("boxplot stats: quartiles of 1..5 per group") {
     val df = Seq(("a", 1.0), ("a", 2.0), ("a", 3.0), ("a", 4.0), ("a", 5.0))
       .toDF("g", "v")

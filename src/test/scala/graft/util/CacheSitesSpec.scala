@@ -6,13 +6,8 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-/** Without Spark: [[CacheScope]] is the one module of the engine that
-  * names a storage level or persists or releases a cache, so every
-  * cache has one of its two lifetimes. Comments do not count. */
-class CacheSitesSpec extends AnyFunSuite with Matchers {
-  private val patterns = Seq("StorageLevel", ".persist(", ".cache()",
-    "unpersist(")
-
+/** Reading `src/main/scala` as code, for the Spark-free source checks. */
+object CacheSitesSpec {
   private def sources(dir: File): Seq[File] =
     Option(dir.listFiles).toSeq.flatten.sortBy(_.getPath).flatMap { f =>
       if (f.isDirectory) sources(f)
@@ -21,7 +16,7 @@ class CacheSitesSpec extends AnyFunSuite with Matchers {
 
   /** `src` with `//` and `/* */` comments blanked; string and character
     * literals are kept, so `"s3://"` does not start a comment. */
-  private def code(src: String): String = {
+  def code(src: String): String = {
     val out = new StringBuilder
     var i = 0
     def at(s: String) = src.startsWith(s, i)
@@ -53,6 +48,24 @@ class CacheSitesSpec extends AnyFunSuite with Matchers {
     out.toString
   }
 
+  /** Every `.scala` file under `src/main/scala`, comments blanked. */
+  def mainCode(): Seq[(File, String)] = {
+    val root = new File("src/main/scala")
+    require(root.isDirectory, s"no $root in ${new File(".").getAbsolutePath}")
+    sources(root).map(f =>
+      f -> code(new String(Files.readAllBytes(f.toPath), "UTF-8")))
+  }
+}
+
+/** Without Spark: [[CacheScope]] is the one module of the engine that
+  * names a storage level or persists or releases a cache, so every
+  * cache has one of its two lifetimes. Comments do not count. */
+class CacheSitesSpec extends AnyFunSuite with Matchers {
+  import CacheSitesSpec._
+
+  private val patterns = Seq("StorageLevel", ".persist(", ".cache()",
+    "unpersist(")
+
   test("comment stripping keeps code and string literals") {
     code("a.persist(x) // b.unpersist(\n/* c.cache() /* d */ e */f\n") shouldBe
       "a.persist(x) \nf\n"
@@ -61,10 +74,7 @@ class CacheSitesSpec extends AnyFunSuite with Matchers {
 
   test("outside CacheScope.scala, src/main names no storage level and " +
     "persists or releases no cache") {
-    val root = new File("src/main/scala")
-    root.isDirectory shouldBe true
-    val hits = sources(root).map { f =>
-      val text = code(new String(Files.readAllBytes(f.toPath), "UTF-8"))
+    val hits = mainCode().map { case (f, text) =>
       f.getName -> patterns.filter(text.contains)
     }.filter(_._2.nonEmpty)
     hits.map(_._1) shouldBe Seq("CacheScope.scala")
