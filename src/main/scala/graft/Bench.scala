@@ -81,26 +81,28 @@ object Bench {
       spark.read.parquet(s"$sfDir/$t.parquet").count()
     }
     Harness.prebuild(spark, sfDir, prebuilt)
-    // job count per query: the jobs STARTED inside its last timed run.
-    // At sf0.1 each AQE job costs ~100 ms of scheduling, so for the
+    // job count per query: the jobs its last timed run started. At
+    // sf0.1 each AQE job costs ~100 ms of scheduling, so for the
     // compositions the count is the deterministic signal the seconds
-    // obscure. Windows are wall-clock ms, the clock of
-    // SparkListenerJobStart.time; jobs of Overlap.both branches count.
-    val jobStarts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobStarts.add(e.time)
-      })
-    val lastRun = scala.collection.mutable.Map[String, (Long, Long)]()
+    // obscure. Each run has its own job group and a job counts for the
+    // group it carries; Overlap.both carries it into both branches.
+    val sc = spark.sparkContext
+    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobGroups.add(String.valueOf(Option(e.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull))
+    })
+    val lastRun = scala.collection.mutable.Map[String, String]()
     // a failing query must be VISIBLE, not a phantom speedup: it is
     // reported as -1 in "queries", named in "errors", and excluded from
     // the total (timing the elapsed-to-throw would let a regression that
     // breaks a query read as an improvement)
     def once(name: String): Either[String, Double] = {
+      lastRun(name) = s"bench-$name-${System.nanoTime()}"
+      sc.setJobGroup(lastRun(name), name)
       val t0 = System.nanoTime()
-      val wall0 = System.currentTimeMillis()
       try Right(Harness.runQuery(spark, sfDir, name) { df =>
         df.write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
@@ -110,7 +112,7 @@ object Bench {
           // any cntrl in an exception message would break the JSON line
           Left(Option(e.getMessage).getOrElse(e.getClass.getName)
             .replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(160))
-      } finally lastRun(name) = (wall0, System.currentTimeMillis())
+      } finally sc.clearJobGroup()
     }
     // lower-middle median: the true middle for odd n, the FASTER of the
     // central pair for even n — every run is warm and same-mode within a
@@ -128,11 +130,9 @@ object Bench {
                  else Left(firstErr.getOrElse("failed")))
       }.toMap
     val passOuts = (1 to passes).map(_ => suitePass())
-    Bridge.drainListeners(spark.sparkContext)
-    val starts = jobStarts.asScala.toSeq
+    Bridge.drainListeners(sc)
     val jobs = selected.map { name =>
-      val (from, to) = lastRun(name)
-      "\"" + name + "\":" + starts.count(t => t >= from && t <= to)
+      "\"" + name + "\":" + jobGroups.asScala.count(_ == lastRun(name))
     }.mkString("{", ",", "}")
     // merge passes: reported time = BEST pass median (the fast mode);
     // spread = [min,max] over every raw run of every pass; a query is an

@@ -262,10 +262,10 @@ object Dedup {
     * the r2 self-join recompute nor the r2 persist leak), the count
     * collapses map-side, and an oversized bucket is dropped by the
     * equi-join filter BEFORE any collect_list buffers it. Dropped
-    * buckets lose recall, never precision — the matching
-    * [[lshBucketCapReport]] counts them (the eager wrappers warn-log
-    * it from their live caches, lazy callers run the report
-    * standalone); the oracle mirrors the same cap. */
+    * buckets lose recall, never precision — the cap is a
+    * [[Metrics.capped]] operator that counts them in the same job
+    * (the eager wrappers warn-log the count, lazy callers read
+    * [[Metrics.drops]]); the oracle mirrors the same cap. */
   private def pairsFromSignatures(sig: DataFrame, idCol: String, bands: Int,
                                   rowsPerBand: Int,
                                   maxBucket: Int): DataFrame = {
@@ -275,9 +275,9 @@ object Dedup {
     // count(when(__one > 0, 1)) ≡ count(1) (__one ≥ 1) but the opaque
     // __one reference stops column pruning from narrowing this branch,
     // keeping both exchange subtrees identical for stage reuse (d13)
-    val counts = b.groupBy(col("band_idx"), col("band_key"))
-      .agg(count(when(col("__one") > 0, lit(1))).as("__bn"))
-      .filter(col("__bn") >= 2 && col("__bn") <= maxBucket)
+    val counts = Metrics.capped(b.groupBy(col("band_idx"), col("band_key"))
+      .agg(count(when(col("__one") > 0, lit(1))).as("__bn")),
+      "__bn", maxBucket, min = 2)
       .select(col("band_idx"), col("band_key"))
     // the __one > 0 filter is a no-op (counts are ≥ 1) whose job is to
     // keep __one referenced on THIS branch too — otherwise pruning
@@ -307,32 +307,6 @@ object Dedup {
         struct(element_at(ids, i + 1).as("id_a"),
           element_at(ids, j + 1).as("id_b")))))
   }
-
-  /** Per-bucket LSH band sizes (band_idx, band_key, __bn) — the frame
-    * the cap filter reads, exposed for the recall-loss reports. Rows of
-    * [[lshBands]] are distinct (band, id), so a direct count IS the
-    * bucket size. */
-  private def bandBucketSizes(sig: DataFrame, idCol: String, bands: Int,
-                              rowsPerBand: Int): DataFrame =
-    lshBands(sig, idCol, bands, rowsPerBand)
-      .groupBy(col("band_idx"), col("band_key"))
-      .agg(count(lit(1)).as("__bn"))
-
-  /** Recall-loss report for the LSH bucket cap: ONE row
-    * (dropped_groups, dropped_members) counting the band buckets that
-    * [[minhashCandidatePairs]] / [[nearDupPairs]] / [[dropNearDups]]
-    * would silently skip at the same parameters (see
-    * [[graft.util.Metrics]] for why this is a side report, not an
-    * in-flight metric). Standalone cost: the map-only shingle+minhash
-    * pipeline plus one count shuffle — the eager builders instead
-    * compute it against their live shingle cache and warn-log it
-    * themselves. */
-  def lshBucketCapReport(df: DataFrame, idCol: String, textCol: String,
-                         k: Int = 12, bands: Int = 4, shingleN: Int = 3,
-                         maxBucket: Int = 10000): DataFrame =
-    Metrics.capReport(bandBucketSizes(
-      signaturesFrom(shingleTable(df, idCol, textCol, shingleN), idCol, k),
-      idCol, bands, rowsPer(k, bands)), "__bn", maxBucket)
 
   /** Candidate duplicate pairs (a < b) from shared LSH bands — one
     * shuffle chain (shingles → signatures → band buckets → pairs), no
@@ -364,12 +338,7 @@ object Dedup {
   CacheScope.run { scope =>
     val sh = scope.cache(shingleTable(df, idCol, textCol, shingleN,
       tokensCol = tokensCol))
-    // r21: the signature frame persists too (k short strings per doc —
-    // smaller than the shingle cache) so the cap report below reads
-    // CACHED signatures instead of re-running MinHashRot over the
-    // whole corpus as a second pass; released before return like sh
-    val sig = scope.cache(signaturesFrom(sh, idCol, k))
-    val cand = pairsFromSignatures(sig, idCol,
+    val cand = pairsFromSignatures(signaturesFrom(sh, idCol, k), idCol,
       bands, rowsPer(k, bands), maxBucket)
     val a = sh.select(col(idCol).as("id_a"), col("__s").as("__sa"))
     val b = sh.select(col(idCol).as("id_b"), col("__s").as("__sb"))
@@ -381,11 +350,7 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard"))
     verified.count() // materialize while the shingle cache is alive
-    // recall-loss report over the CACHED signatures: banding + one
-    // map-combined count, no minhash recompute
-    Metrics.logDrops("nearDupPairs bucket cap", Metrics.capReport(
-      bandBucketSizes(sig, idCol, bands,
-        rowsPer(k, bands)), "__bn", maxBucket))
+    Metrics.logDrops("nearDupPairs bucket cap", verified)
     verified
   }
 
@@ -417,8 +382,7 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         (agree.cast("double") / lit(k).cast("double")).as("est_jaccard")))
     out.count() // materialize while the signature cache is alive
-    Metrics.logDrops("minhashEstimates bucket cap", Metrics.capReport(
-      bandBucketSizes(sig, idCol, bands, rowsPer(k, bands)), "__bn", maxBucket))
+    Metrics.logDrops("minhashEstimates bucket cap", out)
     out
   }
 
@@ -442,7 +406,7 @@ object Dedup {
     * escapes any Jaccard banding; that regime needs partition-by-size
     * LSH (Zhu et al. 2016, "LSH Ensemble") — the documented upgrade
     * path, not implemented here. The wider buckets of 1-row bands are
-    * exactly what `maxBucket` caps (with the recall-loss report).
+    * exactly what `maxBucket` caps (with the recall-loss count).
     * Same cache discipline as [[nearDupPairs]] (one shingle table,
     * eager pair materialize, caches released). */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
@@ -468,9 +432,7 @@ object Dedup {
       .filter(col("containment") >= threshold)
       .select("id_a", "id_b", "containment", "contained_id"))
     verified.count() // materialize while the shingle cache is alive
-    Metrics.logDrops("containmentPairs bucket cap", Metrics.capReport(
-      bandBucketSizes(signaturesFrom(sh, idCol, k), idCol, bands,
-        rowsPer(k, bands)), "__bn", maxBucket))
+    Metrics.logDrops("containmentPairs bucket cap", verified)
     verified
   }
 
@@ -1244,7 +1206,8 @@ object Dedup {
 
   /** (id, `__ot` original-case tokens, `__nt` lower/NFC tokens) — the
     * shared base of the span/substring excision family
-    * ([[dropDupSpans]], [[dropDupSubstrings]] and its cap report).
+    * ([[dropDupSpans]], [[dropDupSubstrings]] and its store and
+    * decontamination variants).
     * `tokensCol` is the tokenize-once contract (caller-supplied
     * `tokens(text)`); the normalized view derives per token, which is
     * position/value-identical to tokenizing the transformed string
@@ -1270,8 +1233,8 @@ object Dedup {
   /** (id, `__p` 1-based start, `__h` md5 of the space-joined n-token
     * window of `__nt`) — THE window/seed occurrence frame, one
     * definition shared by [[dropDupSpans]], [[dropDupSubstrings]] and
-    * [[dupSubstringSeedCapReport]] so the hash/gate can never diverge
-    * between an operator and its recall report. Generate fuses into
+    * the substring store and decontamination families, so the
+    * hash/gate can never diverge between them. Generate fuses into
     * the scan (sequence/slice/array_join/md5, all codegen'd). */
   private def windowOccurrences(base: DataFrame, idCol: String,
                                 n: Int): DataFrame =
@@ -1352,9 +1315,10 @@ object Dedup {
     * ≤ `maxOcc`) come from a map-combined groupBy(h) count semi-joined
     * back — the `maxOcc` cap bounds the pair join at
     * O(maxOcc²)/seed-hash and drops only viral boilerplate seeds
-    * (recall-only; this is a LAZY builder, so the loss is priced by the
-    * STANDALONE [[dupSubstringSeedCapReport]] — the d13 convention —
-    * not auto-warn-logged like the eager nearDupPairs family).
+    * (recall-only; the cap is a [[Metrics.capped]] operator, and this
+    * is a LAZY builder, so read the loss with [[Metrics.drops]] after
+    * the action — it is not auto-warn-logged like the eager
+    * nearDupPairs family).
     * Diagonal merging is a groupBy on (docA, docB, diag) whose groups
     * are bounded by DOCUMENT length (never corpus-keyed); runs emerge
     * from sort_array + two linear index-filters. Excised-position
@@ -1379,10 +1343,8 @@ object Dedup {
     val seeds = windowOccurrences(base, idCol, seedN)
     // eligible seed hashes: shared (≥2 occurrences) and under the viral
     // cap — map-combined count, the d3/d13 aggregate-not-Window rule
-    val occCounts = seeds.groupBy(col("__h"))
-      .agg(count(lit(1)).as("__c"))
-    val eligible = occCounts
-      .filter(col("__c") >= 2 && col("__c") <= maxOcc)
+    val eligible = Metrics.capped(seeds.groupBy(col("__h"))
+      .agg(count(lit(1)).as("__c")), "__c", maxOcc, min = 2)
       .select(col("__h"))
     val occ = seeds.join(eligible, Seq("__h"), "left_semi")
     // ordered occurrence pairs of the same seed: (A, pa) < (B, pb)
@@ -1441,26 +1403,6 @@ object Dedup {
         .as("__cov"))
   }
 
-  /** Recall-loss report for [[dropDupSubstrings]]'s `maxOcc` seed cap
-    * (this is a LAZY builder, so the report is standalone — the d13
-    * convention, not the eager nearDupPairs one; run it alongside the
-    * dedup and warn on nonzero drops): ONE row
-    * (dropped_groups, dropped_members) counting the viral seed hashes
-    * the pair join skips at these parameters. A dropped seed can only
-    * LOSE matches (recall), never excise a non-duplicate. Shares
-    * [[windowOccurrences]] with the operator, so the counted seed
-    * population is definitionally the one the dedup uses. */
-  def dupSubstringSeedCapReport(df: DataFrame, idCol: String,
-                                textCol: String, seedN: Int = 8,
-                                maxOcc: Int = 1000, nfc: Boolean = true,
-                                tokensCol: Option[String] = None)
-      : DataFrame = {
-    val sizes = windowOccurrences(
-        origAndNormToks(df, idCol, textCol, nfc, tokensCol), idCol, seedN)
-      .groupBy(col("__h")).agg(count(lit(1)).as("__c"))
-    Metrics.capReport(sizes, "__c", maxOcc.toLong)
-  }
-
   /** SUBSTRING decontamination — the precision-tunable complement of
     * the shingle form ([[decontaminate]], d8): instead of DROPPING any
     * doc that shares a single 5-gram with the benchmark (maximum
@@ -1482,10 +1424,10 @@ object Dedup {
     * seeds of the same hash, diagonal runs witness true
     * token-for-token matches, qualifying runs excise the CORPUS side.
     * `maxOcc` caps the BENCHMARK-side occurrences per seed (the pair
-    * join is bench_n × corpus_n per hash): price the loss with
-    * [[dupSubstringSeedCapReport]] run over the BENCHMARK — and note
-    * the loss direction here is MISSED CONTAMINATION, so the default
-    * is generous and a capped run should be audited. A capped seed's
+    * join is bench_n × corpus_n per hash; [[Metrics.drops]] counts
+    * the capped seeds after the action) — and note the loss direction
+    * here is MISSED CONTAMINATION, so the default is generous and a
+    * capped run should be audited. A capped seed's
     * long matches are still found via non-viral neighboring seeds on
     * the same diagonal unless the whole stretch is viral.
     *
@@ -1548,9 +1490,9 @@ object Dedup {
     val bbase = origAndNormToks(benchmark, idCol, textCol, nfc,
       benchTokensCol)
     val cbase = origAndNormToks(corpus, idCol, textCol, nfc, tokensCol)
-    val eligible = windowOccurrences(bbase, idCol, seedN)
-      .groupBy(col("__h")).agg(count(lit(1)).as("__bc"))
-      .filter(col("__bc") <= maxOcc).select(col("__h"))
+    val eligible = Metrics.capped(windowOccurrences(bbase, idCol, seedN)
+      .groupBy(col("__h")).agg(count(lit(1)).as("__bc")), "__bc", maxOcc)
+      .select(col("__h"))
     val pairs = windowOccurrences(bbase, idCol, seedN)
       .join(eligible, Seq("__h"), "left_semi")
       .select(col("__h"), col(idCol).as("__ida"), col("__p").as("__pa"))
@@ -1815,11 +1757,11 @@ object Dedup {
     // counts are the Exchange-free bucketed aggregate; shard counts one
     // small shuffle. Hashes absent from the shard cannot excise shard
     // rows, so a LEFT join from the shard counts is exact.
-    val eligible = shardSeeds.groupBy(col("__h"))
+    val eligible = Metrics.capped(shardSeeds.groupBy(col("__h"))
       .agg(count(lit(1)).as("__nn"))
       .join(storeSeedCounts(spark, tablePrefix), Seq("__h"), "left")
-      .withColumn("__tot", col("__nn") + coalesce(col("__sn"), lit(0L)))
-      .filter(col("__tot") >= 2 && col("__tot") <= maxOcc)
+      .withColumn("__tot", col("__nn") + coalesce(col("__sn"), lit(0L))),
+      "__tot", maxOcc, min = 2)
       .select(col("__h"))
     val occS = shardSeeds.join(eligible, Seq("__h"), "left_semi")
     // cross pairs: the store occurrence is the EARLIER side (A) iff its
@@ -1933,21 +1875,6 @@ object Dedup {
     df.join(losers, Seq(idCol), "left_anti")
   }
 
-  /** Recall-loss report for the image Hamming-band bucket cap: ONE row
-    * (dropped_groups, dropped_members) counting the buckets
-    * [[imageNearDupPairs]] skips at the same `maxBucket`. Map-only
-    * band derivation from the 64-bit hash column + one count
-    * shuffle. */
-  def imageBucketCapReport(df: DataFrame, idCol: String, hashCol: String,
-                           maxBucket: Int = 10000): DataFrame = {
-    val sig = df.filter(col(hashCol).isNotNull)
-      .select(col(idCol) +:
-        (0 until 4).map(b => shiftright(col(hashCol).cast("long"), 16 * b)
-          .bitwiseAND(lit(0xffffL)).as(s"mh$b")): _*)
-    Metrics.capReport(bandBucketSizes(sig, idCol, bands = 4,
-      rowsPerBand = 1), "__bn", maxBucket)
-  }
-
   /** [[imageNearDupPairs]] straight from an opaque binary image column:
     * decode + dHash once per payload (the expensive step — persisted so
     * the three hash consumers above don't re-decode), then the
@@ -1963,8 +1890,7 @@ object Dedup {
     val out = CacheScope.handOff(imageNearDupPairs(hashes, idCol,
       "__phash", maxHamming, maxBucket))
     out.count() // materialize while the hash cache is alive
-    Metrics.logDrops("imageNearDupPairs bucket cap",
-      imageBucketCapReport(hashes, idCol, "__phash", maxBucket))
+    Metrics.logDrops("imageNearDupPairs bucket cap", out)
     out
   }
 
@@ -2210,10 +2136,7 @@ object Dedup {
     val losers = scope.cache(shardLoserIds(shardSh, shardB, idCol,
       tablePrefix, threshold, maxBucket))
     val nLosers = losers.count() // materialize while shard caches alive
-    // recall-loss report while the shard band cache is alive: one small
-    // aggregate over cached bands + the shuffle-free store bucket scan
-    Metrics.logDrops("dedupShardAgainst bucket cap", Metrics.capReport(
-      combinedBucketSizes(shardB, tablePrefix), "__tot", maxBucket))
+    Metrics.logDrops("dedupShardAgainst bucket cap", losers)
     val loserSide =
       if (nLosers <= maxLocalLosers) {
         // collect → local relation → broadcast: no cache entry outlives
@@ -2228,51 +2151,18 @@ object Dedup {
     shard.join(loserSide, Seq(idCol), "left_anti")
   }
 
-  /** COMBINED store+shard bucket sizes (bk, __nn, __sn, __tot) off a
-    * shard band frame — the frame [[shardLoserIds]]' cap filter reads;
-    * shared with [[shardBucketCapReport]]. Store side is the
-    * shuffle-free bucketed aggregate ([[storeBandCounts]]); shard side
-    * is one small count shuffle. */
-  private[graft] def combinedBucketSizes(shardB: DataFrame,
-                                         tablePrefix: String): DataFrame =
-    combinedSizes(shardB,
-      storeBandCounts(shardB.sparkSession, tablePrefix))
-
-  /** Combined store+shard sizes against an arbitrary store-count frame
-    * (`(bk, __sn)`) — shared by the text and image store paths. */
-  private def combinedSizes(shardB: DataFrame,
-                            storeCounts: DataFrame): DataFrame =
-    shardB.groupBy("bk").agg(count(lit(1)).as("__nn"))
+  /** The band keys (`bk`) of a shard band frame whose COMBINED
+    * store+shard size `__tot` is 2..maxBucket — the whole-corpus cap,
+    * counted — against a store-count frame (`(bk, __sn)`); shared by
+    * the text and image store paths. Store side is the shuffle-free
+    * bucketed aggregate, shard side one small count shuffle. */
+  private def cappedBuckets(shardB: DataFrame, storeCounts: DataFrame,
+                            maxBucket: Int): DataFrame =
+    Metrics.capped(shardB.groupBy("bk").agg(count(lit(1)).as("__nn"))
       .join(storeCounts, Seq("bk"), "left")
-      .withColumn("__tot", col("__nn") + coalesce(col("__sn"), lit(0L)))
+      .withColumn("__tot", col("__nn") + coalesce(col("__sn"), lit(0L))),
+      "__tot", maxBucket, min = 2).select("bk")
 
-  /** Recall-loss report for the incremental store's combined bucket
-    * cap: ONE row (dropped_groups, dropped_members) counting the
-    * buckets [[dedupShardAgainst]] skips for this shard at the same
-    * LSH parameters. Standalone cost: the shard's map-only band
-    * pipeline + one count shuffle + the shuffle-free store bucket
-    * scan — the eager wrapper computes it against its live band cache
-    * and warn-logs it per shard. */
-  def shardBucketCapReport(shard: DataFrame, idCol: String,
-                           textCol: String, tablePrefix: String,
-                           k: Int = 12, bands: Int = 4, shingleN: Int = 3,
-                           maxBucket: Int = 10000): DataFrame = {
-    val shardB = lshBands(
-      signaturesFrom(shingleTable(shard, idCol, textCol, shingleN),
-        idCol, k), idCol, bands, rowsPer(k, bands))
-      .select(bandJoinKey.as("bk"), col(idCol))
-    Metrics.capReport(combinedBucketSizes(shardB, tablePrefix),
-      "__tot", maxBucket)
-  }
-
-  /** The LAZY loser-id plan of [[dedupShardAgainst]] — candidate
-    * generation against the store's bucketed band table plus exact
-    * shingle-Jaccard verification — factored out so plan proofs can
-    * read the store-side scan shape BEFORE the eager wrapper
-    * materializes and releases it. `shardSh` = the shard's
-    * (id, shingle-array) frame, `shardB` = its (bk, id) band frame
-    * (the wrapper passes them persisted; the pipeline reads each
-    * more than once). */
   /** Candidate pairs (a < b, distinct) of a shard band frame against a
     * store band table, over cap-approved buckets only: cross pairs from
     * the band equi-join (store side scans its bucketed table in place),
@@ -2298,6 +2188,14 @@ object Dedup {
     cross.filter(col("id_a") < col("id_b")).union(internal).distinct()
   }
 
+  /** The LAZY loser-id plan of [[dedupShardAgainst]] — candidate
+    * generation against the store's bucketed band table plus exact
+    * shingle-Jaccard verification — factored out so plan proofs can
+    * read the store-side scan shape BEFORE the eager wrapper
+    * materializes and releases it. `shardSh` = the shard's
+    * (id, shingle-array) frame, `shardB` = its (bk, id) band frame
+    * (the wrapper passes them persisted; the pipeline reads each
+    * more than once). */
   private[graft] def shardLoserIds(shardSh: DataFrame, shardB: DataFrame,
                                    idCol: String, tablePrefix: String,
                                    threshold: Double,
@@ -2306,9 +2204,8 @@ object Dedup {
     val storeB = spark.table(s"${tablePrefix}_bands")
     val storeSh = spark.table(s"${tablePrefix}_shingles")
     // combined bucket sizes; only buckets holding ≥1 shard doc matter
-    val ok = combinedBucketSizes(shardB, tablePrefix)
-      .filter(col("__tot") >= 2 && col("__tot") <= maxBucket)
-      .select("bk")
+    val ok = cappedBuckets(shardB, storeBandCounts(spark, tablePrefix),
+      maxBucket)
     val okShardB = shardB.join(ok, Seq("bk"))
     val cand = shardCandidatePairs(okShardB, storeB, idCol)
     val allSh = storeSh.unionByName(shardSh)
@@ -2410,9 +2307,8 @@ object Dedup {
     val shardB = imageBandRows(h, idCol)
     val storeB = spark.table(s"${tablePrefix}_ibands")
     val storeH = spark.table(s"${tablePrefix}_ihashes")
-    val ok = combinedSizes(shardB, imageStoreBandCounts(spark, tablePrefix))
-      .filter(col("__tot") >= 2 && col("__tot") <= maxBucket)
-      .select("bk")
+    val ok = cappedBuckets(shardB, imageStoreBandCounts(spark, tablePrefix),
+      maxBucket)
     val cand = shardCandidatePairs(shardB.join(ok, Seq("bk")), storeB,
       idCol)
     val allH = storeH.unionByName(h)
@@ -2480,19 +2376,6 @@ object Dedup {
         .write.mode("append").bucketBy(nBuckets, idCol).sortBy(idCol)
         .format("parquet").saveAsTable(s"${tablePrefix}_ihashes")
     }
-  }
-
-  /** Recall-loss report for the incremental image store's combined
-    * bucket cap — the [[shardBucketCapReport]] twin; see
-    * [[graft.util.Metrics]]. */
-  def imageShardBucketCapReport(shard: DataFrame, idCol: String,
-                                hashCol: String, tablePrefix: String,
-                                maxBucket: Int = 10000): DataFrame = {
-    val h = shard.filter(col(hashCol).isNotNull)
-      .select(col(idCol), col(hashCol).cast("long").as("__ph"))
-    Metrics.capReport(combinedSizes(imageBandRows(h, idCol),
-      imageStoreBandCounts(shard.sparkSession, tablePrefix)),
-      "__tot", maxBucket)
   }
 
   /** CDC latest-wins compaction: one surviving row per key set — the row

@@ -18,8 +18,8 @@ object Readability {
 
   /** Syllable count of one word — native codegen'd expression (single byte
     * scan; see [[graft.functions.SyllableCount]]). Semantics those of
-    * `greatest(size(regexp_extract_all(lower(w), "[aeiouy]+")), 1)`
-    * except on U+0130, property-checked in ReadabilitySpec. */
+    * `greatest(size(regexp_extract_all(lower(w), "[aeiouy]+")), 1)`,
+    * property-checked in ReadabilitySpec. */
   def syllables(w: Column): Column = graft.functions.SyllableCount(w)
 
   private def wOf(numTok: Column): Column =

@@ -18,10 +18,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * allocates a lowercased copy plus a match list per word. This expression
   * is a single byte scan, codegen'd into the enclosing whole-stage loop:
   * ASCII vowels are case-folded with `| 0x20`, and multi-byte UTF-8 units
-  * (≥ 0x80) can never alias an ASCII vowel byte. It differs from the
-  * `lower` formulation where lower-casing creates an ASCII vowel: U+0130
-  * (`İ`) lowers to `i` + U+0307, so "İA" scans as 1 syllable and the
-  * regexp gives 2.
+  * (≥ 0x80) can never alias an ASCII vowel byte. The one character that
+  * `lower` turns into an ASCII vowel, U+0130 (`İ`, bytes C4 B0), lowers
+  * to `i` + U+0307, so the scan reads it as a vowel followed by a run
+  * break: "İA" is 2 syllables, as with the regexp.
   */
 case class SyllableCount(child: Expression) extends UnaryExpression {
 
@@ -74,12 +74,15 @@ object SyllableCountImpl {
     var inRun = false
     var i = 0
     while (i < bytes.length) {
+      // U+0130 (C4 B0) lowers to `i` + U+0307: a vowel, then a break
+      val dotI = bytes(i) == 0xC4.toByte && i + 1 < bytes.length &&
+        bytes(i + 1) == 0xB0.toByte
       val c = bytes(i) | 0x20
-      val v = bytes(i) >= 0 && (c == 'a' || c == 'e' || c == 'i' ||
-        c == 'o' || c == 'u' || c == 'y')
+      val v = dotI || bytes(i) >= 0 && (c == 'a' || c == 'e' ||
+        c == 'i' || c == 'o' || c == 'u' || c == 'y')
       if (v && !inRun) runs += 1
-      inRun = v
-      i += 1
+      inRun = v && !dotI
+      i += (if (dotI) 2 else 1)
     }
     if (runs == 0) 1 else runs
   }

@@ -782,7 +782,8 @@ object Ann {
     * NOT a Window — the d9/d13 lesson: an overflowing cluster collapses
     * map-side and never single-task-sorts). Clusters above `maxCluster`
     * skip pair search entirely (recall-only loss, mirrored in the
-    * oracle — the same skew contract as LSH's maxBucket). Keep policy is
+    * oracle — the same skew contract as LSH's maxBucket; the cap counts
+    * them, read with [[graft.util.Metrics.drops]]). Keep policy is
     * greedy min-id (a row drops iff a LOWER-id row in its cluster is
     * within `threshold` cosine — d6's policy, deterministic).
     *
@@ -799,12 +800,8 @@ object Ann {
     // lives until the query boundary.
     val assigned = CacheScope.handOff(
       ivfAssign(corpus, idCol, vecCol, nCentroids))
-    // recall-loss: run [[semDedupClusterCapReport]] after this — it
-    // reads the same assignment cache while it lives, so the report
-    // costs one aggregate over cached rows
-    val okClusters = assigned.groupBy("cid")
-      .agg(count(lit(1)).as("__csz"))
-      .filter(col("__csz") <= maxCluster)
+    val okClusters = graft.util.Metrics.capped(assigned.groupBy("cid")
+      .agg(count(lit(1)).as("__csz")), "__csz", maxCluster)
       .select("cid")
     val inScope = assigned.join(okClusters, Seq("cid"), "left_semi")
     val a = inScope.select(col("cid").as("__ca"), col(idCol).as("id_a"),
@@ -822,21 +819,6 @@ object Ann {
     assigned.join(dropped, Seq(idCol), "left_anti")
       .select(col(idCol), col("cid"))
   }
-
-  /** Recall-loss report for [[semDedup]]'s cluster cap: ONE row
-    * (dropped_groups, dropped_members) counting the clusters whose pair
-    * search was skipped at the same parameters (see
-    * [[graft.util.Metrics]]). Run it AFTER semDedup with identical
-    * arguments in the same query: the assignment plan is the same, so
-    * it reads semDedup's assignment cache — one aggregate over cached
-    * rows, no recompute of the per-(row × centroid) dot products. */
-  def semDedupClusterCapReport(corpus: DataFrame, idCol: String,
-                               vecCol: String, nCentroids: Int,
-                               maxCluster: Int = 10000): DataFrame =
-    graft.util.Metrics.capReport(
-      ivfAssign(corpus, idCol, vecCol, nCentroids)
-        .groupBy("cid").agg(count(lit(1)).as("__csz")),
-      "__csz", maxCluster)
 
   /** Embedding-cosine near-duplicate pairs via multi-probe sign-bucket LSH.
     *
@@ -872,9 +854,10 @@ object Ann {
       .select(col("tb.tbl").as("tbl"), col("tb.bkt").as("bkt"), col(idCol))
       .groupBy(col("tbl"), col("bkt"), col(idCol))
       .agg(count(lit(1)).as("__one")) // no-op collapse; rows distinct
-    val counts = keyed.groupBy(col("tbl"), col("bkt"))
-      .agg(count(when(col("__one") > 0, lit(1))).as("__bn"))
-      .filter(col("__bn") >= 2 && col("__bn") <= maxBucket)
+    val counts = graft.util.Metrics.capped(
+        keyed.groupBy(col("tbl"), col("bkt"))
+          .agg(count(when(col("__one") > 0, lit(1))).as("__bn")),
+        "__bn", maxBucket, min = 2)
       .select(col("tbl"), col("bkt"))
     // no-op filter keeps __one referenced on the pair branch so both
     // exchange subtrees stay canonically equal (ReusedExchange) — see

@@ -186,6 +186,7 @@ class DedupSpec extends SparkSpec {
       .split("== Initial Plan ==")(0)
     "shingles\\(".r.findAllMatchIn(d3plan).size shouldBe 1
     d3plan should include("ReusedExchange")
+    d3plan should include("CapFilter") // the counting cap, count branch
     val corpus = d.filter(col("source") =!= "src0")
     val bench = d.filter(col("source") === "src0")
     val d8plan = Dedup.decontaminate(corpus, bench, "doc_id", "text")
@@ -452,27 +453,81 @@ class DedupSpec extends SparkSpec {
     "their membership; an uncapped run records zero") {
     import graft.util.Metrics
     // six identical docs → one size-6 bucket per band (4 bands); cap 5
-    // drops all four buckets, losing every candidate pair — the report
+    // drops all four buckets, losing every candidate pair — the counter
     // must say so instead of the pipeline silently returning empty
     val corpus = (1L to 6L)
       .map(i => (i, "same boilerplate text repeated across this corpus"))
       .toDF("doc_id", "text")
-    Dedup.minhashCandidatePairs(corpus, "doc_id", "text",
-      maxBucket = 5).count() shouldBe 0L
-    Metrics.drops(Dedup.lshBucketCapReport(corpus, "doc_id", "text",
-      maxBucket = 5)) shouldBe ((4L, 24L))
-    Dedup.minhashCandidatePairs(corpus, "doc_id", "text")
-      .count() shouldBe 15L // C(6,2)
-    Metrics.drops(Dedup.lshBucketCapReport(corpus, "doc_id",
-      "text")) shouldBe ((0L, 0L))
-    // the image-band report shares the cap contract: 6 identical hashes
-    // → 4 over-cap buckets at cap 5, none at the default
+    val capped = Dedup.minhashCandidatePairs(corpus, "doc_id", "text",
+      maxBucket = 5)
+    capped.collect() shouldBe empty
+    Metrics.drops(capped) shouldBe ((4L, 24L))
+    val open = Dedup.minhashCandidatePairs(corpus, "doc_id", "text")
+    open.collect().length shouldBe 15 // C(6,2)
+    Metrics.drops(open) shouldBe ((0L, 0L))
+    // the image bands share the cap contract: 6 identical hashes → 4
+    // over-cap buckets at cap 5, none at the default
     val hashes = (1L to 6L).map(i => (i, 0x0123456789abcdefL))
       .toDF("doc_id", "ph")
-    Metrics.drops(Dedup.imageBucketCapReport(hashes, "doc_id", "ph",
-      maxBucket = 5)) shouldBe ((4L, 24L))
-    Metrics.drops(Dedup.imageBucketCapReport(hashes, "doc_id",
-      "ph")) shouldBe ((0L, 0L))
+    val img = Dedup.imageNearDupPairs(hashes, "doc_id", "ph",
+      maxBucket = 5)
+    img.collect() shouldBe empty
+    Metrics.drops(img) shouldBe ((4L, 24L))
+    val imgOpen = Dedup.imageNearDupPairs(hashes, "doc_id", "ph")
+    imgOpen.collect().length shouldBe 15
+    Metrics.drops(imgOpen) shouldBe ((0L, 0L))
+  }
+
+  test("recall-loss counter: a second action on the same frame reports " +
+    "the first run's drops; a frame whose own plan never ran fails") {
+    import graft.util.Metrics
+    val corpus = (1L to 6L)
+      .map(i => (i, "same boilerplate text repeated across this corpus"))
+      .toDF("doc_id", "text")
+    val capped = Dedup.minhashCandidatePairs(corpus, "doc_id", "text",
+      maxBucket = 5)
+    capped.collect()
+    Metrics.drops(capped) shouldBe ((4L, 24L))
+    // the cap ran in a stage that feeds a join; the second collect
+    // reuses that stage's output, so nothing is counted twice
+    capped.collect()
+    Metrics.drops(capped) shouldBe ((4L, 24L))
+    // count() plans the frame anew: this frame's own plan never ran
+    val other = Dedup.minhashCandidatePairs(corpus, "doc_id", "text",
+      maxBucket = 5)
+    other.count() shouldBe 0L
+    an[IllegalStateException] should be thrownBy Metrics.drops(other)
+  }
+
+  test("recall-loss counter: an eager builder's result carries the drops " +
+    "of the run that filled it, and reading them starts no job") {
+    import graft.util.Metrics
+    val corpus = (1L to 6L)
+      .map(i => (i, "same boilerplate text repeated across this corpus"))
+      .toDF("doc_id", "text")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    for ((cap, want) <- Seq(5 -> ((4L, 24L)), 10000 -> ((0L, 0L)))) {
+      val pairs = Dedup.nearDupPairs(corpus, "doc_id", "text",
+        threshold = 0.5, maxBucket = cap)
+      try {
+        org.apache.spark.sql.graftbridge.Bridge
+          .drainListeners(spark.sparkContext)
+        spark.sparkContext.addSparkListener(listener)
+        jobs.set(0)
+        Metrics.drops(pairs) shouldBe want
+        org.apache.spark.sql.graftbridge.Bridge
+          .drainListeners(spark.sparkContext)
+        jobs.get shouldBe 0
+      } finally {
+        spark.sparkContext.removeSparkListener(listener)
+        pairs.unpersist()
+      }
+    }
   }
 
   test("dropDupSpans: overlap-merge — a shared passage excises ONCE " +
@@ -902,17 +957,41 @@ class DedupSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     // every 3-seed occurs 3 times > maxOcc = 2: no eligible seeds, so
     // the duplicates SURVIVE (recall loss, never precision)
-    val capped = Dedup.dropDupSubstrings(corpus, "doc_id", "text",
-        minLen = 6, seedN = 3, maxOcc = 2)
-      .orderBy("doc_id")
-      .select("doc_id", "n_kept").as[(Long, Long)].collect().toSeq
-    capped shouldBe Seq((1L, 6L), (2L, 6L), (3L, 6L))
+    def kept(maxOcc: Int) = Dedup.dropDupSubstrings(corpus, "doc_id",
+      "text", minLen = 6, seedN = 3, maxOcc = maxOcc)
+      .orderBy("doc_id").select("doc_id", "n_kept")
+    val capped = kept(2)
+    capped.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq shouldBe
+      Seq((1L, 6L), (2L, 6L), (3L, 6L))
     // 4 distinct seed hashes, each with 3 occurrences over the cap
-    Metrics.drops(Dedup.dupSubstringSeedCapReport(corpus, "doc_id",
-      "text", seedN = 3, maxOcc = 2)) shouldBe ((4L, 12L))
+    Metrics.drops(capped) shouldBe ((4L, 12L))
     // at the default cap nothing drops and dedup proceeds
-    Metrics.drops(Dedup.dupSubstringSeedCapReport(corpus, "doc_id",
-      "text", seedN = 3)) shouldBe ((0L, 0L))
+    val open = kept(1000)
+    open.collect().map(_.getLong(0)).toSeq shouldBe Seq(1L)
+    Metrics.drops(open) shouldBe ((0L, 0L))
+  }
+
+  test("decontaminateSubstrings: the benchmark-side maxOcc cap counts " +
+    "the viral benchmark seeds it drops") {
+    import graft.util.Metrics
+    val text = "alpha beta gamma delta epsilon zeta"
+    // every 3-seed occurs 3 times in the BENCHMARK: over cap 2
+    val bench = Seq(101L -> text, 102L -> text, 103L -> text)
+      .toDF("doc_id", "text")
+    val corpus = Seq(1L -> s"$text omega", 2L -> "unrelated words here")
+      .toDF("doc_id", "text")
+    def run(maxOcc: Int) = Dedup.decontaminateSubstrings(corpus, bench,
+        "doc_id", "text", minLen = 6, seedN = 3, maxOcc = maxOcc)
+      .orderBy("doc_id").select("doc_id", "n_kept")
+    val capped = run(2)
+    // capped: the leaked passage is missed (the recall loss counted)
+    capped.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq shouldBe
+      Seq((1L, 7L), (2L, 3L))
+    Metrics.drops(capped) shouldBe ((4L, 12L))
+    val open = run(10000)
+    open.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq shouldBe
+      Seq((1L, 1L), (2L, 3L))
+    Metrics.drops(open) shouldBe ((0L, 0L))
   }
 
   test("NFC-first keying (default) merges decomposed/precomposed " +

@@ -88,14 +88,23 @@ class SignatureStoreSpec extends SparkSpec {
       val gotU = Dedup.dedupShardAgainst(shard, "doc_id", "text", pfx,
         threshold = 0.5).select("doc_id").collect().map(_.getLong(0)).toSet
       gotU shouldBe Set.empty // 11,12,13 all dup store doc 1
-      // the recall-loss report sees the capped buckets: 4 bands × one
+      // the cap counts the buckets it drops: 4 bands × one
       // COMBINED-size-6 bucket each (3 store + 3 shard members) — the
-      // eager wrapper warn-logs the same numbers per shard
+      // eager wrapper warn-logs the same numbers per shard from its
+      // loser run
       import graft.util.Metrics
-      Metrics.drops(Dedup.shardBucketCapReport(shard, "doc_id", "text",
-        pfx, maxBucket = 5)) shouldBe ((4L, 24L))
-      Metrics.drops(Dedup.shardBucketCapReport(shard, "doc_id", "text",
-        pfx)) shouldBe ((0L, 0L))
+      val shardSh = Dedup.shingleTableForTest(shard, "doc_id", "text", 3)
+      val shardB = Dedup.lshBands(
+        Dedup.minhashSignatures(shard, "doc_id", "text", k = 12,
+          shingleN = 3), "doc_id", bands = 4, rowsPerBand = 3)
+        .select(concat_ws(":", col("band_idx"), col("band_key")).as("bk"),
+          col("doc_id"))
+      for ((cap, want) <- Seq(5 -> ((4L, 24L)), 10000 -> ((0L, 0L)))) {
+        val losers = Dedup.shardLoserIds(shardSh, shardB, "doc_id", pfx,
+          threshold = 0.5, maxBucket = cap)
+        losers.collect()
+        Metrics.drops(losers) shouldBe want
+      }
     }
   }
 
@@ -308,13 +317,14 @@ class SignatureStoreSpec extends SparkSpec {
       val s3 = (101L to 103L).map((_, same)).toDF("doc_id", "ph")
       val h3 = (111L to 113L).map((_, same)).toDF("doc_id", "ph")
       Dedup.absorbIntoImageSignatureStore(s3, "doc_id", "ph", ipfx)
-      Dedup.imagePairsAgainstStore(h3, "doc_id", "ph", ipfx,
-        maxBucket = 5).count() shouldBe 0L
       import graft.util.Metrics
-      Metrics.drops(Dedup.imageShardBucketCapReport(h3, "doc_id", "ph",
-        ipfx, maxBucket = 5)) shouldBe ((4L, 24L))
-      Dedup.imagePairsAgainstStore(h3, "doc_id", "ph", ipfx)
-        .count() shouldBe 12L // C(3,2) internal + 3×3 cross
+      val capped = Dedup.imagePairsAgainstStore(h3, "doc_id", "ph", ipfx,
+        maxBucket = 5)
+      capped.collect() shouldBe empty
+      Metrics.drops(capped) shouldBe ((4L, 24L))
+      val open = Dedup.imagePairsAgainstStore(h3, "doc_id", "ph", ipfx)
+      open.collect().length shouldBe 12 // C(3,2) internal + 3×3 cross
+      Metrics.drops(open) shouldBe ((0L, 0L))
     }
   }
 

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * (the viral-seed worst case — licence headers, cookie banners), so an
   * UNCAPPED pair join is quadratic in the corpus (n²/2 pairs per
   * boilerplate seed). The cap drops those seeds (recall-only,
-  * reported), keeping the join linear in the non-viral remainder.
+  * counted), keeping the join linear in the non-viral remainder.
   * Expectation to verify, not assume: uncapped time grows ~4× when the
   * corpus doubles; capped time stays ~flat. */
 object SubstringCapBench {
@@ -24,24 +24,24 @@ object SubstringCapBench {
       val uniq2 = (1 to 10).map(j => s"v${i}_$j").mkString(" ")
       (i.toLong, s"$uniq1 $boiler $uniq2")
     }.toDF("doc_id", "text").cache()
-    def time(fn: => org.apache.spark.sql.DataFrame): Double = {
+    // median of 3 runs, and the cap's (dropped groups, members) of
+    // the last; collect runs the frame's own plan, so its counters fill
+    def time(fn: => org.apache.spark.sql.DataFrame): (Double, (Long, Long)) = {
       val runs = (1 to 3).map { _ =>
+        val df = fn
         val t0 = System.nanoTime()
-        fn.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      runs(1) // median
+        df.collect()
+        ((System.nanoTime() - t0) / 1e9, graft.util.Metrics.drops(df))
+      }
+      (runs.map(_._1).sorted.apply(1), runs.last._2)
     }
     for (n <- Seq(1200, 4800)) {
       val df = corpus(n)
       df.count() // materialize the cache outside the timing
-      val capped = time(Dedup.dropDupSubstrings(df, "doc_id", "text",
-        minLen = 12, seedN = 8, maxOcc = 500))
-      val uncapped = time(Dedup.dropDupSubstrings(df, "doc_id", "text",
+      val (capped, (g, m)) = time(Dedup.dropDupSubstrings(df, "doc_id",
+        "text", minLen = 12, seedN = 8, maxOcc = 500))
+      val (uncapped, _) = time(Dedup.dropDupSubstrings(df, "doc_id", "text",
         minLen = 12, seedN = 8, maxOcc = 10 * n * n))
-      val (g, m) = graft.util.Metrics.drops(
-        Dedup.dupSubstringSeedCapReport(df, "doc_id", "text",
-          seedN = 8, maxOcc = 500))
       println(f"n=$n%5d  capped(maxOcc=500): $capped%7.3f s   " +
         f"uncapped: $uncapped%7.3f s   " +
         f"dropped: $g seeds / $m occurrences")

@@ -117,16 +117,26 @@ class SubstringStoreSpec extends SparkSpec {
 
   test("the maxOcc cap is COMBINED (store_n + shard_n), matching the " +
     "whole-corpus gate: over-cap seeds disable dedup (recall-only)") {
+    import graft.util.Metrics
     val text = "alpha beta gamma delta epsilon zeta"
     val store = Seq(1L -> text).toDF("doc_id", "text")
     val shard = Seq(10L -> text, 11L -> text).toDF("doc_id", "text")
     withStore(store) {
-      // every seed occurs 3× combined; cap 2 gates them all out
-      shardIds(Dedup.dedupSubstringShardAgainst(shard, "doc_id", "text",
-        pfx, minLen = 6, seedN = 3, maxOcc = 2)) shouldBe Set(10L, 11L)
+      def run(maxOcc: Int) = Dedup.dedupSubstringShardAgainst(shard,
+        "doc_id", "text", pfx, minLen = 6, seedN = 3, maxOcc = maxOcc)
+      // every seed occurs 3× combined; cap 2 gates them all out, and
+      // the cap counts the 4 seed hashes with their 3 occurrences each
+      val capped = run(2)
+      capped.collect().map(_.getAs[Long]("doc_id")).toSet shouldBe
+        Set(10L, 11L)
+      Metrics.drops(capped) shouldBe ((4L, 12L))
       // cap 3 admits them: both shard copies are later than doc 1
       Dedup.dedupSubstringShardAgainst(shard, "doc_id", "text",
         pfx, minLen = 6, seedN = 3, maxOcc = 3).count() shouldBe 0L
+      // at the default cap nothing is dropped
+      val open = run(1000)
+      open.collect() shouldBe empty
+      Metrics.drops(open) shouldBe ((0L, 0L))
     }
   }
 

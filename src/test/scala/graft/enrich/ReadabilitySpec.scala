@@ -46,7 +46,7 @@ class ReadabilitySpec extends SparkSpec {
         regexp_extract_all(lower(col("w")), lit("[aeiouy]+"), lit(0))),
       lit(1))
     val edge = Seq("", "b", "a", "AEIOU", "naïve", "Ärger", "x1y2",
-      "qu-eue", "ÿ", "crwth").toDF("w")
+      "qu-eue", "ÿ", "crwth", "İA", "Aİ", "İstanbul").toDF("w")
     val corpus = spark.read.parquet(s"$sf0001/documents.parquet")
       .select(explode(graft.enrich.CaptionStats.tokens(col("text")))
         .as("w"))

@@ -568,17 +568,19 @@ class AnnSpec extends SparkSpec {
     // a SAME vector in the OTHER cluster is untouched — dedup is
     // within-cluster by design (the paper's clusters localize the search)
     // maxCluster below every cluster size → no pairs → everything kept,
-    // and the recall-loss report records BOTH skipped clusters with
-    // their combined membership (reads the same assignment cache)
+    // and the cap counts BOTH skipped clusters with their combined
+    // membership
     import graft.util.Metrics
-    Ann.semDedup(d, "vec_id", "embedding", nCentroids = 2,
-      threshold = 0.9, maxCluster = 1).count() shouldBe 5L
+    val capped = Ann.semDedup(d, "vec_id", "embedding", nCentroids = 2,
+      threshold = 0.9, maxCluster = 1)
+    capped.collect().length shouldBe 5
     // the x-cluster (0,2,3) and the y-cluster (1,4)
-    Metrics.drops(Ann.semDedupClusterCapReport(d, "vec_id", "embedding",
-      nCentroids = 2, maxCluster = 1)) shouldBe ((2L, 5L))
+    Metrics.drops(capped) shouldBe ((2L, 5L))
     // an uncapped run loses nothing
-    Metrics.drops(Ann.semDedupClusterCapReport(d, "vec_id", "embedding",
-      nCentroids = 2)) shouldBe ((0L, 0L))
+    val open = Ann.semDedup(d, "vec_id", "embedding", nCentroids = 2,
+      threshold = 0.9)
+    open.collect().length shouldBe 3
+    Metrics.drops(open) shouldBe ((0L, 0L))
   }
 
   test("semanticDecontaminate: drops vectors near ANY benchmark vector, " +
