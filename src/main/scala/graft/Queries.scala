@@ -289,9 +289,13 @@ object Queries {
       ELSE 'NOUN' END"""
   }
 
-  /** syllables of one word (≥1): maximal [aeiouy]+ runs. */
+  /** syllables of one word (≥1): maximal [aeiouy]+ runs. DuckDB lowers
+    * 'İ' (U+0130, chr(304)) to a bare 'i' where the JVM gives 'i' plus
+    * a combining dot (U+0307), which splits a vowel run: "İA" is 2
+    * syllables in the engine. The replace spells the JVM's lowering. */
   private def syllSql(w: String): String =
-    s"greatest(len(regexp_extract_all(lower($w), '[aeiouy]+')), 1)"
+    s"greatest(len(regexp_extract_all(lower(replace($w, chr(304), " +
+      s"'i' || chr(775))), '[aeiouy]+')), 1)"
 
   /** dot product of two list exprs in double, fixed order. */
   private def dotSql(a: String, b: String): String =
@@ -1379,9 +1383,7 @@ object Queries {
     // INTEGER rank arithmetic (⌊3·(rank−1)/n⌋ over the (mean_bits, id)
     // total order), never interpolated boundary values — a last-ulp
     // boundary disagreement would flip every doc on it; both engines
-    // spell the identical row_number expression. At-scale knob:
-    // spark.graft.quantiles.approx swaps the per-source Window for a
-    // map-combined percentile_approx sketch + broadcast threshold.
+    // spell the identical row_number expression.
     QueryDef("t17_surprisal_buckets",
       (s, dir) => TextAnalysis.surprisalBuckets(
         t(s, dir, "documents"), "doc_id", "text", "source")
@@ -4148,7 +4150,7 @@ object Queries {
     // min/max envelopes on BOTH dimensions — what parquet row-group
     // pruning needs for 2-d range predicates. Pure integer bit
     // arithmetic, bit-identical in any engine; map-only here (the
-    // clustering itself is Layout.clusterByZ's range partition).
+    // clustering itself is a range partition + sort on the key).
     QueryDef("p10_zorder_key",
       (s, dir) => t(s, dir, "documents")
         .select(col("doc_id"), graft.analytics.Layout.zOrderKey(
@@ -4276,17 +4278,13 @@ object Queries {
         // from two driver threads (the writeSignatureStore pattern);
         // r22: Overlap.both settles both before proceeding
         graft.util.Overlap.both(s) {
-          t(s, dir, "lineitem").select(col("l_suppkey").as("suppkey"),
-              col("l_quantity"))
-            .write.mode("overwrite").option("path", s"$out/li_bucketed")
-            .bucketBy(8, "suppkey").sortBy("suppkey")
-            .format("parquet").saveAsTable("graft_li_bucketed")
+          graft.analytics.Layout.writeBucketed(t(s, dir, "lineitem")
+            .select(col("l_suppkey").as("suppkey"), col("l_quantity")),
+            "graft_li_bucketed", "suppkey", 8, s"$out/li_bucketed")
         } {
-          t(s, dir, "supplier").select(col("s_suppkey").as("suppkey"),
-              col("s_name"))
-            .write.mode("overwrite").option("path", s"$out/supp_bucketed")
-            .bucketBy(8, "suppkey").sortBy("suppkey")
-            .format("parquet").saveAsTable("graft_supp_bucketed")
+          graft.analytics.Layout.writeBucketed(t(s, dir, "supplier")
+            .select(col("s_suppkey").as("suppkey"), col("s_name")),
+            "graft_supp_bucketed", "suppkey", 8, s"$out/supp_bucketed")
         }
         s.table("graft_li_bucketed").hint("merge")
           .join(s.table("graft_supp_bucketed"), "suppkey")

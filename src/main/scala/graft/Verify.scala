@@ -8,11 +8,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    // pin EXACT quantiles: the oracle gate must never let the
-    // size-estimate auto-switch (Quantiles.AutoGkThresholdConf)
-    // silently trade the accuracy contract the DuckDB compare hashes
-    val spark = Harness.session(cpus,
-      "spark.graft.quantiles.autoGkThreshold" -> "0")
+    val spark = Harness.session(cpus)
     new java.io.File(outDir).mkdirs()
     Harness.selected().foreach { name =>
       try Harness.runQuery(spark, sfDir, name)(_.coalesce(1).write

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Physical-layout operators for the 100 TB design point (SCALE.md):
@@ -13,34 +13,13 @@ object Layout {
     * matching `HashPartitioning` from the bucket spec and plans a
     * sort-merge join without Exchange on either side. This is the
     * pre-partitioned co-located join the reference could never express
-    * (pandas has no layout concept). */
+    * (pandas has no layout concept). The table's files live at `path`. */
   def writeBucketed(df: DataFrame, table: String, key: String,
-                    buckets: Int): Unit =
-    df.write.mode("overwrite")
+                    buckets: Int, path: String): Unit =
+    df.write.mode("overwrite").option("path", path)
       .bucketBy(buckets, key).sortBy(key)
       .format("parquet")
       .saveAsTable(table)
-
-  /** Salted high-cardinality aggregation: two-level aggregate for skewed
-    * group keys. Level 1 aggregates on (key, salt) — hot keys split into
-    * `saltBuckets` partial groups spread over the cluster; level 2 merges
-    * the partials per key. Only sum/count-shaped aggregates are
-    * decomposable this way (associative merge). */
-  def saltedSumCount(df: DataFrame, key: String, valueCol: String,
-                     saltBuckets: Int): DataFrame = {
-    // spark_partition_id is stable under task recomputation (same
-    // lineage → same partition → same id), unlike
-    // monotonically_increasing_id-derived salts which can double-count
-    // rows when a map task is recomputed after a fetch failure
-    val salted = df.withColumn("__salt",
-      pmod(spark_partition_id(), lit(saltBuckets)))
-    salted.groupBy(col(key), col("__salt"))
-      .agg(sum(col(valueCol).cast("decimal(24,6)")).as("__psum"),
-        count(lit(1)).as("__pcnt"))
-      .groupBy(col(key))
-      .agg(sum(col("__psum")).cast("double").as(s"sum_$valueCol"),
-        sum(col("__pcnt")).as("n"))
-  }
 
   /** Salted skewed equi-join: the big side's rows get a deterministic
     * salt in [0, saltBuckets) from `hash(saltBy)` (a unique row id —
@@ -103,19 +82,6 @@ object Layout {
       shiftleft(shiftright(a.cast("long"), i).bitwiseAND(1L), 2 * i) +
         shiftleft(shiftright(b.cast("long"), i).bitwiseAND(1L), 2 * i + 1)
     }.reduce(_ + _)
-  }
-
-  /** Cluster a table for 2-d locality: global range partition on the
-    * z-key, rows sorted by it within each partition. Written as parquet,
-    * each file covers a compact z-range ⇒ tight min/max on BOTH source
-    * columns per row group. */
-  def clusterByZ(df: DataFrame, colA: String, colB: String,
-                 partitions: Int, bits: Int = 16): DataFrame = {
-    val z = zOrderKey(col(colA), col(colB), bits)
-    df.withColumn("__z", z)
-      .repartitionByRange(partitions, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
   }
 
   /** WEIGHT-BALANCED shard assignment — the training-shard writer's

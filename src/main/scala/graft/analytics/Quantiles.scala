@@ -18,8 +18,8 @@ import graft.util.CacheScope
   * Here there is ONE exact selection, [[groupedQuantilesWithExtras]]: a
   * bracket-and-select keyed by group, three map-side-combined codegen
   * aggregates and no wide shuffle of the values. Global quantiles of
-  * several columns (A2–A5 column stats, [[globalQuantiles]]) are its
-  * special case keyed by column: [[melt]] first turns the columns into
+  * several columns (A2–A5 column stats, [[quantiles]]) are its special
+  * case keyed by column: [[melt]] first turns the columns into
   * (`__k`, `__v`) rows. When the selection gives up it has two
   * fallbacks, each with identical results at the old cost: global
   * callers run [[globalQuantilesBySort]] (range partition + local sort),
@@ -48,17 +48,16 @@ object Quantiles {
   private val MaxKeys = 64
 
   /** `cols` as (`__k` = the column's index in `cols`, `__v` = CAST(c AS
-    * DOUBLE)) rows, one per non-null value, with the `keep` columns
-    * carried along. The key is the index, not the name: every pass
-    * hashes and compares it per value, and an int costs less there than
-    * a string (a2_a5's three passes at sf0.1 on local[4]: 1.41 s keyed
-    * by name, 0.93 s by index). The stack Generator sits over the scan
-    * (never over an Aggregate), so nothing re-executes. */
-  private def melt(df: DataFrame, cols: Seq[String],
-                   keep: String*): DataFrame =
-    df.selectExpr(keep :+ (s"stack(${cols.length}, " +
+    * DOUBLE)) rows, one per non-null value. The key is the index, not
+    * the name: every pass hashes and compares it per value, and an int
+    * costs less there than a string (a2_a5's three passes at sf0.1 on
+    * local[4]: 1.41 s keyed by name, 0.93 s by index). The stack
+    * Generator sits over the scan (never over an Aggregate), so nothing
+    * re-executes. */
+  private def melt(df: DataFrame, cols: Seq[String]): DataFrame =
+    df.selectExpr(s"stack(${cols.length}, " +
       cols.zipWithIndex.map { case (c, i) => s"$i, CAST(`$c` AS DOUBLE)" }
-        .mkString(", ") + ") AS (__k, __v)"): _*)
+        .mkString(", ") + ") AS (__k, __v)")
       .where(col("__v").isNotNull)
 
   /** The 0-based ranks [[interpolate]] reads for `ps` over `n` values. */
@@ -78,19 +77,17 @@ object Quantiles {
     else (1.0 - frac) * at(lo) + frac * at(math.min(lo + 1, n - 1))
   }
 
-  /** Exact quantiles of several numeric columns at several fractions.
-    * Returns (colName, p) -> value; columns with zero non-null rows are
-    * absent from the map. */
-  def globalQuantiles(df: DataFrame, cols: Seq[String],
-                      ps: Seq[Double]): Map[(String, Double), Double] =
-    exact(df, cols, ps, Nil)._1
-
-  /** The exact backend: the grouped selection over the melted columns,
-    * keyed by `__k`, and [[globalQuantilesBySort]] when it gives up.
-    * Also returns the pass-A row of every column with a non-null value,
-    * which carries `extras` (aggregates over `__v`) by alias. */
-  private def exact(df: DataFrame, cols: Seq[String], ps: Seq[Double],
-                    extras: Seq[Column])
+  /** Exact quantiles of several numeric columns at several fractions:
+    * the grouped selection over the melted columns, keyed by `__k`, and
+    * [[globalQuantilesBySort]] when it gives up. Returns (colName, p) ->
+    * value, where columns with zero non-null rows are absent, and per
+    * column with a non-null value the pass-A row: caller-supplied
+    * `extras` (aggregates over the melted `__v`, each column as DOUBLE)
+    * by alias, then `__qn/__qnan/__qmn/__qmx`. The extras ride in the
+    * pass-A scan, one aggregate job instead of two — what
+    * Summary.columnStats uses for its min/max/mean. */
+  def quantiles(df: DataFrame, cols: Seq[String], ps: Seq[Double],
+                extras: Seq[Column] = Nil)
   : (Map[(String, Double), Double], Map[String, Row]) = {
     require(cols.nonEmpty && ps.nonEmpty, "need at least one column and p")
     val (rowsA, selected) = groupedQuantilesWithExtras(melt(df, cols),
@@ -317,233 +314,6 @@ object Quantiles {
         (for (k <- live; p <- ps) yield (cols(k), p) ->
           interpolate(counts(k), p)(gi => valueAt((k, gi)))).toMap
       }
-    }
-  }
-
-  /** At-scale variant: Spark's `percentile_approx` — a Greenwald–Khanna
-    * sketch that is MERGEABLE (map-side partial agg, constant memory per
-    * task, one tiny final merge), vs the exact path's three passes over
-    * every value. Rank error is bounded by n/`accuracy`, so with the 10k default
-    * the reported value sits within ±0.01% of the true rank. Same return
-    * shape as [[globalQuantiles]]; columns with zero non-null rows are
-    * absent. This is the swap SCALE.md documents for 100 TB — the exact
-    * path stays the default for oracle parity. */
-  def globalQuantilesApprox(df: DataFrame, cols: Seq[String],
-                            ps: Seq[Double], accuracy: Int = 10000)
-  : Map[(String, Double), Double] = {
-    require(cols.nonEmpty && ps.nonEmpty, "need at least one column and p")
-    val aggs = cols.map { c =>
-      percentile_approx(col(c).cast("double"),
-        array(ps.map(lit): _*), lit(accuracy)).as(c)
-    }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    (for {
-      (c, i) <- cols.zipWithIndex if !row.isNullAt(i)
-      (p, j) <- ps.zipWithIndex
-    } yield (c, p) -> row.getSeq[Double](i)(j)).toMap
-  }
-
-  /** Sketch backend: rank queries from the mergeable bottom-k quantile
-    * sketch ([[Sketches.quantileSketch]]) — the third rung of the
-    * at-scale ladder. Exact ([[globalQuantiles]]) reads every value in
-    * three aggregate passes; [[globalQuantilesApprox]] is
-    * Greenwald–Khanna inside one job; THIS form is for when quantile
-    * state must OUTLIVE the job — per-shard sketches persist, absorb
-    * per crawl ([[Sketches.quantileSketchMerge]]), and answer later
-    * rank queries without re-reading anything, the m19/KMV store
-    * discipline. Answers are `quantile_disc`-style (an element of the
-    * data) within DKW rank error sqrt(ln(2/δ)/(2k)) — k = 8192 gives
-    * ±2.1% rank at 99.9% confidence, uniformly over ALL fractions at
-    * once (what a profiling pass actually wants).
-    *
-    * `keyCols` must identify rows uniquely (the uniform-sampling
-    * contract); they are JSON-encoded as a struct (collision-free:
-    * values containing any separator are escaped, and nulls are kept
-    * as explicit JSON nulls, so ('a', null) ≠ ('a,null') ≠ (null,
-    * 'a')) and hashed. Columns with zero non-null rows are absent
-    * from the map, matching the other backends. */
-  def globalQuantilesSketch(df: DataFrame, keyCols: Seq[String],
-                            cols: Seq[String], ps: Seq[Double],
-                            k: Int = 8192)
-  : Map[(String, Double), Double] = {
-    require(keyCols.nonEmpty && cols.nonEmpty && ps.nonEmpty,
-      "need at least one key column, value column, and fraction")
-    val melted = melt(df.withColumn("__key",
-      to_json(struct(keyCols.map(col): _*),
-        Map("ignoreNullFields" -> "false"))), cols, "__key")
-    val sk = Sketches.quantileSketch(melted, "__k", "__key", "__v", k)
-    Sketches.sketchQuantiles(sk, ps).collect()
-      .map(r => (cols(r.getInt(0)), r.getDouble(1)) -> r.getDouble(2))
-      .toMap
-  }
-
-  /** The ONE parser of `spark.graft.quantiles.approx`, shared by every
-    * consumer of the key (this dispatcher and
-    * [[graft.text.TextAnalysis.surprisalBuckets]]): "exact" | "gk" |
-    * "sketch". Booleans are case-insensitive (Spark's own boolean
-    * confs accept `True`); anything else fails loud naming the key
-    * and the accepted values — a typo'd backend must never silently
-    * fall back to a different accuracy contract, and a second call
-    * site doing its own `.toBoolean` is how one consumer crashes on
-    * the value another accepts. */
-  def approxMode(conf: org.apache.spark.sql.RuntimeConfig): String =
-    conf.get("spark.graft.quantiles.approx", "false") match {
-      case s if s.equalsIgnoreCase("sketch") => "sketch"
-      case s if s.equalsIgnoreCase("true") => "gk"
-      case s if s.equalsIgnoreCase("false") => "exact"
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.quantiles.approx=$other is not recognized — " +
-          "accepted values: false (exact, default), true " +
-          "(Greenwald-Khanna in-job), sketch (mergeable bottom-k " +
-          "sketch; needs spark.graft.quantiles.sketchKey)")
-    }
-
-  private lazy val log =
-    org.slf4j.LoggerFactory.getLogger("graft.quantiles")
-
-  /** Auto-switch ceiling for the EXACT path, in estimated melted
-    * VALUES (rows × requested columns): above it the dispatcher
-    * swaps to Greenwald–Khanna with a loud log instead of paying the
-    * exact path's passes over every value (and, on its sort fallback,
-    * an all-values shuffle) on a corpus nobody wants it on. `0` (or negative)
-    * disables the switch entirely — what [[graft.Verify]] pins, so
-    * the oracle gate can NEVER silently change accuracy contracts no
-    * matter what the size estimate says. Estimates come from
-    * Catalyst (`optimizedPlan.stats` on the pruned projection:
-    * rowCount when CBO has one, else sizeInBytes over an 8-byte/value
-    * floor) — order-of-magnitude is all the switch needs. A frame
-    * whose size Catalyst does NOT know (the Long.MaxValue
-    * `defaultSizeInBytes` sentinel — e.g. RDD-backed frames) never
-    * switches: changing the accuracy contract on unknown data would
-    * be a guess, and a 100-row local frame is the common case there. */
-  val AutoGkThresholdConf = "spark.graft.quantiles.autoGkThreshold"
-  val DefaultAutoGkThreshold: Long = 2_000_000_000L
-
-  /** Which backend the last [[quantiles]] call dispatched to ON THIS
-    * THREAD — "exact" | "gk" | "gk-auto" | "sketch". A telemetry/test
-    * seam: the auto-switch must be PROVABLY firing (SummarySpec), and
-    * a log line is not assertable without appender surgery.
-    * Thread-local so concurrent jobs can't clobber each other's
-    * reading. */
-  private val _lastDispatch = new ThreadLocal[String] {
-    override def initialValue(): String = ""
-  }
-  private[analytics] def lastDispatch: String = _lastDispatch.get
-  private def dispatched(which: String): Unit = _lastDispatch.set(which)
-
-  /** Estimated melted value count of `cols` in `df`, from Catalyst's
-    * planning-time stats on the pruned projection (no job runs).
-    * Column names are backtick-quoted like [[melt]]'s stack expression,
-    * so a dotted column name dispatches the same way it computes.
-    *
-    * Returns None when any LEAF of the plan reports the UNKNOWN
-    * sentinel (`spark.sql.defaultSizeInBytes`, Long.MaxValue by
-    * default — what stats-less relations like LogicalRDD return): an
-    * accuracy contract must never silently change on data whose size
-    * Catalyst simply doesn't know. The sentinel test is at the
-    * LEAVES, not the projected top — Project scaling multiplies the
-    * child estimate by outputRowSize/childRowSize, so a projected
-    * sentinel sails under any top-level Long.MaxValue check while
-    * still being pure fiction. Conversely a HUGE estimate computed
-    * from KNOWN leaves (a join-product blow-up) is exactly when the
-    * memory-ceiling switch matters most, so it estimates normally. */
-  private def estimatedValueCount(df: DataFrame,
-                                  cols: Seq[String]): Option[Long] = {
-    val plan = df.select(cols.map(c => col(s"`$c`")): _*)
-      .queryExecution.optimizedPlan
-    val sentinel = BigInt(df.sparkSession.conf
-      .get("spark.sql.defaultSizeInBytes", Long.MaxValue.toString).toLong)
-    if (plan.collectLeaves().exists(_.stats.sizeInBytes >= sentinel))
-      return None
-    val stats = plan.stats
-    // clamp the CBO BigInt BEFORE narrowing: a rowCount above
-    // Long.MaxValue would wrap negative and silently disable the
-    // switch exactly on the hugest inputs
-    val rows = stats.rowCount
-      .map(_.min(BigInt(Long.MaxValue)).toLong).getOrElse(
-      (stats.sizeInBytes / math.max(1, 8L * cols.length))
-        .min(Long.MaxValue).toLong)
-    Some(math.min(Long.MaxValue / math.max(1, cols.length), rows) *
-      cols.length)
-  }
-
-  /** Flag-dispatched entry point used by [[graft.analytics.Summary]]:
-    * exact by default (bit-for-bit oracle parity);
-    * `spark.graft.quantiles.approx=true` (optionally
-    * `spark.graft.quantiles.accuracy=N`) runs Greenwald–Khanna
-    * in-job; `spark.graft.quantiles.approx=sketch` (with
-    * `spark.graft.quantiles.sketchKey=<row-unique col[,col...]>`,
-    * optionally `spark.graft.quantiles.sketchK=N`) runs the mergeable
-    * bottom-k sketch whose state can persist across jobs. */
-  def quantiles(df: DataFrame, cols: Seq[String],
-                ps: Seq[Double]): Map[(String, Double), Double] =
-    quantilesWithExtras(df, cols, ps, Nil)._1
-
-  /** [[quantiles]] plus caller-supplied `extras`: aggregates over the
-    * melted `__v` (each requested column as DOUBLE), computed per column
-    * and returned as column name -> row, fields by alias. Every backend
-    * returns this one shape, and a column with no non-null value has no
-    * row. The exact path fuses the extras into its pass-A scan (one
-    * aggregate job instead of two — what Summary.columnStats uses for its
-    * min/max/mean), and its rows also carry pass A's `__qn/__qnan/__qmn/
-    * __qmx`; the gk, sketch and gk-auto backends run one `groupBy(__k)`
-    * aggregate of their own. */
-  def quantilesWithExtras(df: DataFrame, cols: Seq[String],
-                          ps: Seq[Double], extras: Seq[Column])
-  : (Map[(String, Double), Double], Map[String, Row]) = {
-    require(cols.nonEmpty && ps.nonEmpty, "need at least one column and p")
-    val conf = df.sparkSession.conf
-    def extrasByName(): Map[String, Row] =
-      if (extras.isEmpty) Map.empty
-      else melt(df, cols).groupBy("__k").agg(extras.head, extras.tail: _*)
-        .collect().map(r => cols(r.getInt(0)) -> r).toMap
-    approxMode(conf) match {
-      case "sketch" =>
-        val keyConf = conf.get("spark.graft.quantiles.sketchKey", "")
-        require(keyConf.trim.nonEmpty,
-          "spark.graft.quantiles.approx=sketch needs spark.graft." +
-            "quantiles.sketchKey=<row-unique col[,col...]> — the " +
-            "sketch samples rows by key hash and cannot pick a key " +
-            "itself (a non-unique fallback would silently bias the " +
-            "sample)")
-        dispatched("sketch")
-        (globalQuantilesSketch(df,
-          keyConf.split(",").toSeq.map(_.trim).filter(_.nonEmpty),
-          cols, ps,
-          conf.get("spark.graft.quantiles.sketchK", "8192").toInt),
-          extrasByName())
-      case "gk" =>
-        dispatched("gk")
-        (globalQuantilesApprox(df, cols, ps,
-          conf.get("spark.graft.quantiles.accuracy", "10000").toInt),
-          extrasByName())
-      case _ =>
-        // an EXPLICITLY-set approx=false is a caller pinning exactness
-        // (a different knob than autoGkThreshold=0, but the same
-        // intent) — the auto-switch must not override it; only the
-        // unset default is auto-switch-eligible
-        val exactPinned = conf.getOption("spark.graft.quantiles.approx")
-          .exists(_.equalsIgnoreCase("false"))
-        val thr = conf.get(AutoGkThresholdConf,
-          DefaultAutoGkThreshold.toString).toLong
-        val est =
-          if (thr > 0 && !exactPinned) estimatedValueCount(df, cols)
-          else None
-        if (est.exists(_ > thr)) {
-          val accuracy =
-            conf.get("spark.graft.quantiles.accuracy", "10000").toInt
-          log.warn(s"Quantiles.quantiles: estimated value count " +
-            s"${est.get} (${cols.length} col(s)) exceeds " +
-            s"$AutoGkThresholdConf=$thr — AUTO-SWITCHING from the " +
-            "exact distributed selection to percentile_approx " +
-            s"(Greenwald-Khanna, rank error ≤ n/$accuracy). Set " +
-            s"$AutoGkThresholdConf=0 to force exact at any size.")
-          dispatched("gk-auto")
-          (globalQuantilesApprox(df, cols, ps, accuracy), extrasByName())
-        } else {
-          dispatched("exact")
-          exact(df, cols, ps, extras)
-        }
     }
   }
 

@@ -38,17 +38,6 @@ object Sketches {
     toks.groupBy(cmsBucket(col(tokCol), row, hexChars).as("__b"))
       .agg(count(lit(1)).as(s"__c$row"))
 
-  /** Merge two sketch rows of the same row index and width: counters
-    * add per bucket. This is the defining CMS property — the sketch of a
-    * union is the elementwise sum of the shard sketches (proved in
-    * SketchesSpec), so a 1000-executor build is embarrassingly-parallel
-    * partial sketches plus one kilobyte-sized merge, and sketches of
-    * yesterday's corpus and today's delta combine without re-reading
-    * either. */
-  def mergeRow(a: DataFrame, b: DataFrame, row: Int): DataFrame =
-    a.unionByName(b).groupBy("__b")
-      .agg(sum(col(s"__c$row")).as(s"__c$row"))
-
   /** Heavy hitters by CMS estimate: whitespace-tokenize `textCol`, build
     * a depth×16^hexChars sketch, estimate every distinct token, return
     * the top `k` by (estimate desc, token asc) with the true count
@@ -391,7 +380,7 @@ object Sketches {
   // sample's empirical CDF tracks the true CDF UNIFORMLY:
   // sup_x |F_k(x) − F(x)| ≤ sqrt(ln(2/δ)/(2k)) w.p. ≥ 1−δ — every
   // quantile simultaneously within that rank error (k = 8192 → ±2.1%
-  // at 99.9%, matching Quantiles.scala's default and SCALE.md).
+  // at 99.9%, the figure SCALE.md uses).
   // KLL reaches the same ε in O((1/ε)·log²) space — a √
   // factor less — but at k ≤ 64Ki this sketch is kilobytes per source
   // either way, which is irrelevant beside the 100 TB scan it
@@ -408,7 +397,7 @@ object Sketches {
     * `keyCol` must be row-unique within each source (the uniform-
     * sampling contract — a duplicated key under-weights its rows);
     * null values are excluded (quantiles ignore nulls, matching
-    * [[Quantiles.globalQuantiles]]). Hash ties (2⁻⁶⁰-rare cross-key
+    * [[Quantiles.quantiles]]). Hash ties (2⁻⁶⁰-rare cross-key
     * collisions) break on the value so the retained SET is
     * deterministic. */
   def quantileSketch(df: DataFrame, srcCol: String, keyCol: String,
@@ -465,7 +454,7 @@ object Sketches {
   /** Persist a per-source quantile sketch as a bucketed catalog table —
     * the m19/d25 store discipline applied to RANK state, closing the
     * loop the sketch's own motivation opens ("quantile state that
-    * outlives the job", [[Quantiles.globalQuantilesSketch]]): the
+    * outlives the job"): the
     * sketch materializes ONCE (≤ sources × k rows), each later crawl
     * absorbs via [[absorbIntoQuantileStore]] with one pass over the
     * DELTA plus a sketch-space merge, and the accumulated corpus is

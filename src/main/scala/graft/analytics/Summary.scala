@@ -36,14 +36,12 @@ object Summary {
     * Emitted long-form (stat matrix), mirroring the notebook's compare table
     * shape (36 rows of dataset×backend×stat, ipynb:17229-17263).
     *
-    * All four come from [[Quantiles.quantilesWithExtras]] over the
-    * columns melted to (column, `__v` = CAST(c AS DOUBLE)): the median
-    * from its exact selection keyed by column (memory bounded by
-    * partition size; the mergeable `percentile_approx` sketch when
-    * `spark.graft.quantiles.approx=true`, the documented 100 TB swap),
-    * and min/max/mean as per-key aggregates over `__v` fused into its
-    * first scan. The cast is monotone and ExactSum casts to double
-    * before anything else, so these equal `min(c)`, `max(c)` and the
+    * All four come from [[Quantiles.quantiles]] over the columns melted
+    * to (column, `__v` = CAST(c AS DOUBLE)): the median from its exact
+    * selection keyed by column (memory bounded by partition size), and
+    * min/max/mean as per-key aggregates over `__v` fused into its first
+    * scan. The cast is monotone and ExactSum casts to double before
+    * anything else, so these equal `min(c)`, `max(c)` and the
     * exact mean of `c` cast to double. The k stat rows are assembled on
     * the driver. (A `stack` Generator over an Aggregate re-executes the
     * aggregate once per emitted row — measured 4× the scan cost at
@@ -51,7 +49,7 @@ object Summary {
     * no non-null value gets nulls, as SQL's min and `quantile_cont` do. */
   def columnStats(df: DataFrame, cols: Seq[String]): DataFrame = {
     val v = col("__v")
-    val (medians, extras) = Quantiles.quantilesWithExtras(df, cols,
+    val (medians, extras) = Quantiles.quantiles(df, cols,
       Seq(0.5), Seq(min(v).as("__min"), max(v).as("__max"),
         exactMean("__v").as("__mean")))
     val rows = cols.sorted.map { c =>

@@ -49,30 +49,4 @@ object Readability {
     lit(0.1579) * pct + lit(0.0496) * (wOf(numTok) / wOf(numSent)) +
       when(pct > 5, lit(3.6365)).otherwise(lit(0.0))
   }
-
-  /** Spacy-tokenized counts of a text column. */
-  private def stats(c: Column): Column =
-    graft.functions.CaptionStatsKernel(c, MetadataBackend.Spacy)
-
-  /** Flesch Reading Ease = 206.835 − 1.015·(W/S) − 84.6·(Syl/W). */
-  def fleschReadingEase(c: Column): Column = {
-    val k = stats(c)
-    fleschReadingEaseOf(k("syllables"), CaptionStats.sized(k("num_tok")),
-      CaptionStats.sized(k("num_sent")))
-  }
-
-  /** Flesch–Kincaid Grade Level = 0.39·(W/S) + 11.8·(Syl/W) − 15.59. */
-  def fleschKincaidGrade(c: Column): Column = {
-    val k = stats(c)
-    fleschKincaidGradeOf(k("syllables"), CaptionStats.sized(k("num_tok")),
-      CaptionStats.sized(k("num_sent")))
-  }
-
-  /** Dale–Chall = 0.1579·pctDifficult + 0.0496·(W/S), +3.6365 if
-    * pctDifficult > 5. */
-  def daleChall(c: Column): Column = {
-    val k = stats(c)
-    daleChallOf(CaptionStats.sized(k("difficult_words")),
-      CaptionStats.sized(k("num_tok")), CaptionStats.sized(k("num_sent")))
-  }
 }

@@ -40,12 +40,4 @@ object Snapshots {
           .as("status"))
       .filter(col("status").isNotNull)
   }
-
-  /** The one-line summary of [[diff]]: (status, n_docs), for the
-    * monitoring dashboard / CI gate ("this re-curation changed 0.3%
-    * of the corpus"). */
-  def diffSummary(v1: DataFrame, v2: DataFrame, idCol: String,
-                  textCol: String): DataFrame =
-    diff(v1, v2, idCol, textCol)
-      .groupBy("status").agg(count(lit(1)).as("n_docs"))
 }

@@ -26,9 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Why native: the metrics are PER-DOC — no cross-document aggregation
   * exists anywhere in the definition — so distributing them as an
-  * explode + (doc, n, gram) groupBy (the pre-r14 formulation, kept as
-  * the parity witness in
-  * [[graft.text.TextAnalysis.gopherRepetitionStatsDistributed]]) pays
+  * explode + (doc, n, gram) groupBy (the pre-r14 formulation, kept in
+  * test scope as the parity witness `GopherRepetitionDistributed`) pays
   * a corpus-wide 9×-token-volume shuffle for work each row can do
   * alone. A hash-map counter makes the in-row form O(Σn · L) time and
   * O(L) transient space per doc — the earlier in-row HOF attempt was

@@ -26,10 +26,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * lambda HOFs (no doGenCode) — four separate stats each re-ran the
   * quadratic filter. One compiled two-pass count-then-sum is O(S) and
   * sits inside whole-stage codegen. Parity is triple-pinned: the HOF
-  * formulation survives in
-  * [[graft.text.TextAnalysis.gopherRepetitionStatsDistributed]] (the
-  * spec-compared witness), the hand-computed fixture spec, and the
-  * DuckDB oracle.
+  * formulation survives in test scope as the spec-compared witness
+  * (`GopherRepetitionDistributed`), next to the hand-computed fixture
+  * spec and the DuckDB oracle.
   *
   * Null sentence elements never occur (the sentence splitter filters
   * empties); defensively they are skipped entirely. */

@@ -134,20 +134,11 @@ object Clustering {
     * so inertia needs no re-join; the update explodes each vector to
     * (cluster, dim, value) and aggregates — map-side combine reduces the
     * shuffle to k × dim partials per task. Empty clusters keep their
-    * previous centroid. Returns (assignments, inertia-per-iteration);
+    * previous centroid. Returns (centroids, inertia-per-iteration);
     * inertia is monotonically non-increasing — the standard Lloyd
-    * convergence witness. */
-  def kmeans(vecs: DataFrame, idCol: String, vecCol: String, k: Int,
-             iters: Int): (DataFrame, Seq[Double]) = {
-    val (cents, inertias) = kmeansCentroids(vecs, idCol, vecCol, k, iters)
-    (assignLiteral(vecs, idCol, vecCol, cents), inertias)
-  }
-
-  /** The Lloyd loop itself, returning the trained centroids (with the
-    * per-iteration inertias) instead of assignments — the form PQ
-    * sub-space training ([[graft.similarity.Ann.pqTrain]]) composes.
-    * Same init (k lowest-id vectors), same update, same empty-cluster
-    * rule as [[kmeans]], which now delegates here. */
+    * convergence witness. PQ sub-space training
+    * ([[graft.similarity.Ann.pqTrain]]) composes it; [[assignLiteral]]
+    * turns the centroids into assignments. */
   def kmeansCentroids(vecs: DataFrame, idCol: String, vecCol: String,
                       k: Int, iters: Int)
       : (Seq[(Long, Seq[Double])], Seq[Double]) = {

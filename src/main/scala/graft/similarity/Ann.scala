@@ -1065,7 +1065,7 @@ object Ann {
     * = centroid c of sub-space j). Init per sub-space is the k
     * lowest-id vectors' slices — i.e. training STARTS at the fixed
     * data-vector codebook and can only reduce quantization error
-    * (Lloyd monotonicity, spec-pinned via [[pqQuantError]]).
+    * (Lloyd monotonicity, spec-pinned in AnnSpec).
     *
     * Scale shape: m independent kmeans runs, each the k×dim-partials
     * shuffle documented on Clustering.kmeans; the returned frame is
@@ -1092,24 +1092,5 @@ object Ann {
     val s = corpus.sparkSession
     import s.implicits._
     cents.toDF("cid", "ce")
-  }
-
-  /** Total PQ quantization error Σ_v Σ_j min_c ‖v_j − c_j‖² — the
-    * codebook-quality metric (lower = tighter codes = better ADC
-    * ranking). Same broadcast-codebook scan shape as [[pqTopK]]'s
-    * encode; one double per corpus, for diagnostics and specs. */
-  def pqQuantError(corpus: DataFrame, idCol: String, vecCol: String,
-                   codebook: DataFrame, cidCol: String, cvecCol: String,
-                   m: Int, subDim: Int): Double = {
-    val cb = subRows(codebook.select(col(cidCol).as("__cid"),
-      col(cvecCol).as("__cv")), Seq("__cid"), "__cv", m, subDim, "cv")
-    val vs = subRows(corpus.select(col(idCol), col(vecCol)),
-      Seq(idCol), vecCol, m, subDim, "vv")
-    vs.join(broadcast(cb), Seq("sub"))
-      .groupBy(col(idCol), col("sub"))
-      .agg(min(struct(
-        graft.ml.Clustering.sqDist(col("vv"), col("cv")).as("d2"),
-        col("__cid").as("cid"))).as("s"))
-      .agg(sum(col("s.d2"))).first().getDouble(0)
   }
 }

@@ -207,30 +207,6 @@ object TextAnalysis {
       .limit(k)
   }
 
-  /** Convenience: append all text-analysis columns. */
-  /** Per-document flagged-token stats against a WORDLIST — the
-    * blocklist pass of corpus hygiene (toxicity / NSFW / spam keyword
-    * lists à la the C4 "bad words" filter): (idCol, n_toks, n_flagged,
-    * flagged_frac) where tokens are lowercased whitespace words and a
-    * token is flagged iff it equals a (lowercased) blocklist entry.
-    * Map-only + one per-doc aggregate; the blocklist folds into the
-    * plan as a literal array (wordlists are thousands of entries —
-    * well inside literal comfort; beyond ~10⁵ switch to a broadcast
-    * join on the token). Docs with zero tokens are absent (no rows to
-    * aggregate), matching the oracle's GROUP BY. */
-  def flaggedTokenStats(df: DataFrame, idCol: String, textCol: String,
-                        blocklist: Seq[String]): DataFrame = {
-    val bl = array(blocklist.map(w => lit(w.toLowerCase)): _*)
-    val toks = CaptionStats.tokens(lower(col(textCol)))
-    df.select(col(idCol),
-        size(toks).cast("long").as("n_toks"),
-        size(filter(toks, t => array_contains(bl, t))).cast("long")
-          .as("n_flagged"))
-      .filter(col("n_toks") > 0)
-      .withColumn("flagged_frac",
-        col("n_flagged").cast("double") / col("n_toks").cast("double"))
-  }
-
   /** Keep documents whose flagged-token fraction is ≤
     * `maxPerMille`/1000 — the threshold compares EXACT integers
     * (`n_flagged·1000 ≤ maxPerMille·n_toks`), so the cut never moves
@@ -360,43 +336,20 @@ object TextAnalysis {
     *
     * Scale shape: the surprisal frame is t11's (one vocabulary-sized
     * shuffle); the exact ranking is a per-source Window — fine for
-    * thousands of sources, a funnel for very few giant ones. At 100 TB
-    * set `spark.graft.quantiles.approx=true`: tercile boundary VALUES
-    * come from a map-combined `percentile_approx` sketch per source
-    * (no Window anywhere) and docs bucket by a broadcast threshold
-    * compare — approximate only within the sketch's error at the two
-    * boundaries. */
+    * thousands of sources, a funnel for very few giant ones. */
   def surprisalBuckets(df: DataFrame, idCol: String, textCol: String,
                        srcCol: String): DataFrame = {
     val scored = unigramSurprisal(df, idCol, textCol)
       .join(df.select(col(idCol), col(srcCol)), Seq(idCol))
-    val conf = df.sparkSession.conf
-    // shared parser (Quantiles.approxMode) so a value one consumer
-    // accepts can never crash the other; this path has no per-source
-    // keyed-sample backend, so "sketch" also takes the approximate
-    // percentile_approx thresholds (the user asked for approximate
-    // quantiles globally; GK per source is this operator's form)
-    if (graft.analytics.Quantiles.approxMode(conf) != "exact") {
-      val acc = conf.get("spark.graft.quantiles.accuracy", "10000").toInt
-      val b = scored.groupBy(col(srcCol))
-        .agg(percentile_approx(col("mean_bits"),
-          array(lit(1.0 / 3), lit(2.0 / 3)), lit(acc)).as("__bs"))
-      scored.join(broadcast(b), Seq(srcCol))
-        .select(col(idCol), col(srcCol), col("n_toks"), col("mean_bits"),
-          when(col("mean_bits") <= element_at(col("__bs"), 1), "head")
-            .when(col("mean_bits") <= element_at(col("__bs"), 2), "middle")
-            .otherwise("tail").as("bucket"))
-    } else {
-      val w = Window.partitionBy(col(srcCol))
-        .orderBy(col("mean_bits"), col(idCol))
-      val wAll = Window.partitionBy(col(srcCol))
-      scored.withColumn("__rn", row_number().over(w))
-        .withColumn("__n", count(lit(1)).over(wAll))
-        .select(col(idCol), col(srcCol), col("n_toks"), col("mean_bits"),
-          element_at(array(lit("head"), lit("middle"), lit("tail")),
-            expr("CAST(((__rn - 1) * 3) div __n AS INT)") + 1)
-            .as("bucket"))
-    }
+    val w = Window.partitionBy(col(srcCol))
+      .orderBy(col("mean_bits"), col(idCol))
+    val wAll = Window.partitionBy(col(srcCol))
+    scored.withColumn("__rn", row_number().over(w))
+      .withColumn("__n", count(lit(1)).over(wAll))
+      .select(col(idCol), col(srcCol), col("n_toks"), col("mean_bits"),
+        element_at(array(lit("head"), lit("middle"), lit("tail")),
+          expr("CAST(((__rn - 1) * 3) div __n AS INT)") + 1)
+          .as("bucket"))
   }
 
   /** Persisted unigram LM STORE — the incremental complement of
@@ -664,9 +617,8 @@ object TextAnalysis {
     * O(Σn·L) per doc; Gopher's own 100k-word ceiling bounds the map).
     * Zero shuffle, zero join — at 100 TB this fuses into the scan
     * stage. The pre-r14 distributed explode + (doc, n, gram) groupBy
-    * formulation is kept as [[gopherRepetitionStatsDistributed]], the
-    * parity witness and the fallback for corpora with pathological
-    * unbounded documents. */
+    * formulation survives in test scope as the parity witness
+    * (`GopherRepetitionDistributed`). */
   def gopherRepetitionStats(df: DataFrame, idCol: String,
                             textCol: String): DataFrame = {
     val id = col(idCol)
@@ -701,7 +653,7 @@ object TextAnalysis {
   /** The keep verdict over the NAMED coverage/sentence columns of the
     * stats frame — one threshold definition shared by every
     * formulation so they can never drift. */
-  private def repetitionKeepOver: Column =
+  private[text] def repetitionKeepOver: Column =
     (topGramRules.map { case (n, m, k) =>
         lit(m) * col(s"top${n}_chars") <= lit(k) * col("tc") } ++
       dupGramRules.map { case (n, m, k) =>
@@ -709,77 +661,6 @@ object TextAnalysis {
       .reduce(_ && _) &&
       lit(10L) * col("n_dup_sents") <= lit(3L) * col("n_sents") &&
       lit(5L) * col("dup_sent_chars") <= col("sum_sent_chars")
-
-  /** The pre-r14 DISTRIBUTED formulation of [[gopherRepetitionStats]]
-    * — identical output frame, computed as an explode + (doc, n, gram)
-    * groupBy instead of the in-row native expression. Kept as the
-    * parity witness (spec-pinned equal on the corpus fixture) and as
-    * the fallback for corpora whose documents are long enough that a
-    * per-row gram hash map is unreasonable (the in-row form is O(L)
-    * transient space per doc; this one trades that for a 9×-token
-    * shuffle that AQE can spill). */
-  def gopherRepetitionStatsDistributed(df: DataFrame, idCol: String,
-                                       textCol: String): DataFrame = {
-    val id = col(idCol)
-    val c = col(textCol)
-    val sents = CaptionStats.sentences(c)
-    val isDup = (s: Column) => size(filter(sents, x => x === s)) > 1
-    val dupSents = filter(sents, s => isDup(s))
-    val sentStats = df.select(
-      id,
-      length(c).cast("long").as("tc"),
-      CaptionStats.tokens(lower(c)).as("__toks"),
-      size(sents).cast("long").as("n_sents"),
-      size(dupSents).cast("long").as("n_dup_sents"),
-      aggregate(sents, lit(0L), (a, s) => a + length(s)).as("sum_sent_chars"),
-      aggregate(dupSents, lit(0L), (a, s) => a + length(s))
-        .as("dup_sent_chars"))
-
-    // Gram emission is TWO chained Generates over plain built-ins
-    // (explode n → explode start positions → slice + concat_ws), NOT a
-    // higher-order transform/flatten: lambda HOFs have no doGenCode, so
-    // a flatten-of-transforms emits grams through interpreted eval —
-    // measured 20× slower than this codegen'd pipeline at sf0.1.
-    val grams = sentStats
-      .select(id, col("__toks"),
-        explode(array((2 to 10).map(lit): _*)).as("__n"))
-      .filter(size(col("__toks")) >= col("__n"))
-      .select(id, col("__n"), col("__toks"),
-        explode(sequence(lit(1), size(col("__toks")) - col("__n") + 1))
-          .as("__i"))
-      .select(id, col("__n"),
-        concat_ws(" ", slice(col("__toks"), col("__i"), col("__n")))
-          .as("__gram"))
-    val perN = grams
-      .groupBy(id, col("__n"), col("__gram"))
-      .agg(count(lit(1)).as("__c"))
-      .groupBy(id, col("__n"))
-      .agg(
-        min_by((col("__c") * length(col("__gram"))).cast("long"),
-          struct((-col("__c")).as("nc"), col("__gram"))).as("__topcov"),
-        sum(when(col("__c") > 1, col("__c") * length(col("__gram")))
-          .otherwise(0L)).cast("long").as("__dupcov"))
-    val pivotCols = Seq(2, 3, 4).map(n =>
-      max(when(col("__n") === n, col("__topcov"))).as(s"top${n}_chars")) ++
-      (5 to 10).map(n =>
-        max(when(col("__n") === n, col("__dupcov"))).as(s"dup${n}_chars"))
-    val perDoc = perN.groupBy(id).agg(pivotCols.head, pivotCols.tail: _*)
-
-    val joined = sentStats.drop("__toks")
-      .join(perDoc, Seq(idCol), "left")
-    val covCols = Seq("top2_chars", "top3_chars", "top4_chars") ++
-      (5 to 10).map(n => s"dup${n}_chars")
-    val filled = covCols.foldLeft(joined)((d, cn) =>
-      d.withColumn(cn, coalesce(col(cn), lit(0L))))
-    val keep = (topGramRules.map { case (n, m, k) =>
-        lit(m) * col(s"top${n}_chars") <= lit(k) * col("tc") } ++
-      dupGramRules.map { case (n, m, k) =>
-        lit(m) * col(s"dup${n}_chars") <= lit(k) * col("tc") })
-      .reduce(_ && _) &&
-      lit(10L) * col("n_dup_sents") <= lit(3L) * col("n_sents") &&
-      lit(5L) * col("dup_sent_chars") <= col("sum_sent_chars")
-    filled.withColumn("keep", keep.cast("long"))
-  }
 
   /** The paper's per-n thresholds as (n, numerator m, denominator k):
     * keep iff m·coverage_chars ≤ k·doc_chars. ONE definition shared by
@@ -912,14 +793,5 @@ object TextAnalysis {
         sum(col("cnt_s") * (bitsC - bitsS).cast("long")).as("div_bits"))
       .withColumn("mean_div_bits",
         col("div_bits").cast("double") / col("n_toks").cast("double"))
-  }
-
-  def analyze(df: DataFrame, textCol: String): DataFrame = {
-    val c = col(textCol)
-    df.withColumn("pred_lang", langId(c))
-      .withColumn("n_tokens", tokenCount(c))
-      .withColumn("n_subwords", subwordCount(c))
-      .withColumn("quality", qualityScore(c))
-      .withColumn("fingerprint", fingerprint(c))
   }
 }

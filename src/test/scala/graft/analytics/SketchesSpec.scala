@@ -49,9 +49,10 @@ class SketchesSpec extends SparkSpec {
     val Array(a, b) = toks.randomSplit(Array(0.5, 0.5), seed = 42)
     val whole = Sketches.cmsRow(toks, "tok", 1, hexChars = 2)
       .orderBy("__b").collect().map(r => (r.getString(0), r.getLong(1)))
-    val merged = Sketches.mergeRow(
-      Sketches.cmsRow(a, "tok", 1, hexChars = 2),
-      Sketches.cmsRow(b, "tok", 1, hexChars = 2), 1)
+    // the merge: counters add per bucket
+    val merged = Sketches.cmsRow(a, "tok", 1, hexChars = 2)
+      .unionByName(Sketches.cmsRow(b, "tok", 1, hexChars = 2))
+      .groupBy("__b").agg(sum(col("__c1")).as("__c1"))
       .orderBy("__b").collect().map(r => (r.getString(0), r.getLong(1)))
     merged shouldBe whole
   }
@@ -351,75 +352,6 @@ class SketchesSpec extends SparkSpec {
       withClue(s"p=$p est=$v rank=[$lo,$hi] eps=$eps: ") {
         (p >= lo - eps && p <= hi + eps) shouldBe true
       }
-    }
-  }
-
-  test("Quantiles dispatch: approx=sketch routes through the mergeable " +
-    "sketch (keyed by the conf's sketchKey), lands within the DKW band " +
-    "of the exact answer, and an absent sketchKey fails loud") {
-    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
-    val exact = Quantiles.quantiles(docs, Seq("n_chars"), Seq(0.5))
-    spark.conf.set("spark.graft.quantiles.approx", "sketch")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Quantiles.quantiles(docs, Seq("n_chars"), Seq(0.5))
-      }
-      e.getMessage should include("sketchKey")
-      spark.conf.set("spark.graft.quantiles.sketchKey", "doc_id")
-      spark.conf.set("spark.graft.quantiles.sketchK", "256")
-      val skq = Quantiles.quantiles(docs, Seq("n_chars"), Seq(0.5))
-      // rank-space check: the sketch's median sits within the DKW band
-      // of the true median's rank
-      val vals = docs.select(col("n_chars").cast("double"))
-        .collect().map(_.getDouble(0)).sorted
-      val n = vals.length.toDouble
-      val v = skq(("n_chars", 0.5))
-      val eps = math.sqrt(math.log(2.0 / 0.001) / (2.0 * 256))
-      val lo = vals.count(_ < v) / n
-      val hi = vals.count(_ <= v) / n
-      (0.5 >= lo - eps && 0.5 <= hi + eps) shouldBe true
-      // and the exact path still answers exactly (dispatch untouched):
-      // quantile_cont interpolation at position 0.5·(n−1)
-      val pos = (n - 1) * 0.5
-      val flo = pos.toInt
-      val frac = pos - flo
-      val expected =
-        if (frac == 0.0) vals(flo)
-        else (1.0 - frac) * vals(flo) + frac * vals(flo + 1)
-      exact(("n_chars", 0.5)) shouldBe expected +- 1e-9
-    } finally {
-      spark.conf.unset("spark.graft.quantiles.approx")
-      spark.conf.unset("spark.graft.quantiles.sketchKey")
-      spark.conf.unset("spark.graft.quantiles.sketchK")
-    }
-  }
-
-  test("Quantiles dispatch: a typo'd approx value fails loud, naming " +
-    "the conf key and the accepted values") {
-    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
-    spark.conf.set("spark.graft.quantiles.approx", "gk")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Quantiles.quantiles(docs, Seq("n_chars"), Seq(0.5))
-      }
-      e.getMessage should include("spark.graft.quantiles.approx")
-      e.getMessage should include("sketch")
-      // case-variant booleans stay accepted (Spark's own boolean confs
-      // accept 'True'): routes to GK, no throw
-      spark.conf.set("spark.graft.quantiles.approx", "True")
-      Quantiles.quantiles(docs, Seq("n_chars"), Seq(0.5))
-        .contains(("n_chars", 0.5)) shouldBe true
-      // and the second consumer of the key shares the parser: with the
-      // sketch backend on globally, surprisalBuckets takes its
-      // approximate-thresholds path instead of crashing on .toBoolean
-      spark.conf.set("spark.graft.quantiles.approx", "sketch")
-      spark.conf.set("spark.graft.quantiles.sketchKey", "doc_id")
-      graft.text.TextAnalysis.surprisalBuckets(
-        docs.limit(50), "doc_id", "text", "source")
-        .collect().length should be > 0
-    } finally {
-      spark.conf.unset("spark.graft.quantiles.approx")
-      spark.conf.unset("spark.graft.quantiles.sketchKey")
     }
   }
 

@@ -25,23 +25,23 @@ class SummarySpec extends SparkSpec {
     // real data: two lineitem columns at sf0.001
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     val cols = Seq("l_quantity", "l_extendedprice")
-    Quantiles.globalQuantiles(li, cols, ps) shouldBe
+    Quantiles.quantiles(li, cols, ps)._1 shouldBe
       Quantiles.globalQuantilesBySort(li, cols, ps)
     // heavy ties at the median: 90% of values equal — the band
     // collapses duplicates, ranks stay exact
     val ties = (Seq.fill(900)(5.0) ++ (1 to 100).map(_.toDouble))
       .toDF("x")
-    Quantiles.globalQuantiles(ties, Seq("x"), ps) shouldBe
+    Quantiles.quantiles(ties, Seq("x"), ps)._1 shouldBe
       Quantiles.globalQuantilesBySort(ties, Seq("x"), ps)
     // a NaN forces the fallback (GK's NaN ordering ≠ sort order), and
     // the result still matches the sort path run on the same frame
     val withNan = (Seq(Double.NaN) ++ (1 to 99).map(_.toDouble)).toDF("x")
-    Quantiles.globalQuantiles(withNan, Seq("x"), Seq(0.5)) shouldBe
+    Quantiles.quantiles(withNan, Seq("x"), Seq(0.5))._1 shouldBe
       Quantiles.globalQuantilesBySort(withNan, Seq("x"), Seq(0.5))
     // band-cap overflow forces the fallback: cap of 1 row cannot hold
     // any band, results must still be exact
     spark.conf.set(Quantiles.MaxBandRowsConf, "1")
-    try Quantiles.globalQuantiles(ties, Seq("x"), ps) shouldBe
+    try Quantiles.quantiles(ties, Seq("x"), ps)._1 shouldBe
       Quantiles.globalQuantilesBySort(ties, Seq("x"), ps)
     finally spark.conf.unset(Quantiles.MaxBandRowsConf)
   }
@@ -172,7 +172,7 @@ class SummarySpec extends SparkSpec {
       "__v", Seq("__name"), Seq(0.5), Nil, maxRows = cols.length)
     selected shouldBe None
     rowsA.map(_.getString(0)).sorted shouldBe cols.sorted
-    Quantiles.globalQuantiles(df, cols, Seq(0.5)) shouldBe
+    Quantiles.quantiles(df, cols, Seq(0.5))._1 shouldBe
       Quantiles.globalQuantilesBySort(df, cols, Seq(0.5))
     bits(stats(df, cols)) shouldBe bits(columnStatsReference(df, cols))
   }
@@ -214,98 +214,6 @@ class SummarySpec extends SparkSpec {
     s1 shouldBe s2
     s1.length shouldBe 50
     s1.distinct.length shouldBe 50
-  }
-
-  test("percentile_approx variant tracks exact quantiles within ε at sf0.1") {
-    // the documented 100 TB swap (SCALE.md): mergeable GK sketch vs the
-    // exact range-partition selection. The sketch's guarantee is on RANK
-    // (error ≤ n/accuracy), not value — on quantized data (l_quantity is
-    // integral) one rank step is a whole unit — so the sound check is a
-    // rank band: approx(p) must lie between exact(p−δ) and exact(p+δ)
-    // with δ = 10× the sketch's 1/accuracy bound
-    val df = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
-    val cols = Seq("l_quantity", "l_extendedprice")
-    val ps = Seq(0.25, 0.5, 0.75)
-    val delta = 0.001 // 10 × 1/accuracy(=10000)
-    val band = ps.flatMap(p => Seq(p - delta, p, p + delta)).distinct
-    val exact = Quantiles.globalQuantiles(df, cols, band)
-    val approx = Quantiles.globalQuantilesApprox(df, cols, ps)
-    approx.keySet shouldBe
-      (for (c <- cols; p <- ps) yield (c, p)).toSet
-    for (c <- cols; p <- ps) {
-      val av = approx((c, p))
-      val lo = exact((c, p - delta)); val hi = exact((c, p + delta))
-      assert(lo <= av && av <= hi,
-        s"($c,$p): approx=$av outside exact rank band [$lo, $hi]")
-    }
-  }
-
-  test("spark.graft.quantiles.approx flag routes the dispatcher") {
-    val df = Seq.tabulate(1000)(i => i.toDouble).toDF("x")
-    val exact = Quantiles.quantiles(df, Seq("x"), Seq(0.5))(("x", 0.5))
-    spark.conf.set("spark.graft.quantiles.approx", "true")
-    try {
-      val approx = Quantiles.quantiles(df, Seq("x"), Seq(0.5))(("x", 0.5))
-      // 1000 distinct values ≪ accuracy=10k → the sketch is exact here;
-      // percentile_approx returns the lower straddling value (no
-      // interpolation), so allow one rank step
-      math.abs(approx - exact) should be <= 1.0
-    } finally spark.conf.unset("spark.graft.quantiles.approx")
-  }
-
-  test("auto-GK memory-ceiling switch: fires above the estimated-value " +
-    "threshold with correct results, stays exact below it, and 0 " +
-    "disables it at any size (the Verify pin)") {
-    val df = Seq.tabulate(1000)(i => i.toDouble).toDF("x")
-    val exact = Quantiles.quantiles(df, Seq("x"), Seq(0.5))(("x", 0.5))
-    Quantiles.lastDispatch shouldBe "exact" // default threshold: 2e9 ≫ 1k
-    spark.conf.set(Quantiles.AutoGkThresholdConf, "10")
-    try {
-      // 1000 estimated values > 10 → the dispatcher must swap to GK
-      // loudly instead of paying the exact sort on an oversized column
-      val auto = Quantiles.quantiles(df, Seq("x"), Seq(0.5))(("x", 0.5))
-      Quantiles.lastDispatch shouldBe "gk-auto"
-      math.abs(auto - exact) should be <= 1.0 // one rank step (no interp)
-      // 0 disables: exact at ANY size — what graft.Verify pins so the
-      // oracle gate can never silently change accuracy contracts
-      spark.conf.set(Quantiles.AutoGkThresholdConf, "0")
-      Quantiles.quantiles(df, Seq("x"), Seq(0.5))(("x", 0.5)) shouldBe exact
-      Quantiles.lastDispatch shouldBe "exact"
-      // an EXPLICIT approx=true is honored as plain gk, not gk-auto
-      spark.conf.set("spark.graft.quantiles.approx", "true")
-      Quantiles.quantiles(df, Seq("x"), Seq(0.5))
-      Quantiles.lastDispatch shouldBe "gk"
-    } finally {
-      spark.conf.unset(Quantiles.AutoGkThresholdConf)
-      spark.conf.unset("spark.graft.quantiles.approx")
-    }
-  }
-
-  test("auto-GK never fires on a frame whose size Catalyst doesn't " +
-    "know: RDD-backed leaves report the defaultSizeInBytes sentinel " +
-    "and must stay exact even with a tiny threshold") {
-    // LogicalRDD's computeStats is spark.sql.defaultSizeInBytes
-    // (Long.MaxValue) — and Project SCALING would shrink a top-level
-    // estimate below MaxValue whenever cols ⊂ schema, so this pins the
-    // leaf-level sentinel test with exactly that shape: 3 columns,
-    // quantiles on 1
-    val rows = spark.sparkContext.parallelize(
-      Seq.tabulate(100)(i => org.apache.spark.sql.Row(
-        i.toDouble, i.toLong, s"r$i")))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("x",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("y",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("s",
-        org.apache.spark.sql.types.StringType)))
-    val rdd = spark.createDataFrame(rows, schema)
-    spark.conf.set(Quantiles.AutoGkThresholdConf, "1")
-    try {
-      val m = Quantiles.quantiles(rdd, Seq("x"), Seq(0.5))(("x", 0.5))
-      Quantiles.lastDispatch shouldBe "exact" // unknown size: no switch
-      m shouldBe 49.5 // and the exact interpolated median
-    } finally spark.conf.unset(Quantiles.AutoGkThresholdConf)
   }
 
   test("weighted sample: exactly n rows when no weight exceeds total/n, " +

@@ -20,11 +20,8 @@ class ReadabilitySpec extends SparkSpec {
   }
 
   test("FK/DC formulas on a known sentence") {
-    val df = Seq("The cat sat.").toDF("caption")
-    val r = df.select(
-      Readability.fleschReadingEase(col("caption")),
-      Readability.fleschKincaidGrade(col("caption")),
-      Readability.daleChall(col("caption"))).head()
+    val r = CaptionStats.enrich(Seq("The cat sat.").toDF("caption"),
+      "caption").select("fk_re_score", "fk_gl_score", "dc_score").head()
     // W=3, S=1, Syl=3, difficult=0
     r.getDouble(0) shouldBe (206.835 - 1.015 * 3 - 84.6 * 1) +- 1e-9
     r.getDouble(1) shouldBe (0.39 * 3 + 11.8 * 1 - 15.59) +- 1e-9
@@ -33,8 +30,8 @@ class ReadabilitySpec extends SparkSpec {
 
   test("Dale-Chall adds 3.6365 when >5% difficult words") {
     // "university" = u-i-e-i-y → 5 runs ≥ 3 → difficult; 1/2 = 50% > 5%
-    val r = Seq("university rocks").toDF("caption")
-      .select(Readability.daleChall(col("caption"))).head()
+    val r = CaptionStats.enrich(Seq("university rocks").toDF("caption"),
+      "caption").select("dc_score").head()
     val pct = 100.0 * (1.0 / 2.0)
     r.getDouble(0) shouldBe (0.1579 * pct + 0.0496 * 2 + 3.6365) +- 1e-9
   }

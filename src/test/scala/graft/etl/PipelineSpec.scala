@@ -173,9 +173,6 @@ class PipelineSpec extends SparkSpec {
     val d = Snapshots.diff(v1, v2, "doc_id", "text")
       .orderBy("doc_id").collect().map(r => r.getLong(0) -> r.getString(1))
     d shouldBe Array(1L -> "removed", 3L -> "changed", 4L -> "added")
-    val sm = Snapshots.diffSummary(v1, v2, "doc_id", "text")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    sm shouldBe Map("removed" -> 1L, "changed" -> 1L, "added" -> 1L)
     // the full-outer join must shuffle digests, never document payloads
     val join = Snapshots.diff(v1, v2, "doc_id", "text")
       .queryExecution.optimizedPlan.collect {

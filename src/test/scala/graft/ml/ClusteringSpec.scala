@@ -39,8 +39,9 @@ class ClusteringSpec extends SparkSpec {
   test("kmeans: inertia is monotonically non-increasing (Lloyd witness)") {
     val vecs = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val (assignments, inertias) =
-      Clustering.kmeans(vecs, "id", "vec", k = 4, iters = 3)
+    val (cents, inertias) =
+      Clustering.kmeansCentroids(vecs, "id", "vec", k = 4, iters = 3)
+    val assignments = Clustering.assignLiteral(vecs, "id", "vec", cents)
     inertias.length shouldBe 3
     inertias.sliding(2).foreach { case Seq(a, b) => b should be <= a }
     // every vector gets exactly one cluster in [0, k)
@@ -50,7 +51,9 @@ class ClusteringSpec extends SparkSpec {
   }
 
   test("kmeans separates two obvious blobs") {
-    val (assign, _) = Clustering.kmeans(blobs, "id", "vec", k = 2, iters = 3)
+    val (cents, _) =
+      Clustering.kmeansCentroids(blobs, "id", "vec", k = 2, iters = 3)
+    val assign = Clustering.assignLiteral(blobs, "id", "vec", cents)
     val byId = assign.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     byId(0L) shouldBe byId(2L)
     byId(0L) shouldBe byId(4L)

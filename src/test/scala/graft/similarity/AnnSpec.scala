@@ -641,11 +641,21 @@ class AnnSpec extends SparkSpec {
     trained.count() shouldBe 16L
     trained.select(org.apache.spark.sql.functions.size(col("ce")))
       .distinct().collect().map(_.getInt(0)).toSeq shouldBe Seq(64)
-    val before = Ann.pqQuantError(emb, "vec_id", "embedding",
-      fixed, "cid", "ce", m = 4, subDim = 16)
-    val after = Ann.pqQuantError(emb, "vec_id", "embedding",
-      trained, "cid", "ce", m = 4, subDim = 16)
-    after should be < before // Lloyd monotonicity from the same init
+    // total quantization error Σ_v Σ_j min_c ‖v_j − c_j‖², on the driver
+    def vecs(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.select(col(c).cast("array<double>")).collect()
+        .map(_.getSeq[Double](0).toArray)
+    val corpus = vecs(emb, "embedding")
+    def quantError(codebook: org.apache.spark.sql.DataFrame): Double = {
+      val cents = vecs(codebook, "ce")
+      corpus.map { v =>
+        (0 until 4).map { j =>
+          cents.map(c => (j * 16 until (j + 1) * 16)
+            .map(i => (v(i) - c(i)) * (v(i) - c(i))).sum).min
+        }.sum
+      }.sum
+    }
+    quantError(trained) should be < quantError(fixed) // Lloyd monotone
   }
 
   test("JL projection: a one-hot input reads out exactly its scaled " +

@@ -29,9 +29,9 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("quality score components in [0,1], quarters only") {
-    val scores = TextAnalysis.analyze(
-      spark.read.parquet(s"$sf0001/documents.parquet"), "text")
-      .select("quality").collect().map(_.getDouble(0))
+    val scores = spark.read.parquet(s"$sf0001/documents.parquet")
+      .select(TextAnalysis.qualityScore(col("text")))
+      .collect().map(_.getDouble(0))
     all(scores) should (be >= 0.0 and be <= 1.0)
     scores.foreach(s => (s * 4).isWhole shouldBe true)
   }
@@ -131,15 +131,14 @@ class TextAnalysisSpec extends SparkSpec {
       (3L, "clean text with nothing wrong"),
       (4L, "   ")                              // zero tokens → kept
     ).toDF("doc_id", "text")
-    val stats = TextAnalysis.flaggedTokenStats(d, "doc_id", "text",
-      Seq("BAD")).orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    stats shouldBe Array((1L, 10L, 2L), (2L, 10L, 1L), (3L, 5L, 0L))
-    // threshold exactly at 100‰: doc 2 (exactly at) kept, doc 1 dropped
-    TextAnalysis.dropFlagged(d, "doc_id", "text", Seq("BAD"),
-      maxPerMille = 100L)
-      .select("doc_id").collect().map(_.getLong(0)).sorted shouldBe
-      Array(2L, 3L, 4L)
+    def kept(maxPerMille: Long): Seq[Long] =
+      TextAnalysis.dropFlagged(d, "doc_id", "text", Seq("BAD"), maxPerMille)
+        .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    // doc 1 flags 2 of 10 (BAD and bad), doc 2 flags 1 of 10: exactly
+    // at 100‰ doc 2 stays, one below it goes; 200‰ keeps doc 1 too
+    kept(100L) shouldBe Seq(2L, 3L, 4L)
+    kept(99L) shouldBe Seq(3L, 4L)
+    kept(200L) shouldBe Seq(1L, 2L, 3L, 4L)
   }
 
   test("c4LineFilters: full rule set — word minimum, terminal " +
@@ -373,8 +372,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("surprisalBuckets: each source splits into rank thirds (sizes " +
-    "differ ≤1), scores order head ≤ middle ≤ tail; approx knob keeps " +
-    "the ordering with no Window in the plan") {
+    "differ ≤1) and scores order head ≤ middle ≤ tail") {
     val d = spark.read.parquet(s"$sf0001/documents.parquet")
     val r = TextAnalysis.surprisalBuckets(d, "doc_id", "text", "source")
     val rows = r.collect()
@@ -388,19 +386,6 @@ class TextAnalysisSpec extends SparkSpec {
       scores("head").max should be <= scores("middle").min + 1e-12
       scores("middle").max should be <= scores("tail").min + 1e-12
     }
-    spark.conf.set("spark.graft.quantiles.approx", "true")
-    try {
-      val ra = TextAnalysis.surprisalBuckets(d, "doc_id", "text", "source")
-      ra.queryExecution.executedPlan.toString should not include "Window"
-      val ga = ra.collect().groupBy(_.getAs[String]("source"))
-      ga.values.foreach { g =>
-        def scores(b: String) = g.filter(_.getAs[String]("bucket") == b)
-          .map(_.getAs[Double]("mean_bits"))
-        for (Seq(lo, hi) <- Seq("head", "middle", "tail").sliding(2)
-             if scores(lo).nonEmpty && scores(hi).nonEmpty)
-          scores(lo).max should be <= scores(hi).min + 1e-12
-      }
-    } finally spark.conf.set("spark.graft.quantiles.approx", "false")
   }
 
   test("gopherRepetitionKeep (in-row streaming form) ≡ the DISTRIBUTED " +
@@ -413,8 +398,7 @@ class TextAnalysisSpec extends SparkSpec {
     val corpus = spark.read.parquet(s"$sf0001/documents.parquet")
       .select("doc_id", "text")
     for (d <- Seq(hand, corpus)) {
-      val dist = TextAnalysis
-        .gopherRepetitionStatsDistributed(d, "doc_id", "text")
+      val dist = GopherRepetitionDistributed.stats(d, "doc_id", "text")
         .select(col("doc_id"), col("keep")).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       val inRow = d.select(col("doc_id"),
@@ -430,8 +414,7 @@ class TextAnalysisSpec extends SparkSpec {
       .select("doc_id", "text")
     val native = TextAnalysis.gopherRepetitionStats(d, "doc_id", "text")
       .orderBy("doc_id").collect().map(_.toSeq)
-    val dist = TextAnalysis
-      .gopherRepetitionStatsDistributed(d, "doc_id", "text")
+    val dist = GopherRepetitionDistributed.stats(d, "doc_id", "text")
       .orderBy("doc_id").collect().map(_.toSeq)
     native shouldBe dist
   }

@@ -16,11 +16,6 @@ class ConfKeysSpec extends AnyFunSuite with Matchers {
 
   test("the spark.graft.* conf keys are exactly the pinned set") {
     named(""""(spark\.graft\.[A-Za-z0-9_.]*)"""".r) shouldBe Set(
-      "spark.graft.quantiles.approx",
-      "spark.graft.quantiles.accuracy",
-      "spark.graft.quantiles.sketchKey",
-      "spark.graft.quantiles.sketchK",
-      "spark.graft.quantiles.autoGkThreshold",
       "spark.graft.quantiles.maxBandRows",
       "spark.graft.store.leaseTtlMs",
       "spark.graft.benchPrebuiltStores")
